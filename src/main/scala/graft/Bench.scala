@@ -61,8 +61,7 @@ object Bench {
       case other => (1, other)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build("graft-bench", s"local[$cpus]")
+    val spark = GraftSession.build("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     locally { // untimed warm-up: scan/agg/join/window/sort codegen
       import org.apache.spark.sql.functions._

@@ -8,8 +8,14 @@ import org.apache.spark.sql.SparkSession
   * point a user of the reference library starts from. */
 object GraftSession {
 
+  /** The default master: `local[n]` with n from `SPARK_GRAFT_CPUS` when
+    * it is set, else one thread per available processor. */
+  def defaultMaster(env: Map[String, String] = sys.env,
+                    processors: Int = Runtime.getRuntime.availableProcessors): String =
+    s"local[${env.getOrElse("SPARK_GRAFT_CPUS", processors.toString)}]"
+
   def build(appName: String = "graft",
-            master: String = s"local[${Runtime.getRuntime.availableProcessors}]",
+            master: String = defaultMaster(),
             shufflePartitions: Option[Int] = None): SparkSession = {
     val cores = master match {
       case m if m.startsWith("local[") && m.endsWith("]") =>

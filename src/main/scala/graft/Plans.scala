@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Prints formatted physical plans for representative queries — the
   * plan-quality audit loop (pushdown, pruning, broadcast, codegen). */
 object Plans {
@@ -7,9 +6,7 @@ object Plans {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q01_pricing_summary", "q03_shipping_priority", "q06_revenue_forecast")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.build("graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"========== $n ==========")

@@ -88,11 +88,6 @@ object DbCopy {
     else src.filter(col(pk) > lit(maxRow.get(0)))
   }
 
-  /** Per-table row counts on both sides (`db_copy/main.py:184-190`) —
-    * one job per side per table, metadata-only on parquet. */
-  def countBoth(src: DataFrame, trg: DataFrame): (Long, Long) =
-    (src.count(), trg.count())
-
   /** Outcome of one applied copy step — the reference's per-table
     * `new/upd/ign` + sync-delete counters (`db_copy/main.py:333-345,362`). */
   case class ApplyResult(inserted: Long, updated: Long, deleted: Long)

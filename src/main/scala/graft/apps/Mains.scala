@@ -17,15 +17,8 @@ object Mains {
     if (!keepSessionForTests) spark.stop()
 
   private[apps] def session(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]").appName(name)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.GraftSession.build(name)
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExtensions.registerAll(s)
     s
   }
 }

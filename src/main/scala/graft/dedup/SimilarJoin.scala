@@ -1,8 +1,9 @@
 package graft.dedup
 
-import graft.sim.Similarity
-import org.apache.spark.sql.DataFrame
+import graft.sim.{AutoBlock, CellIndex, CellSearch, Similarity}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Which candidate-generation family a [[SimilarJoin.similarJoin]] call
   * uses. Every method is bucketed (never all-pairs): candidates share a
@@ -132,8 +133,9 @@ object SimilarJoin {
         embeddingPairs(df, idCol, contentCol, blockCol, minCos,
           cacheSignatures, maxBucket)
       case SimilarityMethod.EmbeddingCosine(minCos, None, cells, iters, idx) =>
-        autoEmbeddingPairs(df, idCol, contentCol, minCos, cells, iters,
-          cacheSignatures, maxBucket, idx)
+        val (base, assigned, verified) = autoEmbeddingPlan(df, idCol,
+          contentCol, minCos, cells, iters, cacheSignatures, maxBucket, idx)
+        materialized(verified, cacheSignatures, assigned.toSeq :+ base)
     }
 
   /** Two-sided (A vs B) similarity join — the INCREMENTAL-curation
@@ -198,8 +200,10 @@ object SimilarJoin {
         embeddingPairsAgainst(newDf, corpusDf, idCol, contentCol, blockCol,
           minCos, cacheSignatures, maxBucket)
       case SimilarityMethod.EmbeddingCosine(minCos, None, cells, iters, idx) =>
-        autoEmbeddingPairsAgainst(newDf, corpusDf, idCol, contentCol, minCos,
-          cells, iters, cacheSignatures, maxBucket, idx)
+        val (caches, verified) = autoEmbeddingPlanAgainst(newDf, corpusDf,
+          idCol, contentCol, minCos, cells, iters, cacheSignatures,
+          maxBucket, idx)
+        materialized(verified, cacheSignatures, caches)
     }
   }
 
@@ -228,33 +232,119 @@ object SimilarJoin {
                              blockCol: String, minCos: Double,
                              cacheSignatures: Boolean,
                              maxBucket: Int): DataFrame = {
-    val normed0 = df.select(col(blockCol).as("blk"), col(idCol).as("id"),
-        col(vecCol).as("v"), Similarity.norm(col(vecCol)).as("nrm"))
-      .filter(Similarity.finiteNorm(col("nrm"))) // NaN/Inf-cosine guard
-    val normed = if (cacheSignatures)
-      normed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else normed0
+    val normed = persistIf(cacheSignatures)(
+      blockNormed(df, idCol, vecCol, blockCol))
     // a block IS the bucket here: n members ⇒ n(n-1)/2 dot products
     val capped = Dedup.dropHotBuckets(normed, Seq("blk"),
       maxBucket, "similarJoin(EmbeddingCosine)")
-    val l = capped.select(col("blk"), col("id").as("id_a"),
-      col("v").as("v_a"), col("nrm").as("n_a"))
-    val r = capped.select(col("blk"), col("id").as("id_b"),
-      col("v").as("v_b"), col("nrm").as("n_b"))
-    val verified = l.join(r, Seq("blk"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
+    val verified = scored(side(capped, col("blk"), "a")
+      .join(side(capped, col("blk"), "b"), Seq("blk"))
+      .filter(col("id_a") < col("id_b")), minCos)
+    materialized(verified, cacheSignatures, Seq(normed))
+  }
+
+  /** `(blk, id, v, nrm)` for the caller-blocked forms — norms once per
+    * vector, NaN/Inf-cosine rows dropped. */
+  private def blockNormed(df: DataFrame, idCol: String, vecCol: String,
+                          blockCol: String): DataFrame =
+    df.select(col(blockCol).as("blk"), col(idCol).as("id"),
+        col(vecCol).as("v"), Similarity.norm(col(vecCol)).as("nrm"))
+      .filter(Similarity.finiteNorm(col("nrm")))
+
+  /** One side of a pair join: `key` plus `id`/`v`/`nrm` suffixed `x`. */
+  private def side(df: DataFrame, key: Column, x: String): DataFrame =
+    df.select(key, col("id").as(s"id_$x"), col("v").as(s"v_$x"),
+      col("nrm").as(s"n_$x"))
+
+  /** Candidate pairs → `(id_a, id_b, score)`: the cosine off the
+    * precomputed norms, rounded to 6dp, kept at `>= minCos`, ordered. */
+  private def scored(pairs: DataFrame, minCos: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
         round(Similarity.dot(col("v_a"), col("v_b"))
           / (col("n_a") * col("n_b")), 6).as("score"))
       .filter(col("score") >= minCos)
       .orderBy(col("id_a"), col("id_b"))
-    if (!cacheSignatures) verified
+
+  private def persistIf(cache: Boolean)(df: DataFrame): DataFrame =
+    if (cache) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+
+  /** With caching on, the result persisted and counted before `caches`
+    * (the inputs it was computed from) are released. */
+  private def materialized(verified: DataFrame, cache: Boolean,
+                           caches: Seq[DataFrame]): DataFrame =
+    if (!cache) verified
     else {
-      val out = verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // materialize before releasing the vector cache
-      normed.unpersist()
+      val out = verified.persist(StorageLevel.MEMORY_AND_DISK)
+      out.count() // materialize before releasing the input caches
+      caches.foreach(_.unpersist())
       out
     }
+
+  /** `(id, v, nrm, cell, ang)`: each vector's nearest cell and the angle
+    * to its centroid — the radius statistic. */
+  private def assigned(base: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    base
+      .withColumn("_nc", AutoBlock.nearestCellStruct(cents, col("v"), col("nrm")))
+      .select(col("id"), col("v"), col("nrm"),
+        col("_nc.cell").as("cell"), col("_nc.ang").as("ang"))
+
+  /** The angular threshold of `minCos`. The verify filter keeps
+    * round(score, 6) >= minCos, which admits true cosines down to
+    * minCos - 5e-7 (the round-half-up band); the angular bound must
+    * cover THAT threshold, not minCos itself, or a pair in the rounding
+    * band could be structurally pruned while the identically-rounding
+    * brute-force oracle keeps it. */
+  private def theta(minCos: Double): Double =
+    math.acos(math.min(1.0, math.max(-1.0, minCos - 5e-7)))
+
+  /** ONE K-row aggregate serves both the radii and the hot-cell cap:
+    * unlike the text paths (whose band-key space is unbounded, so
+    * dropHotBuckets must keep the hot keys distributed), the cell space
+    * here IS the model — K rows of (radius, count) are driver-side model
+    * parameters, and the cull becomes a literal NOT-IN filter instead of
+    * a second count-agg plus a broadcast anti-join. Cells over
+    * `maxBucket` are reported through `report(cells, rows, largest)`.
+    * Returns the radii of the SURVIVING cells (a culled cell generates
+    * no pairs, so it must not enter the qualifying-pair enumeration)
+    * and the culled cell ids. */
+  private def cellStats(assigned: DataFrame, maxBucket: Int)(
+      report: (Int, Long, String) => String): (Map[Int, Double], Set[Int]) = {
+    val stats = assigned.groupBy(col("cell"))
+      .agg(max(col("ang")).as("r"), count(lit(1)).as("n"))
+      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
+    val hot = if (maxBucket >= Int.MaxValue) Array.empty[(Int, Double, Long)]
+              else stats.filter(_._3 > maxBucket)
+    if (hot.nonEmpty) {
+      val worst = hot.sortBy(-_._3).take(3).map(s => s"${s._1}(n=${s._3})")
+      Dedup.hotBucketLog(report(hot.length, hot.map(_._3).sum,
+        worst.mkString(", ")))
+    }
+    val hotSet = hot.map(_._1).toSet
+    (stats.collect { case (c, r, _) if !hotSet.contains(c) => c -> r }.toMap,
+      hotSet)
+  }
+
+  private def capped(assigned: DataFrame, hot: Set[Int]): DataFrame =
+    if (hot.isEmpty) assigned
+    else assigned.filter(!col("cell").isin(hot.toSeq: _*))
+
+  /** The verified pairs of the qualifying `(ci, cj)` cell pairs, with
+    * vectors riding the ONE cell-keyed join (r20): the `a` side
+    * replicates per qualifying cell pair (bounded by the broadcast
+    * list's fan-out), the `b` side exchanges its vectors exactly once —
+    * the ivfTopKBatch shape IvfShuffleSpec measured at 8.2× fewer
+    * shuffle bytes than enumerating (id_a, id_b) candidates and
+    * re-joining each side BY PAIR ID for its vector (a vector lives in
+    * exactly ONE cell, so unlike the banded text finders there is no
+    * multi-bucket pair dedup to amortize a keys-first pass against).
+    * Each pair is generated at most once. `self` keeps `id_a < id_b`. */
+  private def cellPairJoin(a: DataFrame, b: DataFrame, cellPairs: DataFrame,
+                           minCos: Double, self: Boolean): DataFrame = {
+    val pairs = side(a, col("cell").as("ci"), "a")
+      .join(broadcast(cellPairs), Seq("ci"))
+      .select(col("cj").as("_jc"), col("id_a"), col("v_a"), col("n_a"))
+      .join(side(b, col("cell").as("_jc"), "b"), Seq("_jc"))
+    scored(if (self) pairs.filter(col("id_a") < col("id_b")) else pairs, minCos)
   }
 
   /** The auto-blocked embedding path: no caller-supplied cells.
@@ -267,40 +357,20 @@ object SimilarJoin {
     * PAIRS the triangle-inequality bound `angle(c_i,c_j) <= r_i + r_j
     * + acos(minCos - 5e-7)` cannot exclude (the 5e-7 widens the
     * angular threshold to the verify filter's round-to-6 band — see
-    * the theta comment below). The result is EXACT — identical
-    * to the brute-force join at any centroid quality (q64's oracle is
-    * plain brute force) — because the bound over-approximates, never
-    * under-approximates, and in-bound candidates are cosine-verified.
+    * [[theta]]). The result is EXACT — identical to the brute-force
+    * join at any centroid quality (q64's oracle is plain brute force) —
+    * because the bound over-approximates, never under-approximates,
+    * and in-bound candidates are cosine-verified.
     *
-    * Vectors and norms ride the ONE cell-keyed candidate join (r20 —
-    * the ivfTopKBatch shape): a vector lives in exactly one cell, so
-    * each pair is generated once and there is nothing for a keys-first
-    * pass to dedup; per-pair-id fetch joins only re-shuffled every
-    * candidate's two vectors (IvfShuffleSpec measured the same trade
-    * at 8.2× the shuffle bytes). Hot CELLS are culled under `maxBucket` through the
-    * shared loud hook; a fired cap trades exactness for boundedness,
-    * exactly like the text paths (run exact dedup first or raise the
-    * cap). Driver-side state is K centroids + K radii + the qualifying
-    * cell-pair list (≤ K², tiny) — model parameters, never data rows. */
-  private def autoEmbeddingPairs(df: DataFrame, idCol: String, vecCol: String,
-                                 minCos: Double, numCells: Int,
-                                 refineIters: Int,
-                                 cacheSignatures: Boolean,
-                                 maxBucket: Int,
-                                 index: Option[graft.sim.CellIndex]): DataFrame = {
-    val (base, assigned, verified) = autoEmbeddingPlan(df, idCol, vecCol,
-      minCos, numCells, refineIters, cacheSignatures, maxBucket, index)
-    if (!cacheSignatures) verified
-    else {
-      val out = verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // materialize before releasing the vector caches
-      assigned.foreach(_.unpersist())
-      base.unpersist()
-      out
-    }
-  }
-
-  /** The un-materialized auto-block plan — exposed like
+    * Vectors and norms ride the ONE cell-keyed candidate join
+    * ([[cellPairJoin]]). Hot CELLS are culled under `maxBucket` through
+    * the shared loud hook; a fired cap trades exactness for
+    * boundedness, exactly like the text paths (run exact dedup first or
+    * raise the cap). Driver-side state is K centroids + K radii + the
+    * qualifying cell-pair list (≤ K², tiny) — model parameters, never
+    * data rows.
+    *
+    * This is the un-materialized plan — exposed like
     * [[Dedup.lshPlan]] so PlanQualitySpec pins the SHIPPED join shape
     * (one scan into the caches, broadcast cell-pair list, vectors
     * riding the one cell-keyed join) before persist()/count() hide it
@@ -311,149 +381,71 @@ object SimilarJoin {
                                        numCells: Int, refineIters: Int,
                                        cacheSignatures: Boolean,
                                        maxBucket: Int,
-                                       index: Option[graft.sim.CellIndex] = None): (DataFrame, Option[DataFrame], DataFrame) = {
-    import graft.sim.AutoBlock
+                                       index: Option[CellIndex] = None): (DataFrame, Option[DataFrame], DataFrame) = {
     val spark = df.sparkSession
     // zero-norm vectors have no cosine to anything — dropped up front,
     // exactly as the brute-force oracle's NULL-division comparison does
-    val base0 = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-        Similarity.norm(col(vecCol)).as("nrm"))
-      .filter(col("v").isNotNull && Similarity.finiteNorm(col("nrm")))
-    val base = if (cacheSignatures)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
-    val cents = index.map(_.centroids).getOrElse(AutoBlock.fitCells(base,
-      AutoBlock.resolveCells(numCells, base.count()), refineIters))
+    val base0 = CellSearch.normed(df, idCol, vecCol)
+    val base = persistIf(cacheSignatures)(base0)
+    val cents = CellSearch.cells(base, numCells, refineIters, index)
     if (cents.isEmpty) { // empty corpus: nothing to pair
       return (base, None, base0.select(col("id").as("id_a"),
         col("id").as("id_b"), lit(0.0).as("score")).limit(0))
     }
-    val assigned0 = base
-      .withColumn("_nc", AutoBlock.nearestCellStruct(cents, col("v"), col("nrm")))
-      .select(col("id"), col("v"), col("nrm"),
-        col("_nc.cell").as("cell"), col("_nc.ang").as("ang"))
-    val assigned = if (cacheSignatures)
-      assigned0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else assigned0
-    // ONE K-row aggregate serves both the radii and the hot-cell cap:
-    // unlike the text paths (whose band-key space is unbounded, so
-    // dropHotBuckets must keep the hot keys distributed), the cell
-    // space here IS the model — K rows of (radius, count) are driver-
-    // side model parameters, and the cull becomes a literal NOT-IN
-    // filter instead of a second count-agg plus a broadcast anti-join.
-    val stats = assigned.groupBy(col("cell"))
-      .agg(max(col("ang")).as("r"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
-    val hot = if (maxBucket >= Int.MaxValue) Array.empty[(Int, Double, Long)]
-              else stats.filter(_._3 > maxBucket)
-    if (hot.nonEmpty) {
-      val worst = hot.sortBy(-_._3).take(3)
-        .map(s => s"${s._1}(n=${s._3})")
-      Dedup.hotBucketLog(s"[graft.dedup] similarJoin(EmbeddingCosine): " +
-        s"dropped ${hot.length} hot bucket(s) exceeding maxBucket=$maxBucket " +
-        s"(${hot.map(_._3).sum} band rows); largest: ${worst.mkString(", ")}. " +
+    val asg = persistIf(cacheSignatures)(assigned(base, cents))
+    val (radii, hot) = cellStats(asg, maxBucket) { (n, rows, worst) =>
+      s"[graft.dedup] similarJoin(EmbeddingCosine): " +
+        s"dropped $n hot bucket(s) exceeding maxBucket=$maxBucket " +
+        s"($rows band rows); largest: $worst. " +
         "Pairs matched ONLY inside these buckets are not emitted — run " +
-        "exact dedup first or raise maxBucket.")
+        "exact dedup first or raise maxBucket."
     }
-    val hotSet = hot.map(_._1).toSet
-    // radii over SURVIVING cells only — a culled cell generates no
-    // pairs, so it must not enter the qualifying-pair enumeration
-    val radii = stats.collect {
-      case (c, r, _) if !hotSet.contains(c) => c -> r
-    }.toMap
-    // the verify filter keeps round(score, 6) >= minCos, which admits
-    // true cosines down to minCos - 5e-7 (the round-half-up band); the
-    // angular bound must cover THAT threshold, not minCos itself, or a
-    // pair in the rounding band could be structurally pruned while the
-    // identically-rounding brute-force oracle keeps it
-    val theta = math.acos(math.min(1.0, math.max(-1.0, minCos - 5e-7)))
     val cellPairs = {
       import spark.implicits._
-      AutoBlock.qualifyingCellPairs(cents, radii, theta).toDF("ci", "cj")
+      AutoBlock.qualifyingCellPairs(cents, radii, theta(minCos)).toDF("ci", "cj")
     }
-    val capped0 = assigned
-    val capped = if (hotSet.isEmpty) capped0
-      else capped0.filter(!col("cell").isin(hotSet.toSeq: _*))
-    // vectors ride the ONE cell-keyed join (r20): the left side
-    // replicates per qualifying cell pair (bounded by the broadcast
-    // list's fan-out), the right side exchanges its vectors exactly
-    // once — the ivfTopKBatch shape IvfShuffleSpec measured at 8.2×
-    // fewer shuffle bytes than enumerating (id_a, id_b) candidates and
-    // re-joining each side BY PAIR ID for its vector (every candidate
-    // pair dragged two vectors through two more exchanges; a vector
-    // lives in exactly ONE cell here, so unlike the banded text
-    // finders there is no multi-bucket pair dedup to amortize a
-    // keys-first pass against). Same pairs, same dot/round arithmetic.
-    val verified = capped
-      .select(col("cell").as("ci"), col("id").as("id_a"),
-        col("v").as("v_a"), col("nrm").as("n_a"))
-      .join(broadcast(cellPairs), Seq("ci"))
-      .select(col("cj").as("_jc"), col("id_a"), col("v_a"), col("n_a"))
-      .join(capped.select(col("cell").as("_jc"), col("id").as("id_b"),
-        col("v").as("v_b"), col("nrm").as("n_b")), Seq("_jc"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(Similarity.dot(col("v_a"), col("v_b"))
-          / (col("n_a") * col("n_b")), 6).as("score"))
-      .filter(col("score") >= minCos)
-      .orderBy(col("id_a"), col("id_b"))
-    (base, if (cacheSignatures) Some(assigned) else None, verified)
+    val kept = capped(asg, hot)
+    (base, if (cacheSignatures) Some(asg) else None,
+      cellPairJoin(kept, kept, cellPairs, minCos, self = true))
   }
 
   /** The pre-r20 candidate tail of [[autoEmbeddingPlan]] — (cell, id)
     * pair enumeration + per-pair-id vector fetch joins. Kept private
-    * as the measured twin (`EmbJoinShapeSpec`/OptProbe head-to-head;
-    * same pairs, same scores) documenting WHY the shipped shape
-    * carries vectors through the cell join instead. */
+    * as the measured twin (`EmbJoinShapeSpec` head-to-head; same
+    * pairs, same scores) documenting WHY the shipped shape carries
+    * vectors through the cell join instead. */
   private[graft] def autoEmbeddingPairsLateFetch(df: DataFrame,
       idCol: String, vecCol: String, minCos: Double, numCells: Int,
       refineIters: Int, maxBucket: Int): DataFrame = {
-    import graft.sim.AutoBlock
     val spark = df.sparkSession
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-        Similarity.norm(col(vecCol)).as("nrm"))
-      .filter(col("v").isNotNull && Similarity.finiteNorm(col("nrm")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = AutoBlock.fitCells(base,
-      AutoBlock.resolveCells(numCells, base.count()), refineIters)
-    val assigned = base
-      .withColumn("_nc", AutoBlock.nearestCellStruct(cents, col("v"), col("nrm")))
-      .select(col("id"), col("v"), col("nrm"),
-        col("_nc.cell").as("cell"), col("_nc.ang").as("ang"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = assigned.groupBy(col("cell"))
+    val base = CellSearch.normed(df, idCol, vecCol)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val cents = CellSearch.cells(base, numCells, refineIters, None)
+    val asg = assigned(base, cents).persist(StorageLevel.MEMORY_AND_DISK)
+    val stats = asg.groupBy(col("cell"))
       .agg(max(col("ang")).as("r"), count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
     val radii = stats.collect {
       case (c, r, n) if n <= maxBucket => c -> r
     }.toMap
-    val theta = math.acos(math.min(1.0, math.max(-1.0, minCos - 5e-7)))
     val cellPairs = {
       import spark.implicits._
-      AutoBlock.qualifyingCellPairs(cents, radii, theta).toDF("ci", "cj")
+      AutoBlock.qualifyingCellPairs(cents, radii, theta(minCos)).toDF("ci", "cj")
     }
-    val capped0 = assigned.select(col("cell"), col("id"))
-    val capped = capped0.filter(col("cell").isInCollection(radii.keys.toSeq))
-    val cand = capped.select(col("cell").as("ci"), col("id").as("id_a"))
+    val kept = asg.select(col("cell"), col("id"))
+      .filter(col("cell").isInCollection(radii.keys.toSeq))
+    val cand = kept.select(col("cell").as("ci"), col("id").as("id_a"))
       .join(broadcast(cellPairs), Seq("ci"))
       .select(col("cj").as("cell"), col("id_a"))
-      .join(capped.select(col("cell"), col("id").as("id_b")), Seq("cell"))
+      .join(kept.select(col("cell"), col("id").as("id_b")), Seq("cell"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
-    val verified = cand
-      .join(assigned.select(col("id").as("id_a"), col("v").as("v_a"),
+    val verified = scored(cand
+      .join(asg.select(col("id").as("id_a"), col("v").as("v_a"),
         col("nrm").as("n_a")), Seq("id_a"))
-      .join(assigned.select(col("id").as("id_b"), col("v").as("v_b"),
-        col("nrm").as("n_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(Similarity.dot(col("v_a"), col("v_b"))
-          / (col("n_a") * col("n_b")), 6).as("score"))
-      .filter(col("score") >= minCos)
-      .orderBy(col("id_a"), col("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    verified.count()
-    assigned.unpersist(); base.unpersist()
-    verified
+      .join(asg.select(col("id").as("id_b"), col("v").as("v_b"),
+        col("nrm").as("n_b")), Seq("id_b")), minCos)
+    materialized(verified, cache = true, Seq(asg, base))
   }
 
   /** Caller-blocked embedding A-vs-B: candidates share the caller's
@@ -464,36 +456,19 @@ object SimilarJoin {
                                     blockCol: String, minCos: Double,
                                     cacheSignatures: Boolean,
                                     maxBucket: Int): DataFrame = {
-    def side(df: DataFrame, tag: String) = {
-      val normed0 = df.select(col(blockCol).as("blk"), col(idCol).as("id"),
-          col(vecCol).as("v"), Similarity.norm(col(vecCol)).as("nrm"))
-        .filter(Similarity.finiteNorm(col("nrm")))
-      val normed = if (cacheSignatures)
-        normed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else normed0
+    def sideOf(df: DataFrame, tag: String) = {
+      val normed = persistIf(cacheSignatures)(
+        blockNormed(df, idCol, vecCol, blockCol))
       // A-vs-B bucket cost is |A_blk| × |B_blk|: capping EACH side at
       // maxBucket bounds any one block's pair count at maxBucket²
       (normed, Dedup.dropHotBuckets(normed, Seq("blk"), maxBucket,
         s"similarJoinAgainst(EmbeddingCosine/$tag)"))
     }
-    val (normedA, cappedA) = side(newDf, "new")
-    val (normedB, cappedB) = side(corpusDf, "corpus")
-    val verified = cappedA.select(col("blk"), col("id").as("id_a"),
-        col("v").as("v_a"), col("nrm").as("n_a"))
-      .join(cappedB.select(col("blk"), col("id").as("id_b"),
-        col("v").as("v_b"), col("nrm").as("n_b")), Seq("blk"))
-      .select(col("id_a"), col("id_b"),
-        round(Similarity.dot(col("v_a"), col("v_b"))
-          / (col("n_a") * col("n_b")), 6).as("score"))
-      .filter(col("score") >= minCos)
-      .orderBy(col("id_a"), col("id_b"))
-    if (!cacheSignatures) verified
-    else {
-      val out = verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      normedA.unpersist(); normedB.unpersist()
-      out
-    }
+    val (normedA, cappedA) = sideOf(newDf, "new")
+    val (normedB, cappedB) = sideOf(corpusDf, "corpus")
+    val verified = scored(side(cappedA, col("blk"), "a")
+      .join(side(cappedB, col("blk"), "b"), Seq("blk")), minCos)
+    materialized(verified, cacheSignatures, Seq(normedA, normedB))
   }
 
   /** Auto-blocked embedding A-vs-B: cells are trained on the CORPUS
@@ -504,29 +479,10 @@ object SimilarJoin {
     * .qualifyingCellPairsAB]]) enumerates exactly the (A-cell, B-cell)
     * pairs that can hold a qualifying vector pair — EXACT at any
     * centroid quality, like the self-join form. Vectors ride the one
-    * cell-keyed join per side (the self form's r20 shape). Hot
-    * cells are culled per SIDE from the two K-row stats aggs (an
-    * A-vs-B bucket costs |A_cell| × |B_cell|, so each side is capped
-    * at `maxBucket`), loudly. */
-  private def autoEmbeddingPairsAgainst(newDf: DataFrame, corpusDf: DataFrame,
-                                        idCol: String, vecCol: String,
-                                        minCos: Double, numCells: Int,
-                                        refineIters: Int,
-                                        cacheSignatures: Boolean,
-                                        maxBucket: Int,
-                                        index: Option[graft.sim.CellIndex]): DataFrame = {
-    val (caches, verified) = autoEmbeddingPlanAgainst(newDf, corpusDf, idCol,
-      vecCol, minCos, numCells, refineIters, cacheSignatures, maxBucket, index)
-    if (!cacheSignatures) verified
-    else {
-      val out = verified.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // materialize before releasing the per-side caches
-      caches.foreach(_.unpersist())
-      out
-    }
-  }
-
-  /** The un-materialized A-vs-B auto-block plan — exposed like
+    * cell-keyed join ([[cellPairJoin]]). Hot cells are culled per SIDE
+    * from the two K-row stats aggs (an A-vs-B bucket costs
+    * |A_cell| × |B_cell|, so each side is capped at `maxBucket`),
+    * loudly. This is the un-materialized plan — exposed like
     * [[autoEmbeddingPlan]] so PlanQualitySpec pins the shipped shape.
     * Returns (caches to release, verified). */
   private[graft] def autoEmbeddingPlanAgainst(newDf: DataFrame,
@@ -536,94 +492,42 @@ object SimilarJoin {
                                               refineIters: Int,
                                               cacheSignatures: Boolean,
                                               maxBucket: Int,
-                                              index: Option[graft.sim.CellIndex] = None): (Seq[DataFrame], DataFrame) = {
-    import graft.sim.AutoBlock
+                                              index: Option[CellIndex] = None): (Seq[DataFrame], DataFrame) = {
     val spark = newDf.sparkSession
-    def baseOf(df: DataFrame) = {
-      val b0 = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-          Similarity.norm(col(vecCol)).as("nrm"))
-        .filter(col("v").isNotNull && Similarity.finiteNorm(col("nrm")))
-      if (cacheSignatures)
-        b0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else b0
-    }
-    val baseA = baseOf(newDf)
-    val baseB = baseOf(corpusDf)
+    val cached = persistIf(cacheSignatures) _
+    val baseA = cached(CellSearch.normed(newDf, idCol, vecCol))
+    val baseB = cached(CellSearch.normed(corpusDf, idCol, vecCol))
     // the CORPUS is the index side: a pre-trained CellIndex (or inline
     // training over corpus rows) — never the new batch, whose daily
     // composition must not move the standing index's cells
-    val cents = index.map(_.centroids).getOrElse(AutoBlock.fitCells(baseB,
-      AutoBlock.resolveCells(numCells, baseB.count()), refineIters))
-    def empty() = baseA.select(col("id").as("id_a"), col("id").as("id_b"),
-      lit(0.0).as("score")).limit(0)
-    if (cents.isEmpty) return (Seq(baseA, baseB).filter(_ => cacheSignatures), empty())
-    def assignOf(base: DataFrame) = {
-      val a0 = base
-        .withColumn("_nc", AutoBlock.nearestCellStruct(cents, col("v"), col("nrm")))
-        .select(col("id"), col("v"), col("nrm"),
-          col("_nc.cell").as("cell"), col("_nc.ang").as("ang"))
-      if (cacheSignatures)
-        a0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else a0
-    }
-    val assignedA = assignOf(baseA)
-    val assignedB = assignOf(baseB)
+    val cents = CellSearch.cells(baseB, numCells, refineIters, index)
+    if (cents.isEmpty)
+      return (Seq(baseA, baseB).filter(_ => cacheSignatures),
+        baseA.select(col("id").as("id_a"), col("id").as("id_b"),
+          lit(0.0).as("score")).limit(0))
+    val assignedA = cached(assigned(baseA, cents))
+    val assignedB = cached(assigned(baseB, cents))
     // one K-row stats agg PER SIDE: radii + hot-cell cull, driver-side
     // model parameters exactly as in the self-join form
-    def statsOf(assigned: DataFrame, tag: String) = {
-      val stats = assigned.groupBy(col("cell"))
-        .agg(max(col("ang")).as("r"), count(lit(1)).as("n"))
-        .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
-      val hot = if (maxBucket >= Int.MaxValue) Array.empty[(Int, Double, Long)]
-                else stats.filter(_._3 > maxBucket)
-      if (hot.nonEmpty) {
-        val worst = hot.sortBy(-_._3).take(3).map(s => s"${s._1}(n=${s._3})")
-        Dedup.hotBucketLog(s"[graft.dedup] similarJoinAgainst(EmbeddingCosine/" +
-          s"$tag): dropped ${hot.length} hot cell(s) exceeding " +
-          s"maxBucket=$maxBucket (${hot.map(_._3).sum} rows); largest: " +
-          s"${worst.mkString(", ")}. Pairs touching these cells on this " +
-          "side are not emitted — run exact dedup first or raise maxBucket.")
-      }
-      val hotSet = hot.map(_._1).toSet
-      val radii = stats.collect {
-        case (c, r, _) if !hotSet.contains(c) => c -> r
-      }.toMap
-      (radii, hotSet)
+    def statsOf(asg: DataFrame, tag: String) = cellStats(asg, maxBucket) {
+      (n, rows, worst) =>
+        s"[graft.dedup] similarJoinAgainst(EmbeddingCosine/" +
+          s"$tag): dropped $n hot cell(s) exceeding " +
+          s"maxBucket=$maxBucket ($rows rows); largest: " +
+          s"$worst. Pairs touching these cells on this " +
+          "side are not emitted — run exact dedup first or raise maxBucket."
     }
     val (radiiA, hotA) = statsOf(assignedA, "new")
     val (radiiB, hotB) = statsOf(assignedB, "corpus")
-    // same round-to-6 band widening as the self-join (see
-    // autoEmbeddingPlan's theta comment)
-    val theta = math.acos(math.min(1.0, math.max(-1.0, minCos - 5e-7)))
     val cellPairs = {
       import spark.implicits._
-      AutoBlock.qualifyingCellPairsAB(cents, radiiA, radiiB, theta)
+      AutoBlock.qualifyingCellPairsAB(cents, radiiA, radiiB, theta(minCos))
         .toDF("ci", "cj")
     }
-    def capped(assigned: DataFrame, hotSet: Set[Int]) = {
-      if (hotSet.isEmpty) assigned
-      else assigned.filter(!col("cell").isin(hotSet.toSeq: _*))
-    }
     // (a, b) is generated at most once: a lives in exactly one A-cell,
-    // b in one B-cell, and (ci, cj) appears once — no distinct needed.
-    // Vectors ride the one cell-keyed join (r20, the self-join /
-    // ivfTopKBatch shape): the A side replicates per qualifying
-    // directed pair, the B side exchanges its vectors once — instead
-    // of enumerating (id_a, id_b) and dragging each candidate's two
-    // vectors through two more pair-id exchanges.
-    val verified = capped(assignedA, hotA)
-      .select(col("cell").as("ci"), col("id").as("id_a"),
-        col("v").as("v_a"), col("nrm").as("n_a"))
-      .join(broadcast(cellPairs), Seq("ci"))
-      .select(col("cj").as("_jc"), col("id_a"), col("v_a"), col("n_a"))
-      .join(capped(assignedB, hotB).select(col("cell").as("_jc"),
-        col("id").as("id_b"), col("v").as("v_b"), col("nrm").as("n_b")),
-        Seq("_jc"))
-      .select(col("id_a"), col("id_b"),
-        round(Similarity.dot(col("v_a"), col("v_b"))
-          / (col("n_a") * col("n_b")), 6).as("score"))
-      .filter(col("score") >= minCos)
-      .orderBy(col("id_a"), col("id_b"))
+    // b in one B-cell, and (ci, cj) appears once — no distinct needed
+    val verified = cellPairJoin(capped(assignedA, hotA),
+      capped(assignedB, hotB), cellPairs, minCos, self = false)
     val caches = if (cacheSignatures)
       Seq(assignedA, assignedB, baseA, baseB) else Seq.empty
     (caches, verified)

@@ -44,9 +44,4 @@ object Jsonl {
       .option("mode", if (permissive) "PERMISSIVE" else "DROPMALFORMED")
     base.json(dir)
   }
-
-  /** Read JSONL letting Spark infer the schema — an extra sampling
-    * job; interactive use only. */
-  def readInferred(spark: SparkSession, dir: String): DataFrame =
-    spark.read.json(dir)
 }

@@ -17,9 +17,6 @@ object Relational {
   def upperCaseColumns(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(_.toUpperCase): _*)
 
-  /** `max_rows` client cutoff (`lwetl/jdbc.py:634-636`). */
-  def limitRows(df: DataFrame, n: Int): DataFrame = df.limit(n)
-
   /** First row, if any (`query_single`, `lwetl/jdbc.py:722-736`). */
   def querySingle(df: DataFrame): Option[org.apache.spark.sql.Row] =
     df.limit(1).collect().headOption
@@ -81,10 +78,6 @@ object Relational {
 
   def orphans(src: DataFrame, trg: DataFrame, pk: String): DataFrame =
     orphans(src, trg, Seq(pk))
-
-  /** Full upsert plan (db-copy mode=update): (toInsert, toUpdate). */
-  def upsertPlan(src: DataFrame, trg: DataFrame, pk: String): (DataFrame, DataFrame) =
-    (newRows(src, trg, pk), existingRows(src, trg, pk))
 
   /** Backward as-of join: for each left row, the most recent right row
     * with rightTime <= leftTime for the same key; ts ties broken toward

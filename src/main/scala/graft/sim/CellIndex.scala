@@ -58,13 +58,10 @@ object CellIndex {
     * count via [[AutoBlock.resolveCells]]. */
   def train(emb: DataFrame, idCol: String, vecCol: String,
             numCells: Int = 0, refineIters: Int = 1): CellIndex = {
-    val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
-        Similarity.norm(col(vecCol)).as("nrm"))
-      .filter(col("v").isNotNull && Similarity.finiteNorm(col("nrm")))
+    val base = CellSearch.normed(emb, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val k = AutoBlock.resolveCells(numCells, base.count())
-      val cents = AutoBlock.fitCells(base, k, refineIters)
+      val cents = CellSearch.cells(base, numCells, refineIters, None)
       if (cents.isEmpty) return CellIndex(Array.empty, Array.empty)
       // one K-row agg for the training radii (cells that went empty in
       // the final assignment keep radius 0 — nothing was inside them)

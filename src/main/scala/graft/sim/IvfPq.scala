@@ -135,13 +135,6 @@ object IvfPq {
     Model(coarseRows.map(_._2), books.map(_.toArray).toArray)
   }
 
-  /** `array<long>` fixed-point quantization of a float/double vector:
-    * `floor(x · 2^20)` per coordinate. Prefer [[quantizeChecked]] at
-    * any site that knows the dimension — this raw form has no
-    * overflow guard. */
-  def quantize(vec: Column): Column =
-    transform(vec, x => floor(x.cast("double") * lit(Scale.toDouble)))
-
   /** Largest |coordinate| the fixed-point distance arithmetic can
     * carry at dimension `dim` with NO possibility of Long overflow:
     * [[iDist]] sums `dim` squares of differences, each difference at
@@ -155,10 +148,10 @@ object IvfPq {
   def maxAbsCoord(dim: Int): Double =
     math.sqrt(Long.MaxValue.toDouble / dim) / 2.0 / Scale.toDouble
 
-  /** [[quantize]] with the [[maxAbsCoord]] guard: any coordinate at
-    * or beyond the bound fails LOUDLY instead of corrupting every
-    * downstream distance. Identical output to [[quantize]] on all
-    * in-range input. */
+  /** `array<long>` fixed-point quantization of a float/double vector —
+    * `floor(x · 2^20)` per coordinate — with the [[maxAbsCoord]]
+    * guard: any coordinate at or beyond the bound fails LOUDLY instead
+    * of corrupting every downstream distance. */
   def quantizeChecked(vec: Column, dim: Int): Column = {
     val bound = maxAbsCoord(dim)
     transform(vec, x =>
@@ -193,12 +186,6 @@ object IvfPq {
         when(d < acc.getField("d"),
           struct(d.as("d"), c.cast("int").as("c"))).otherwise(acc)
       }).getField("c")
-
-  private[graft] def coarseLit(model: Model): Column =
-    typedLit(model.coarse.map(_.toSeq).toSeq)
-
-  private def booksLit(model: Model): Column =
-    typedLit(model.books.map(_.map(_.toSeq).toSeq).toSeq)
 
   // ---- reference-object expression builders (r20) -------------------
   // The centroid/book tables ride the expression as plain JVM arrays
@@ -279,14 +266,10 @@ object IvfPq {
   private def quantized(df: DataFrame, idCol: String, vecCol: String,
                         m: Int, site: String): DataFrame = {
     val base = df.filter(col(vecCol).isNotNull)
-    val dims = base.agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
-    require(!dims.isNullAt(0), s"$site: empty corpus")
-    require(dims.getInt(0) == dims.getInt(1),
-      s"$site: ragged vectors (dims ${dims.getInt(0)}..${dims.getInt(1)})")
-    require(dims.getInt(0) % m == 0,
-      s"$site: dimension ${dims.getInt(0)} not divisible by m=$m")
-    base.select(col(idCol).as("_tid"),
-      quantizeChecked(col(vecCol), dims.getInt(0)).as("xq"))
+    val dim = CellSearch.uniformDim(base, vecCol, s"$site: empty corpus",
+      (lo, hi) => s"$site: ragged vectors (dims $lo..$hi)")
+    require(dim % m == 0, s"$site: dimension $dim not divisible by m=$m")
+    base.select(col(idCol).as("_tid"), quantizeChecked(col(vecCol), dim).as("xq"))
   }
 
   /** Validate a frame against a (possibly FROZEN) model — dimension
@@ -294,14 +277,20 @@ object IvfPq {
     * different embedding space. */
   private def requireDim(df: DataFrame, vecCol: String, model: Model,
                          site: String): Unit = {
-    val dims = df.filter(col(vecCol).isNotNull)
-      .agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
-    require(!dims.isNullAt(0), s"$site: empty frame")
-    require(dims.getInt(0) == dims.getInt(1) && dims.getInt(0) == model.dim,
-      s"$site: frame dims ${dims.getInt(0)}..${dims.getInt(1)} do not " +
-        s"match the model's dim=${model.dim} — the artifact belongs to " +
-        "a different embedding space")
+    def mismatch(lo: Int, hi: Int) =
+      s"$site: frame dims $lo..$hi do not match the model's " +
+        s"dim=${model.dim} — the artifact belongs to a different embedding space"
+    val dim = CellSearch.uniformDim(df, vecCol, s"$site: empty frame", mismatch)
+    require(dim == model.dim, mismatch(dim, dim))
   }
+
+  /** The non-null probes as `(probe_id, pq)`, `pq` the fixed-point
+    * probe vector. */
+  private def quantizedProbes(probes: DataFrame, idCol: String,
+                              vecCol: String, model: Model): DataFrame =
+    probes.filter(col(vecCol).isNotNull)
+      .select(col(idCol).as("probe_id"),
+        quantizeChecked(col(vecCol), model.dim).as("pq"))
 
   /** Train the full model: seeded-sample init (first `kCells` / `ks`
     * corpus vectors by `(md5_32(seed|id), id)` — [[Pq.pqCodebook]]'s
@@ -334,7 +323,6 @@ object IvfPq {
         .limit(trainSample)
         .select(col("xq")).collect()
         .map(_.getSeq[Long](0).toArray)
-      require(data.nonEmpty, "IvfPq.train: empty corpus")
       return trainLocal(data, kCells, m, ks, coarseIters, pqIters)
     }
     val smp = q.withColumn("_u", u)
@@ -347,7 +335,6 @@ object IvfPq {
         .limit(math.max(kCells, ks))
         .select(col("xq")).collect()
         .map(_.getSeq[Long](0).toArray)
-      require(donors.length >= 1, "IvfPq.train: empty corpus")
       val coarse0 = Array(donors.take(math.min(kCells, donors.length)))
       val coarse = lloyd(
         smp.select(lit(0).as("g"), col("xq").as("vq")),
@@ -479,9 +466,7 @@ object IvfPq {
     // (ascending distance, cell-id tie-break — the literal path's
     // sort_array order), residual + m×ks LUT off the model arrays —
     // the plan carries none of them as literals.
-    probes.filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("probe_id"),
-        quantizeChecked(col(vecCol), model.dim).as("pq"))
+    quantizedProbes(probes, idCol, vecCol, model)
       .withColumn("_cells", routedCellsCol(col("pq"), model.coarse,
         math.min(nprobe, model.kCells)))
       .select(col("probe_id"), col("pq"),
@@ -522,27 +507,20 @@ object IvfPq {
     val coded = withCodes(corpus, vecCol, mdl)
       .select(col(idCol), col("cell"), col("codes"))
     val routed = routedProbes(probes, idCol, vecCol, mdl, nprobe)
-    val cand = coded
-      .join(broadcast(routed.select(col("probe_id"), col("cell"),
-        col("lut"))), Seq("cell"))
-      .filter(col(idCol) =!= col("probe_id"))
-      .withColumn("_adc", adcFromLut)
-    val short = graft.ops.TopK.topKPerGroup(cand, Seq("probe_id"),
-        Seq(("_adc", true), (idCol, true)), refine, "_sr")
+    val cand = CellSearch.candidates(coded,
+      routed.select(col("probe_id"), col("cell"), col("lut")), "cell", idCol,
+      "_adc", adcFromLut)
+    val short = CellSearch.nearest(cand, "_adc", idCol, refine, "_sr")
       .select(col("probe_id"), col(idCol))
     // late fetch: raw vectors only for the shortlist (probes×refine
     // rows — broadcast), then the exact integer re-rank
     val raw = corpus.filter(col(vecCol).isNotNull)
       .select(col(idCol), quantizeChecked(col(vecCol), mdl.dim).as("_cxq"))
-    val pq = probes.filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("probe_id"),
-        quantizeChecked(col(vecCol), mdl.dim).as("pq"))
     val refined = raw.join(broadcast(short), Seq(idCol))
-      .join(broadcast(pq), Seq("probe_id"))
+      .join(broadcast(quantizedProbes(probes, idCol, vecCol, mdl)),
+        Seq("probe_id"))
       .withColumn("xdist", iDist(col("pq"), col("_cxq")))
-    graft.ops.TopK.topKPerGroup(refined, Seq("probe_id"),
-        Seq(("xdist", true), (idCol, true)), k, "rank")
-      .select(col("probe_id"), col("rank"), col(idCol), col("xdist"))
+    CellSearch.topK(refined, "xdist", idCol, k)
   }
 
   /** Recall audit for the trained/residual path — per probe, how
@@ -564,39 +542,23 @@ object IvfPq {
     requireDim(probes, vecCol, mdl, "IvfPq.recallBatch(probes)")
     val coded = withCodes(corpus, vecCol, mdl)
       .select(col(idCol), col("cell"), col("codes"), col("xq"))
-    val routed = routedProbes(probes, idCol, vecCol, mdl, nprobe)
-    val cand = coded
-      .join(broadcast(routed), Seq("cell"))
-      .filter(col(idCol) =!= col("probe_id"))
-      .withColumn("_adc", adcFromLut)
+    val cand = CellSearch.candidates(coded,
+        routedProbes(probes, idCol, vecCol, mdl, nprobe), "cell", idCol,
+        "_adc", adcFromLut)
       .withColumn("_xd", iDist(col("pq"), col("xq")))
-    val ar = graft.ops.TopK.topKPerGroup(cand, Seq("probe_id"),
-      Seq(("_adc", true), (idCol, true)), k, "_ar")
-    val short = graft.ops.TopK.topKPerGroup(cand, Seq("probe_id"),
-      Seq(("_adc", true), (idCol, true)), refine, "_sr")
-    val rr = graft.ops.TopK.topKPerGroup(
-      short.select(col("probe_id"), col(idCol), col("_xd")),
-      Seq("probe_id"), Seq(("_xd", true), (idCol, true)), k, "_rr")
+    val ar = CellSearch.nearest(cand, "_adc", idCol, k, "_ar")
+    val short = CellSearch.nearest(cand, "_adc", idCol, refine, "_sr")
+    val rr = CellSearch.nearest(
+      short.select(col("probe_id"), col(idCol), col("_xd")), "_xd", idCol, k,
+      "_rr")
     // exact top-k: integer brute force over all (probe, corpus) pairs
-    val pqf = probes.filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("probe_id"),
-        quantizeChecked(col(vecCol), mdl.dim).as("pq"))
     val brute = coded.select(col(idCol), col("xq"))
-      .crossJoin(broadcast(pqf))
+      .crossJoin(broadcast(quantizedProbes(probes, idCol, vecCol, mdl)))
       .filter(col(idCol) =!= col("probe_id"))
       .withColumn("_xd", iDist(col("pq"), col("xq")))
-    val xr = graft.ops.TopK.topKPerGroup(brute, Seq("probe_id"),
-        Seq(("_xd", true), (idCol, true)), k, "_xr")
-      .select(col("probe_id"), col(idCol), lit(1).as("_hit"))
-    val aHits = ar.select(col("probe_id"), col(idCol))
-      .join(xr, Seq("probe_id", idCol), "left")
-      .groupBy(col("probe_id"))
-      .agg(count(col("_hit")).as("n_overlap_adc"))
-    val rHits = rr.select(col("probe_id"), col(idCol))
-      .join(xr, Seq("probe_id", idCol), "left")
-      .groupBy(col("probe_id"))
-      .agg(count(col("_hit")).as("n_overlap"))
-    aHits.join(rHits, Seq("probe_id"))
+    val xr = CellSearch.nearest(brute, "_xd", idCol, k, "_xr")
+    CellSearch.overlap(ar, xr, idCol, "n_overlap_adc")
+      .join(CellSearch.overlap(rr, xr, idCol, "n_overlap"), Seq("probe_id"))
       .select(col("probe_id"), col("n_overlap_adc"), col("n_overlap"))
   }
 

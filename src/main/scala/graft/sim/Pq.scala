@@ -80,12 +80,11 @@ object Pq {
   }
 
   private def subDimOf(df: DataFrame, vecCol: String, m: Int): Int = {
-    val dims = df.agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
-    require(!dims.isNullAt(0), "pq: empty corpus — no dimension to split")
-    val (lo, hi) = (dims.getInt(0), dims.getInt(1))
-    require(lo == hi, s"pq: ragged vectors (dims $lo..$hi)")
-    require(lo % m == 0, s"pq: dimension $lo not divisible by m=$m")
-    lo / m
+    val d = CellSearch.uniformDim(df, vecCol,
+      "pq: empty corpus — no dimension to split",
+      (lo, hi) => s"pq: ragged vectors (dims $lo..$hi)")
+    require(d % m == 0, s"pq: dimension $d not divisible by m=$m")
+    d / m
   }
 
   /** The codebook as ONE broadcastable row
@@ -179,6 +178,12 @@ object Pq {
         j => subDist(col("q"), s, element_at(cs, j + 1)))
     })
 
+  /** Adds the per-probe `lut` to a probe frame carrying `q`. */
+  private def withLut(prep: DataFrame, codebook: DataFrame): DataFrame =
+    prep.crossJoin(broadcast(nested(codebook)))
+      .withColumn("lut", probeLut)
+      .drop("cents")
+
   /** ADC distance off the LUT: per-sub lookups summed in subvector
     * order, rounded to 6dp — the same (per-sub fold, then cross-sub
     * fold) association the oracle computes. Expects `lut`/`codes`. */
@@ -229,25 +234,12 @@ object Pq {
     val cb = codebook.getOrElse(pqCodebook(corpus, idCol, vecCol, m, ks, seed))
     requireCompatible(probes, vecCol, cb, "Pq.ivfPqTopKBatch(probes)")
     val coded = withPqCodes(corpus, vecCol, cb).drop("cents")
-    val cents = Similarity.centroids(corpus, blockCol, vecCol)
-    val prep = probes.select(col(idCol).as("probe_id"),
-        col(vecCol).cast("array<double>").as("q"), col(vecCol).as("_pv"))
-      .crossJoin(broadcast(nested(cb)))
-      .withColumn("lut", probeLut)
-      .drop("cents")
-    val routing = graft.ops.TopK.topKPerGroup(
-        prep.crossJoin(broadcast(cents))
-          .withColumn("_csim",
-            Similarity.cosine(col("centroid"), col("_pv"))),
-        Seq("probe_id"), Seq(("_csim", false), (blockCol, true)),
-        nprobe, "_crank")
-      .select(col("probe_id"), col("lut"), col(blockCol))
-    val cand = coded.join(broadcast(routing), Seq(blockCol))
-      .filter(col(idCol) =!= col("probe_id"))
-      .withColumn("pdist", pqAdcDist)
-    graft.ops.TopK.topKPerGroup(cand, Seq("probe_id"),
-        Seq(("pdist", true), (idCol, true)), k, "rank")
-      .select(col("probe_id"), col("rank"), col(idCol), col("pdist"))
+    val prep = withLut(probes.select(col(idCol).as("probe_id"),
+      col(vecCol).cast("array<double>").as("q"), col(vecCol).as("_pv")), cb)
+    val routing = CellSearch.blockRouted(corpus, prep, vecCol, blockCol,
+      nprobe, "lut")
+    CellSearch.topK(CellSearch.candidates(coded, routing, blockCol, idCol,
+      "pdist", pqAdcDist), "pdist", idCol, k)
   }
 
   /** [[ivfPqTopKBatch]] over SELF-TRAINED cells — no caller block
@@ -269,38 +261,13 @@ object Pq {
                          codebook: Option[DataFrame] = None): DataFrame = {
     val cb = codebook.getOrElse(pqCodebook(corpus, idCol, vecCol, m, ks, seed))
     requireCompatible(probes, vecCol, cb, "Pq.ivfPqTopKBatchAuto(probes)")
-    val base = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-        Similarity.norm(col(vecCol)).as("nrm"))
-      .filter(col("v").isNotNull && Similarity.finiteNorm(col("nrm")))
-    val cents = index.map(_.centroids).getOrElse(AutoBlock.fitCells(base,
-      AutoBlock.resolveCells(numCells, base.count()), refineIters))
-    val prep = probes.select(col(idCol).as("probe_id"),
-        col(vecCol).cast("array<double>").as("q"), col(vecCol).as("_pv"),
-        Similarity.norm(col(vecCol)).as("_pnrm"))
-      .filter(col("q").isNotNull && Similarity.finiteNorm(col("_pnrm")))
-      .crossJoin(broadcast(nested(cb)))
-      .withColumn("lut", probeLut)
-      .drop("cents")
-    if (cents.isEmpty)
-      return prep.select(col("probe_id"), lit(1L).as("rank"),
-        col("probe_id").as(idCol), lit(0.0).as("pdist")).limit(0)
-    val coded = withPqCodes(corpus, vecCol, cb).drop("cents")
-      .withColumn("_nrm", Similarity.norm(col(vecCol)))
-      .filter(col(vecCol).isNotNull && Similarity.finiteNorm(col("_nrm")))
-      .withColumn("_cell", AutoBlock
-        .nearestCellStruct(cents, col(vecCol), col("_nrm")).getField("cell"))
-    // reference-object router (r20): plan-size O(1) in K, order
-    // pinned identical to the old K-struct sort_array construction
-    val routed = prep
-      .withColumn("_cells", AutoBlock.routedCellIds(cents, col("_pv"),
-        col("_pnrm"), math.min(nprobe, cents.length)))
-      .select(col("probe_id"), col("lut"), explode(col("_cells")).as("_cell"))
-    val cand = coded.join(broadcast(routed), Seq("_cell"))
-      .filter(col(idCol) =!= col("probe_id"))
-      .withColumn("pdist", pqAdcDist)
-    graft.ops.TopK.topKPerGroup(cand, Seq("probe_id"),
-        Seq(("pdist", true), (idCol, true)), k, "rank")
-      .select(col("probe_id"), col("rank"), col(idCol), col("pdist"))
+    val cents = CellSearch.cells(CellSearch.normed(corpus, idCol, vecCol),
+      numCells, refineIters, index)
+    CellSearch.autoTopK(
+        withLut(CellSearch.probesNormed(probes, idCol, vecCol), cb), cents,
+        vecCol, idCol, "lut", "pdist", pqAdcDist, nprobe, k) {
+      withPqCodes(corpus, vecCol, cb).drop("cents")
+    }
   }
 
   /** Recall audit for the PQ index — [[Quantize.adcRecallBatch]]'s
@@ -314,34 +281,10 @@ object Pq {
                     codebook: Option[DataFrame] = None): DataFrame = {
     val cb = codebook.getOrElse(pqCodebook(corpus, idCol, vecCol, m, ks, seed))
     requireCompatible(probes, vecCol, cb, "Pq.pqRecallBatch(probes)")
-    val coded = withPqCodes(corpus, vecCol, cb).drop("cents")
-      .withColumn("_v", col(vecCol).cast("array<double>"))
-    val prep = probes.select(col(idCol).as("probe_id"),
-        col(vecCol).cast("array<double>").as("q"))
-      .crossJoin(broadcast(nested(cb)))
-      .withColumn("lut", probeLut)
-      .drop("cents")
-    val exactDist = round(
-      aggregate(sequence(lit(0), size(col("q")) - 1), lit(0.0),
-        (acc, i) => {
-          val qi = element_at(col("q"), i + 1)
-          val vi = element_at(col("_v"), i + 1)
-          acc + (qi - vi) * (qi - vi)
-        }), 6)
-    val scored = coded.crossJoin(broadcast(prep))
-      .filter(col(idCol) =!= col("probe_id"))
-      .withColumn("pdist", pqAdcDist)
-      .withColumn("xdist", exactDist)
-    val ar = graft.ops.TopK.topKPerGroup(scored, Seq("probe_id"),
-      Seq(("pdist", true), (idCol, true)), k, "_ar")
-    val xr = graft.ops.TopK.topKPerGroup(scored, Seq("probe_id"),
-      Seq(("xdist", true), (idCol, true)), k, "_xr")
-    ar.select(col("probe_id"), col(idCol))
-      .join(xr.select(col("probe_id"), col(idCol))
-        .withColumn("_hit", lit(1)), Seq("probe_id", idCol), "left")
-      .groupBy(col("probe_id"))
-      .agg(count(col("_hit")).as("n_overlap"))
-      .select(col("probe_id"), col("n_overlap"))
+    CellSearch.recall(withPqCodes(corpus, vecCol, cb).drop("cents"),
+      withLut(probes.select(col(idCol).as("probe_id"),
+        col(vecCol).cast("array<double>").as("q")), cb),
+      vecCol, idCol, "pdist", pqAdcDist, k)
   }
 
   /** Persist the codebook as a parquet artifact — the train-once half

@@ -55,6 +55,10 @@ object Quantize {
             floor((x.cast("double") - mn) / (mx - mn) * 256).cast("int"))))
       }))
 
+  /** [[withSq8Codes]] with params taken over the same frame. */
+  private def sq8Coded(df: DataFrame, vecCol: String): DataFrame =
+    withSq8Codes(df, vecCol, sq8Params(df, vecCol))
+
   /** The ADC scoring expression: squared L2 between the exact probe
     * array `q` and the midpoint-dequantized codes, summed in
     * dimension order (sequential fold — cross-engine reproducible),
@@ -77,7 +81,7 @@ object Quantize {
     * smallest first with id tie-break. Returns `(idCol, adist)`. */
   def adcTopK(df: DataFrame, idCol: String, vecCol: String,
               probeId: Long, k: Int): DataFrame = {
-    val coded = withSq8Codes(df, vecCol, sq8Params(df, vecCol))
+    val coded = sq8Coded(df, vecCol)
     val probe = df.filter(col(idCol) === probeId)
       .select(col(vecCol).cast("array<double>").as("q"))
     coded.filter(col(idCol) =!= probeId).crossJoin(broadcast(probe))
@@ -96,7 +100,7 @@ object Quantize {
   def ivfAdcTopK(df: DataFrame, idCol: String, vecCol: String,
                  blockCol: String, probeId: Long, nprobe: Int,
                  k: Int): DataFrame = {
-    val coded = withSq8Codes(df, vecCol, sq8Params(df, vecCol))
+    val coded = sq8Coded(df, vecCol)
     val probeVec = df.filter(col(idCol) === probeId)
       .select(col(vecCol).as("probe_vec"))
     val topCells = Similarity.centroids(df, blockCol, vecCol)
@@ -130,23 +134,13 @@ object Quantize {
   def ivfAdcTopKBatch(corpus: DataFrame, probes: DataFrame,
                       idCol: String, vecCol: String, blockCol: String,
                       nprobe: Int, k: Int): DataFrame = {
-    val coded = withSq8Codes(corpus, vecCol, sq8Params(corpus, vecCol))
-    val cents = Similarity.centroids(corpus, blockCol, vecCol)
+    val coded = sq8Coded(corpus, vecCol)
     val prep = probes.select(col(idCol).as("probe_id"),
       col(vecCol).cast("array<double>").as("q"), col(vecCol).as("_pv"))
-    val routing = graft.ops.TopK.topKPerGroup(
-        prep.crossJoin(broadcast(cents))
-          .withColumn("_csim",
-            Similarity.cosine(col("centroid"), col("_pv"))),
-        Seq("probe_id"), Seq(("_csim", false), (blockCol, true)),
-        nprobe, "_crank")
-      .select(col("probe_id"), col("q"), col(blockCol))
-    val cand = coded.join(broadcast(routing), Seq(blockCol))
-      .filter(col(idCol) =!= col("probe_id"))
-      .withColumn("adist", adcDist)
-    graft.ops.TopK.topKPerGroup(cand, Seq("probe_id"),
-        Seq(("adist", true), (idCol, true)), k, "rank")
-      .select(col("probe_id"), col("rank"), col(idCol), col("adist"))
+    val routing = CellSearch.blockRouted(corpus, prep, vecCol, blockCol,
+      nprobe, "q")
+    CellSearch.topK(CellSearch.candidates(coded, routing, blockCol, idCol,
+      "adist", adcDist), "adist", idCol, k)
   }
 
   /** [[ivfAdcTopKBatch]] over SELF-TRAINED cells — no caller block
@@ -170,36 +164,12 @@ object Quantize {
                           nprobe: Int, k: Int,
                           numCells: Int = 0, refineIters: Int = 1,
                           index: Option[CellIndex] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val base = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-        Similarity.norm(col(vecCol)).as("nrm"))
-      .filter(col("v").isNotNull && Similarity.finiteNorm(col("nrm")))
-    val cents = index.map(_.centroids).getOrElse(AutoBlock.fitCells(base,
-      AutoBlock.resolveCells(numCells, base.count()), refineIters))
-    val p0 = probes.select(col(idCol).as("probe_id"),
-        col(vecCol).cast("array<double>").as("q"), col(vecCol).as("_pv"),
-        Similarity.norm(col(vecCol)).as("_pnrm"))
-      .filter(col("q").isNotNull && Similarity.finiteNorm(col("_pnrm")))
-    if (cents.isEmpty)
-      return p0.select(col("probe_id"), lit(1L).as("rank"),
-        col("probe_id").as(idCol), lit(0.0).as("adist")).limit(0)
-    val coded = withSq8Codes(corpus, vecCol, sq8Params(corpus, vecCol))
-      .withColumn("_nrm", Similarity.norm(col(vecCol)))
-      .filter(col(vecCol).isNotNull && Similarity.finiteNorm(col("_nrm")))
-      .withColumn("_cell", AutoBlock
-        .nearestCellStruct(cents, col(vecCol), col("_nrm")).getField("cell"))
-    // reference-object router (r20): plan-size O(1) in K, order
-    // pinned identical to the old K-struct sort_array construction
-    val routed = p0
-      .withColumn("_cells", AutoBlock.routedCellIds(cents, col("_pv"),
-        col("_pnrm"), math.min(nprobe, cents.length)))
-      .select(col("probe_id"), col("q"), explode(col("_cells")).as("_cell"))
-    val cand = coded.join(broadcast(routed), Seq("_cell"))
-      .filter(col(idCol) =!= col("probe_id"))
-      .withColumn("adist", adcDist)
-    graft.ops.TopK.topKPerGroup(cand, Seq("probe_id"),
-        Seq(("adist", true), (idCol, true)), k, "rank")
-      .select(col("probe_id"), col("rank"), col(idCol), col("adist"))
+    val cents = CellSearch.cells(CellSearch.normed(corpus, idCol, vecCol),
+      numCells, refineIters, index)
+    CellSearch.autoTopK(CellSearch.probesNormed(probes, idCol, vecCol), cents,
+        vecCol, idCol, "q", "adist", adcDist, nprobe, k) {
+      sq8Coded(corpus, vecCol)
+    }
   }
 
   /** Recall audit for the compressed index — the "did quantization
@@ -210,33 +180,11 @@ object Quantize {
     * run on a sampled probe set in production. Integer output:
     * `(probe_id, n_overlap)` — exact cross-engine. */
   def adcRecallBatch(corpus: DataFrame, probes: DataFrame,
-                     idCol: String, vecCol: String, k: Int): DataFrame = {
-    val coded = withSq8Codes(corpus, vecCol, sq8Params(corpus, vecCol))
-      .withColumn("_v", col(vecCol).cast("array<double>"))
-    val prep = probes.select(col(idCol).as("probe_id"),
-      col(vecCol).cast("array<double>").as("q"))
-    val exactDist = round(
-      aggregate(sequence(lit(0), size(col("q")) - 1), lit(0.0),
-        (acc, i) => {
-          val qi = element_at(col("q"), i + 1)
-          val vi = element_at(col("_v"), i + 1)
-          acc + (qi - vi) * (qi - vi)
-        }), 6)
-    val scored = coded.crossJoin(broadcast(prep))
-      .filter(col(idCol) =!= col("probe_id"))
-      .withColumn("adist", adcDist)
-      .withColumn("xdist", exactDist)
-    val ar = graft.ops.TopK.topKPerGroup(scored, Seq("probe_id"),
-      Seq(("adist", true), (idCol, true)), k, "_ar")
-    val xr = graft.ops.TopK.topKPerGroup(scored, Seq("probe_id"),
-      Seq(("xdist", true), (idCol, true)), k, "_xr")
-    ar.select(col("probe_id"), col(idCol))
-      .join(xr.select(col("probe_id"), col(idCol))
-        .withColumn("_hit", lit(1)), Seq("probe_id", idCol), "left")
-      .groupBy(col("probe_id"))
-      .agg(count(col("_hit")).as("n_overlap"))
-      .select(col("probe_id"), col("n_overlap"))
-  }
+                     idCol: String, vecCol: String, k: Int): DataFrame =
+    CellSearch.recall(sq8Coded(corpus, vecCol),
+      probes.select(col(idCol).as("probe_id"),
+        col(vecCol).cast("array<double>").as("q")),
+      vecCol, idCol, "adist", adcDist, k)
 
   /** Persist SQ8 params as a 1-row parquet artifact — the train-once
     * half of the incremental matrix (like CellIndex / LSH sigs): a

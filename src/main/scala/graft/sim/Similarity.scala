@@ -144,11 +144,8 @@ object Similarity {
                   probeId: Long, nprobe: Int, k: Int,
                   numCells: Int = 0, refineIters: Int = 1,
                   index: Option[CellIndex] = None): DataFrame = {
-    val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
-        norm(col(vecCol)).as("nrm"))
-      .filter(col("v").isNotNull && finiteNorm(col("nrm")))
-    val cents = index.map(_.centroids).getOrElse(AutoBlock.fitCells(base,
-      AutoBlock.resolveCells(numCells, base.count()), refineIters))
+    val base = CellSearch.normed(emb, idCol, vecCol)
+    val cents = CellSearch.cells(base, numCells, refineIters, index)
     // a missing probe id returns an EMPTY result, matching cosineTopK
     // (whose probe-frame join just matches nothing) instead of throwing
     val probeRows = base.filter(col("id") === probeId)
@@ -164,9 +161,7 @@ object Similarity {
       .map { case (c, i) => i -> -AutoBlock.angle(c, probeVec) }
       .sortBy { case (i, negAng) => (-negAng, i) } // nearest first, stable
       .take(nprobe).map(_._1)
-    val assigned = base.withColumn("cell",
-      AutoBlock.nearestCellStruct(cents, col("v"), col("nrm")).getField("cell"))
-    assigned
+    CellSearch.assign(base, cents, "v", "nrm", "cell")
       .filter(col("cell").isin(topCells.toSeq: _*) && col("id") =!= probeId)
       // limit(1) matches the probeRows collect above: if the id column
       // ever carried duplicates, both uses agree on ONE probe row
@@ -244,27 +239,17 @@ object Similarity {
                    probes: DataFrame, probeIdCol: String, probeVecCol: String,
                    nprobe: Int, k: Int, numCells: Int, refineIters: Int,
                    index: Option[CellIndex], lateFetch: Boolean): DataFrame = {
-    val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
-        norm(col(vecCol)).as("nrm"))
-      .filter(col("v").isNotNull && finiteNorm(col("nrm")))
-    val p0 = probes.select(col(probeIdCol).as("pid"), col(probeVecCol).as("pv"),
-        norm(col(probeVecCol)).as("pnrm"))
-      .filter(col("pv").isNotNull && finiteNorm(col("pnrm")))
-    val cents = index.map(_.centroids).getOrElse(AutoBlock.fitCells(base,
-      AutoBlock.resolveCells(numCells, base.count()), refineIters))
+    val base = CellSearch.normed(emb, idCol, vecCol)
+    val p0 = CellSearch.normed(probes, probeIdCol, probeVecCol,
+      ("pid", "pv", "pnrm"))
+    val cents = CellSearch.cells(base, numCells, refineIters, index)
     if (cents.isEmpty)
       return p0.select(col("pid"), col("pid").as("id"),
         lit(0.0).as("cos_sim"), lit(1).as("rn")).limit(0)
-    val assigned = base.withColumn("cell",
-      AutoBlock.nearestCellStruct(cents, col("v"), col("nrm")).getField("cell"))
-    // reference-object router (r20): plan-size O(1) in K, order
-    // pinned identical to the old K-struct sort_array construction
-    val routed = p0
-      .withColumn("_cells", AutoBlock.routedCellIds(cents, col("pv"),
-        col("pnrm"), math.min(nprobe, cents.length)))
-      .select(col("pid"), col("pv"), col("pnrm"),
-        explode(col("_cells")).as("cell"))
-    val cand =
+    val assigned = CellSearch.assign(base, cents, "v", "nrm", "cell")
+    val routed = CellSearch.routed(p0, cents, "pv", "pnrm", nprobe,
+      Seq("pid", "pv", "pnrm"), "cell")
+    val pairs =
       if (lateFetch) {
         // keys-only cell join, then per-side vector fetch by id — the
         // rejected shape (see ivfTopKBatchLateFetch's doc comment)
@@ -273,14 +258,10 @@ object Similarity {
           .select(col("pid"), col("id"))
           .join(p0, Seq("pid"))
           .join(base, Seq("id"))
-          .select(col("pid"), col("id"),
-            round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
-              .as("cos_sim"))
-      } else
-        routed.join(assigned, Seq("cell"))
-          .select(col("pid"), col("id"),
-            round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
-              .as("cos_sim"))
+      } else routed.join(assigned, Seq("cell"))
+    val cand = pairs.select(col("pid"), col("id"),
+      round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
+        .as("cos_sim"))
     graft.ops.TopK.topKPerGroup(cand, Seq("pid"),
         Seq(("cos_sim", false), ("id", true)), k)
       .orderBy(col("pid"), col("rn"))

@@ -75,10 +75,6 @@ object TextOps {
   def stopwordCount(c: Column): Column =
     size(filter(words(lower(c)), w => w.isInCollection(Stopwords))).cast("long")
 
-  /** Characters remaining after stripping whitespace. */
-  def nonWsChars(c: Column): Column =
-    length(regexp_replace(c, "\\s", "")).cast("long")
-
   def punctCount(c: Column): Column =
     (length(c) - length(regexp_replace(c, "[.,;:!?]", ""))).cast("long")
 
