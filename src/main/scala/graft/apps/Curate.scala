@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   * computed twice; stage boundaries cut the lineage by default
   * ([[graft.ops.StageCut]] — the composed plan otherwise re-enters
   * Catalyst analysis at every downstream action), and cleanup follows
-  * StageCut's contract (GC under the default cut; explicit unpersist
-  * under `spark.graft.stageCutLineage=false`). */
+  * StageCut's contract ([[graft.ops.StageCut.release]]). */
 object Curate {
 
   /** Per-stage row counts + the final corpus profile. */
@@ -106,11 +105,11 @@ object Curate {
     * signature probe and the decontamination gram set already make) —
     * and the contract is ENFORCED by [[graft.ops.ProbeGuard]]'s
     * TIERED shape ([[graft.ops.ProbeGuard.standingHits]]): the batch
-    * key set is counted first; above `graft.probe.maxKeys` the
+    * key set is counted first; above `spark.graft.probe.maxKeys` the
     * standing scan is Bloom-reduced instead of broadcast-probed (the
     * corpus still never exchanges at its own scale — only candidate
     * rows ride the semi-join shuffle); and only beyond
-    * `graft.probe.bloomMaxKeys` does the plan fall back to the full
+    * `spark.graft.probe.bloomMaxKeys` does the plan fall back to the full
     * sort-merge, loudly. One count gates the whole shape — the hit
     * set is a subset of the guarded key set, so it inherits the
     * bound (and keeps the broadcast hint only in the probe tier). */
@@ -413,7 +412,7 @@ object Curate {
     val stage = (df: DataFrame) => graft.ops.StageCut(df)
     val ledgerFrags = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def frag(df: => DataFrame): Unit = if (keepLedger) {
-      ledgerFrags += graft.ops.StageCut.materialize(stage(df))
+      ledgerFrags += stage(df)
     }
     def noWin = lit(null).cast(newVecs.schema(idCol).dataType).as("winner_id")
 
@@ -487,8 +486,7 @@ object Curate {
     }
     val nearDrops =
       if (keepLedger) {
-        Some(graft.ops.StageCut.materialize(
-          stage(batchNearDrops(exact, corpus, idCol, embCol, m3))))
+        Some(stage(batchNearDrops(exact, corpus, idCol, embCol, m3)))
       } else None
     val curated = nearDrops
       .map(d => exact.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
@@ -517,8 +515,7 @@ object Curate {
 
     val ledger =
       if (keepLedger) {
-        val l = graft.ops.StageCut.materialize(
-          stage(ledgerFrags.reduce(_.unionByName(_))))
+        val l = stage(ledgerFrags.reduce(_.unionByName(_)))
         ledgerFrags.foreach(graft.ops.StageCut.release)
         Some(l)
       } else None
@@ -589,7 +586,7 @@ object Curate {
     val stage = (df: DataFrame) => graft.ops.StageCut(df)
     val ledgerFrags = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def frag(df: => DataFrame): Unit = if (keepLedger) {
-      ledgerFrags += graft.ops.StageCut.materialize(stage(df))
+      ledgerFrags += stage(df)
     }
     def noWin = lit(null).cast(newMedia.schema(idCol).dataType).as("winner_id")
 
@@ -646,9 +643,8 @@ object Curate {
     // with corpusSigs supplied)
     val nearDrops =
       if (keepLedger) {
-        Some(graft.ops.StageCut.materialize(
-          stage(batchNearDrops(exact, corpus, idCol, payloadCol,
-            method, corpusSigs))))
+        Some(stage(batchNearDrops(exact, corpus, idCol, payloadCol,
+          method, corpusSigs)))
       } else None
     val curated = nearDrops
       .map(d => exact.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
@@ -678,8 +674,7 @@ object Curate {
 
     val ledger =
       if (keepLedger) {
-        val l = graft.ops.StageCut.materialize(
-          stage(ledgerFrags.reduce(_.unionByName(_))))
+        val l = stage(ledgerFrags.reduce(_.unionByName(_)))
         ledgerFrags.foreach(graft.ops.StageCut.release)
         Some(l)
       } else None
@@ -855,7 +850,7 @@ object Curate {
     val stage = (df: DataFrame) => graft.ops.StageCut(df)
     val ledgerFrags = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def frag(df: => DataFrame): Unit = if (keepLedger) {
-      ledgerFrags += graft.ops.StageCut.materialize(stage(df))
+      ledgerFrags += stage(df)
     }
     def noWin = lit(null).cast(newDocs.schema(idCol).dataType).as("winner_id")
 
@@ -921,9 +916,8 @@ object Curate {
     // rows once and shares them with the anti-join.
     val nearDrops =
       if (keepLedger) {
-        Some(graft.ops.StageCut.materialize(
-          stage(batchNearDrops(exact, corpus, idCol, textCol,
-            method, corpusSigs))))
+        Some(stage(batchNearDrops(exact, corpus, idCol, textCol,
+          method, corpusSigs)))
       } else None
     val curated = nearDrops
       .map(d => exact.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
@@ -956,8 +950,7 @@ object Curate {
 
     val ledger =
       if (keepLedger) {
-        val l = graft.ops.StageCut.materialize(
-          stage(ledgerFrags.reduce(_.unionByName(_))))
+        val l = stage(ledgerFrags.reduce(_.unionByName(_)))
         ledgerFrags.foreach(graft.ops.StageCut.release)
         Some(l)
       } else None
@@ -977,10 +970,11 @@ object Curate {
   * ignored; validity replaces the quality stage); `dhash:<maxHamming>`
   * switches to the MEDIA pipeline ([[Curate.runMedia]] over
   * `<sfDir>/media.parquet` with (media_id, payload) columns). With a
-  * `checkpointDir` the near-dup clustering runs inside
-  * [[graft.dedup.Dedup.withReliableClusters]] — fault-tolerant
-  * parquet-snapshot rounds on a real cluster, every snapshot cleaned
-  * up once the curated output is written. */
+  * `checkpointDir` the whole run is inside
+  * [[graft.ops.StageCut.withReliableCuts]]: every stage cut is a
+  * reliable checkpoint and the near-dup clustering runs
+  * parquet-snapshot rounds — fault-tolerant on a real cluster, every
+  * file cleaned up once the curated output is written. */
 object CurateMain {
 
   private[apps] def parseMethod(s: String): SimilarityMethod = s match {
@@ -1036,7 +1030,7 @@ object CurateMain {
     }
     rest.lift(2) match {
       case Some(ckpt) =>
-        graft.dedup.Dedup.withReliableClusters(spark, ckpt) { pipeline() }
+        graft.ops.StageCut.withReliableCuts(spark, ckpt) { pipeline() }
       case None => pipeline()
     }
     Mains.stop(spark)
@@ -1064,9 +1058,9 @@ object CurateMain {
   * [[graft.dedup.Dedup.dhashSignatures]] matching the method;
   * loud error with cosine), `fps=<parquet>` (stored corpus
   * fingerprint table), `index=<dir>` (stored [[graft.sim.CellIndex]],
-  * cosine only), `checkpoint=<dir>` (reliable clustering, as in
-  * `curate`), `ledger=on` (adds `ledger/` — the per-document drop
-  * audit of [[Curate.runIncrementalTracked]] /
+  * cosine only), `checkpoint=<dir>` (reliable stage cuts and
+  * clustering, as in `curate`), `ledger=on` (adds `ledger/` — the
+  * per-document drop audit of [[Curate.runIncrementalTracked]] /
   * [[Curate.runIncrementalEmbeddingTracked]]). */
 object CurateIncrementalMain {
 
@@ -1206,7 +1200,7 @@ object CurateIncrementalMain {
     }
     opts.get("checkpoint") match {
       case Some(ckpt) =>
-        graft.dedup.Dedup.withReliableClusters(spark, ckpt) { run() }
+        graft.ops.StageCut.withReliableCuts(spark, ckpt) { run() }
       case None => run()
     }
     Mains.stop(spark)

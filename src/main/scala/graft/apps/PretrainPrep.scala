@@ -59,9 +59,8 @@ import org.apache.spark.sql.functions._
   * Catalyst analysis at EVERY downstream action, and that constant
   * grows superlinearly with plan size — measured 4× on the q128 gate
   * (43.7 s chained-persist vs 10.8 s with stage cuts, identical
-  * results). `spark.graft.stageCutLineage=false` reverts to plain
-  * persist() for lineage-based recovery; see StageCut's scaladoc for
-  * the full trade.
+  * results). A checkpoint dir makes every cut reliable; see StageCut's
+  * scaladoc for the recovery trade.
   *
   * The q128 gate pins stages 1-6 + 8-9 end-to-end against a DuckDB
   * oracle; `PretrainPrepSpec` pins run() == the hand-composed
@@ -259,7 +258,7 @@ object PretrainPrep {
           keepArtifacts: Boolean,
           keepLedger: Boolean,
           log: String => Unit): Tracked[Report] = {
-    // stage boundary: materialize + cut lineage (conf-revertible)
+    // stage boundary: materialize + cut lineage
     val stage = (df: DataFrame) => graft.ops.StageCut(df)
     require(spanN >= 1, s"spanN must be >= 1, got $spanN")
     require(spanMinDocs >= 2, s"spanMinDocs must be >= 2, got $spanMinDocs")
@@ -269,13 +268,12 @@ object PretrainPrep {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     // drop-ledger plumbing: each fragment is an id-column frame built
     // from frames alive at its stage, materialized BEFORE those parents
-    // are released — the StageCut ordering contract
-    // ([[graft.ops.StageCut.materialize]]: no redundant count job when
-    // the cut path already materialized eagerly). Fragments union into
-    // one final ledger at the end.
+    // are released — the StageCut ordering contract (the cut is
+    // eager, so no extra count job). Fragments union into one final
+    // ledger at the end.
     val ledgerFrags = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def frag(df: => DataFrame): Unit = if (keepLedger) {
-      ledgerFrags += graft.ops.StageCut.materialize(stage(df))
+      ledgerFrags += stage(df)
     }
     def noWin = lit(null).cast(docs.schema(idCol).dataType).as("winner_id")
 
@@ -405,9 +403,8 @@ object PretrainPrep {
       idCol, textCol, method)
     val nearPairs =
       if (keepLedger)
-        Some(graft.ops.StageCut.materialize(
-          stage(clusters.filter(col("cluster") =!= col("id"))
-            .select(col("id").as(idCol), col("cluster").as("_win")))))
+        Some(stage(clusters.filter(col("cluster") =!= col("id"))
+          .select(col("id").as(idCol), col("cluster").as("_win"))))
       else None
     val dropIds = nearPairs.map(_.select(col(idCol)))
       .getOrElse(clusters.filter(col("cluster") =!= col("id"))
@@ -539,8 +536,7 @@ object PretrainPrep {
 
     val ledger =
       if (keepLedger) {
-        val l = graft.ops.StageCut.materialize(
-          stage(ledgerFrags.reduce(_.unionByName(_))))
+        val l = stage(ledgerFrags.reduce(_.unionByName(_)))
         ledgerFrags.foreach(graft.ops.StageCut.release)
         Some(l)
       } else None
@@ -739,10 +735,10 @@ object PretrainPrep {
           log: String => Unit): Tracked[IncReport] = {
     val stage = (df: DataFrame) => graft.ops.StageCut(df)
     // drop-ledger plumbing — same materialize-before-release contract
-    // as runImpl's (StageCut.materialize: no redundant count job)
+    // as runImpl's
     val ledgerFrags = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def frag(df: => DataFrame): Unit = if (keepLedger) {
-      ledgerFrags += graft.ops.StageCut.materialize(stage(df))
+      ledgerFrags += stage(df)
     }
     def noWin =
       lit(null).cast(newDocs.schema(idCol).dataType).as("winner_id")
@@ -885,9 +881,8 @@ object PretrainPrep {
     val corpusText = corpus.select(col(idCol), col("clean_text").as(textCol))
     val nearDrops =
       if (keepLedger)
-        Some(graft.ops.StageCut.materialize(
-          stage(Curate.batchNearDrops(nearBase, corpusText,
-            idCol, textCol, method, corpusSigs))))
+        Some(stage(Curate.batchNearDrops(nearBase, corpusText,
+          idCol, textCol, method, corpusSigs)))
       else None
     val near = nearDrops
       .map(d => nearBase.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
@@ -1033,8 +1028,7 @@ object PretrainPrep {
 
     val ledger =
       if (keepLedger) {
-        val l = graft.ops.StageCut.materialize(
-          stage(ledgerFrags.reduce(_.unionByName(_))))
+        val l = stage(ledgerFrags.reduce(_.unionByName(_)))
         ledgerFrags.foreach(graft.ops.StageCut.release)
         Some(l)
       } else None

@@ -377,10 +377,10 @@ object Dedup {
     // daily run. The contract is enforced by [[graft.ops.ProbeGuard]]'s
     // TIERED shape: the batch band rows are counted first (one agg
     // over the batch signature cache — the corpus side is never
-    // scanned by the guard); over graft.probe.maxKeys the corpus band
+    // scanned by the guard); over spark.graft.probe.maxKeys the corpus band
     // index is Bloom-reduced at its scan instead (the exchange then
     // carries ~candidate rows, not the corpus); only beyond
-    // graft.probe.bloomMaxKeys does the WHOLE plan revert to the
+    // spark.graft.probe.bloomMaxKeys does the WHOLE plan revert to the
     // pre-probe sort-merge shape, loudly — both this join and the
     // verify fetch below, whose candidate id set is only batch-bounded
     // when the band rows are.
@@ -505,6 +505,15 @@ object Dedup {
     }
   }
 
+  /** Runtime conf: the edge count up to which [[dupClusters]] solves
+    * the components with one driver-side union-find (<= 0 always runs
+    * the distributed loop). */
+  val LocalMaxEdgesKey = "spark.graft.clusters.localMaxEdges"
+
+  /** Default for [[LocalMaxEdgesKey]]: 500k doubled edges ≈ 8 MB
+    * collected. */
+  val DefaultLocalMaxEdges = 500000L
+
   /** Duplicate CLUSTERS from a pair list: connected components by
     * iterative min-label propagation (each node's label becomes the min
     * label among itself and its neighbors, to fixpoint). No GraphX —
@@ -527,7 +536,8 @@ object Dedup {
     * the edge list + 2 round snapshots on disk, not D+1. The final
     * round's files back the returned DataFrame and remain until the
     * caller clears the checkpoint dir — wrap repeated calls in
-    * [[withReliableClusters]] to get that cleanup scoped and automatic.
+    * [[graft.ops.StageCut.withReliableCuts]] to get that cleanup scoped
+    * and automatic.
     * On local[*] leave the dir unset: localCheckpoint is both safe and
     * faster there. */
   def dupClusters(pairs: DataFrame, idA: String = "id_a",
@@ -579,8 +589,8 @@ object Dedup {
     // replicated round snapshots; it keeps the distributed loop
     // unconditionally so its materialization contract stays intact)
     val srcType = edges.schema("src").dataType
-    val localMaxEdges = spark.conf
-      .get("spark.graft.clusters.localMaxEdges", "500000").toLong
+    val localMaxEdges = graft.ops.ProbeGuard.longConf(spark,
+      LocalMaxEdgesKey, DefaultLocalMaxEdges)
     val integralId = srcType == org.apache.spark.sql.types.ByteType ||
       srcType == org.apache.spark.sql.types.ShortType ||
       srcType == org.apache.spark.sql.types.IntegerType ||
@@ -670,56 +680,6 @@ object Dedup {
     // the fixpoint depends only on the final round's snapshot
     edgesPath.foreach(deleteSnapshot)
     labels.select(col("id"), col("label").as("cluster")).orderBy(col("id"))
-  }
-
-  /** Scoped reliable-checkpoint clustering: sets `dir` as the
-    * checkpoint dir for the duration of `body` (every [[dupClusters]]
-    * call inside runs in the fault-tolerant parquet-snapshot mode) and
-    * on exit deletes the per-run `graft-dup-clusters-*` directories the
-    * calls left behind, then restores the previous checkpoint
-    * configuration.
-    *
-    * This closes [[dupClusters]]' one lifecycle gap: each reliable-mode
-    * call necessarily leaves its FINAL round's snapshot on disk (the
-    * returned DataFrame reads from it), so a long-lived session
-    * clustering many corpora accumulates one directory per call.
-    * Materialize results INSIDE the body (collect, write, or count on a
-    * persisted frame) — after the scope exits, the returned frames'
-    * disk backing is gone and re-evaluating them will fail loudly, not
-    * silently. */
-  def withReliableClusters[T](spark: org.apache.spark.sql.SparkSession,
-                              dir: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getCheckpointDir
-    sc.setCheckpointDir(dir)
-    // setCheckpointDir resolves to a fresh UUID subdir — capture the
-    // resolved path; the run dirs land directly under it
-    val resolved = sc.getCheckpointDir
-    try body
-    finally {
-      // the setter is private[spark] but public in bytecode; None
-      // restores the no-checkpoint-dir default. Guarded: a reflection
-      // failure on a future Spark must degrade to a warning, not throw
-      // from finally and mask the body's own result or exception.
-      try sc.getClass.getMethod("checkpointDir_$eq", classOf[Option[String]])
-        .invoke(sc, prev)
-      catch {
-        case scala.util.control.NonFatal(e) => System.err.println(
-          s"[graft.dedup] withReliableClusters: could not restore the " +
-            s"checkpoint dir (${e.getClass.getSimpleName}); it remains set " +
-            s"to '$dir' — subsequent dupClusters calls in this session " +
-            "will run in RELIABLE mode and leave snapshots under it")
-      }
-      try resolved.foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        val fs = p.getFileSystem(sc.hadoopConfiguration)
-        fs.listStatus(p).foreach { st =>
-          if (st.isDirectory &&
-              st.getPath.getName.startsWith("graft-dup-clusters-"))
-            fs.delete(st.getPath, true)
-        }
-      } catch { case scala.util.control.NonFatal(_) => () } // best-effort
-    }
   }
 
   /** SimHash-style 32-bit signature: per bit, majority vote over the
@@ -852,7 +812,7 @@ object Dedup {
     // one [[graft.ops.ProbeGuard]] count on the batch band rows gates
     // the WHOLE probe shape — the candidate id set broadcast below is
     // only batch-bounded when the band rows are (lshPlanAgainst shape,
-    // including its Bloom middle tier: over graft.probe.maxKeys the
+    // including its Bloom middle tier: over spark.graft.probe.maxKeys the
     // corpus band index and the verify fetch are Bloom-reduced at
     // their scans instead of broadcast-probed)
     val bandedA = capped(sigA, "new")

@@ -118,8 +118,7 @@ object EntityResolve {
         // frame is batch-sized; callers free it with StageCut.release
         // after consuming — or use [[withResolvedBatch]], which
         // enforces that pairing.
-        val out = graft.ops.StageCut.materialize(
-          graft.ops.StageCut(matched.unionByName(fresh)))
+        val out = graft.ops.StageCut(matched.unionByName(fresh))
         out
         // the fuzzy joins' OWN caches (the Bloom tier returns a
         // persisted result frame) are released in the finallys below,

@@ -171,7 +171,7 @@ object Fuzzy {
     * does not move on a daily run. The contract is ENFORCED by
     * [[graft.ops.ProbeGuard]]: the A-side key rows are counted first
     * (batch-scale — the guard never scans b), and above
-    * `graft.probe.maxKeys` the whole join reverts to the symmetric
+    * `spark.graft.probe.maxKeys` the whole join reverts to the symmetric
     * sort-merge shape, loudly — so a symmetric corpus-vs-corpus
     * caller that leaves the default on picks up the right shape from
     * the measured size rather than from a silent assumption. Pass

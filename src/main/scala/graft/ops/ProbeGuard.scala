@@ -2,7 +2,7 @@ package graft.ops
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.functions.{broadcast, col, xxhash64}
 import org.apache.spark.sql.types.BinaryType
@@ -38,20 +38,21 @@ import org.apache.spark.util.sketch.BloomFilter
   * parent; abusive callers pay one scan of the oversized frame — the
   * scan that saves the driver.
   *
-  * Cap: `graft.probe.maxKeys` (runtime conf), default
+  * Cap: `spark.graft.probe.maxKeys` (runtime conf), default
   * [[ProbeGuard.DefaultMaxKeys]]. Keyed probe rows serialize to
   * ~50-100 bytes, so the default 4M-row cap bounds a forced broadcast
   * at roughly 200-400 MB — comfortable on a production driver, far
   * past any daily-batch shape. Set it to 0 or negative to disable the
   * guard (always hint — the pre-guard behavior, for callers that have
-  * externally verified the size). The decision is baked into the
-  * returned plan at build time; changing the conf later re-decides
-  * only newly built plans.
+  * externally verified the size); every reader of the cap gives
+  * `<= 0` that one meaning. The decision is baked into the returned
+  * plan at build time; changing the conf later re-decides only newly
+  * built plans.
   */
 object ProbeGuard {
 
   /** Runtime conf key for the probe-broadcast row cap. */
-  val ConfKey = "graft.probe.maxKeys"
+  val ConfKey = "spark.graft.probe.maxKeys"
 
   /** Runtime conf key for the over-cap policy: `fallback` (default —
     * revert to the sort-merge shape, loud log), `fail` (throw the
@@ -66,7 +67,7 @@ object ProbeGuard {
     * failure: the fallback shuffles the standing table, which is
     * correct at any size but can quietly turn a minutes-run into
     * hours at corpus scale — visible only as a stderr line. */
-  val PolicyKey = "graft.probe.onOverflow"
+  val PolicyKey = "spark.graft.probe.onOverflow"
 
   /** Default cap on forced-broadcast probe rows (see object doc). */
   val DefaultMaxKeys: Long = 4000000L
@@ -76,53 +77,20 @@ object ProbeGuard {
   @volatile private[graft] var log: String => Unit =
     m => System.err.println(m)
 
-  private def cap(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(ConfKey) match {
+  /** The one reader of this engine's long-valued `spark.graft.*`
+    * knobs: the session value of `key`, or `dflt` when unset; a
+    * non-numeric value fails loudly, naming the key. */
+  private[graft] def longConf(spark: SparkSession, key: String,
+                              dflt: Long): Long =
+    spark.conf.getOption(key) match {
       case Some(v) =>
         try v.trim.toLong
         catch {
           case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$ConfKey must be a long, got '$v'")
+            s"$key must be a long, got '$v'")
         }
-      case None => DefaultMaxKeys
+      case None => dflt
     }
-
-  /** Counts `keys` and reports whether a forced broadcast is within
-    * the contract. `false` comes with a loud log line naming the site,
-    * the size, and the remedies — or, under `graft.probe.onOverflow=
-    * fail`, an IllegalStateException carrying the same guidance. One
-    * decision should gate one whole probe SHAPE: a plan whose
-    * candidate fetches are downstream of a guarded batch key set
-    * inherits its bound through the hot-bucket caps, so counting every
-    * derived frame again would add jobs without adding safety. */
-  def fits(keys: DataFrame, site: String): Boolean = {
-    val mx = cap(keys)
-    if (mx <= 0L) return true
-    val n = keys.count()
-    val ok = n <= mx
-    if (!ok) {
-      val msg = s"[probe-guard] $site: probe key set has $n rows, over " +
-        s"$ConfKey=$mx (a forced broadcast at this size risks driver " +
-        "OOM). This path is sized for daily-batch probes against a " +
-        "standing table; for a symmetric corpus-scale side use the " +
-        s"non-probe form, or raise $ConfKey if the driver is " +
-        "provisioned for it."
-      keys.sparkSession.conf.getOption(PolicyKey)
-          .getOrElse("fallback") match {
-        case "fail" | "fail-all" => throw new IllegalStateException(msg)
-        case "fallback" => log(msg + " Falling back to the shuffle join.")
-        case other => throw new IllegalArgumentException(
-          s"$PolicyKey must be 'fallback', 'fail' or 'fail-all', got '$other'")
-      }
-    }
-    ok
-  }
-
-  /** The hint-or-fallback form for a single join: `broadcast(keys)`
-    * within the contract, the bare frame (sort-merge fallback) above
-    * it. */
-  def hinted(keys: DataFrame, site: String): DataFrame =
-    if (fits(keys, site)) broadcast(keys) else keys
 
   // ---------------------------------------------- tiered (bloom) form
 
@@ -135,12 +103,12 @@ object ProbeGuard {
     * sort-merge. */
   sealed trait Shape
   object Shape {
-    /** Keys within `graft.probe.maxKeys`: force-broadcast the key set;
-      * the standing side is scanned by a broadcast hash join and never
-      * exchanged. */
+    /** Keys within `spark.graft.probe.maxKeys`: force-broadcast the
+      * key set; the standing side is scanned by a broadcast hash join
+      * and never exchanged. */
     case object Probe extends Shape
     /** Keys over the broadcast cap but within
-      * `graft.probe.bloomMaxKeys`: a Bloom filter over
+      * `spark.graft.probe.bloomMaxKeys`: a Bloom filter over
       * `xxhash64(join keys)` is built from the key set (one extra
       * aggregation over the batch side) and applied as a predicate on
       * the standing side's scan, so the rows the join then exchanges
@@ -151,71 +119,53 @@ object ProbeGuard {
     case object Bloom extends Shape
     /** Keys beyond both caps (or the capped filter would be too weak
       * to pay for itself): the pre-probe sort-merge shape. This is the
-      * tier `graft.probe.onOverflow=fail` guards — the only one that
-      * exchanges the standing table at its own scale. */
+      * tier `spark.graft.probe.onOverflow=fail` guards — the only one
+      * that exchanges the standing table at its own scale. */
     case object Shuffle extends Shape
   }
 
   /** Runtime conf: key-count ceiling for the Bloom tier (default
     * [[DefaultBloomMaxKeys]]; <= 0 disables the tier, restoring the
     * two-tier probe-or-shuffle behavior). */
-  val BloomKeysKey = "graft.probe.bloomMaxKeys"
-
-  /** Runtime conf: target false-positive rate for the Bloom tier
-    * (default [[DefaultBloomFpp]]). Only effectiveness, never
-    * correctness, depends on it. */
-  val BloomFppKey = "graft.probe.bloomFpp"
+  val BloomKeysKey = "spark.graft.probe.bloomMaxKeys"
 
   /** Runtime conf: hard cap on Bloom filter SIZE in bits (default
     * [[DefaultBloomMaxBits]]) — the filter is built executor-side in
     * partials of this size, merged on the driver, and shipped in the
     * filtering plan as a literal, so this bounds all three. When the
-    * cap forces fewer bits than the target fpp wants, the filter is
+    * cap forces fewer bits than [[DefaultBloomFpp]] wants, the filter is
     * built anyway at the (weaker) achievable fpp — unless that
     * exceeds 0.5, where filtering no longer pays and the decision
     * falls to [[Shape.Shuffle]]. */
-  val BloomBitsKey = "graft.probe.bloomMaxBits"
+  val BloomBitsKey = "spark.graft.probe.bloomMaxBits"
 
-  /** 64M keys: at the default fpp this is a ~32 MB filter (vs the
+  /** 64M keys: at [[DefaultBloomFpp]] this is a ~32 MB filter (vs the
     * multi-GB broadcast relation the same keys would need), still a
     * one-literal ship to every executor. */
   val DefaultBloomMaxKeys: Long = 64000000L
 
-  /** 1% false positives ~= 9.6 bits/key: the standing side's exchange
-    * shrinks to matches + 1% of the standing row count. */
+  /** The Bloom tier's target false-positive rate — only its
+    * effectiveness, never correctness, depends on it. 1% ~= 9.6
+    * bits/key: the standing side's exchange shrinks to matches + 1% of
+    * the standing row count. */
   val DefaultBloomFpp: Double = 0.01
 
   /** 2^28 bits = 32 MB. At the 64M-key ceiling this degrades fpp to
     * ~0.15 — still a ~7x exchange reduction. */
   val DefaultBloomMaxBits: Long = 1L << 28
 
-  private def longConf(df: DataFrame, key: String, dflt: Long): Long =
-    df.sparkSession.conf.getOption(key) match {
-      case Some(v) =>
-        try v.trim.toLong
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$key must be a long, got '$v'")
-        }
-      case None => dflt
-    }
-
-  private def doubleConf(df: DataFrame, key: String, dflt: Double): Double =
-    df.sparkSession.conf.getOption(key) match {
-      case Some(v) =>
-        try v.trim.toDouble
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$key must be a double, got '$v'")
-        }
-      case None => dflt
-    }
-
   /** One eager count of `keys` -> the tier the whole shape runs in,
     * plus the counted size (the Bloom build reuses it for sizing).
-    * [[fits]]' overflow policy applies only when the decision lands on
-    * [[Shape.Shuffle]] — the Bloom tier is a designed regime, not a
-    * contract breach, and logs an info line instead.
+    * Within the cap the key set is force-broadcast; above it the
+    * decision falls to the Bloom tier or, beyond that, the shuffle —
+    * with a loud log line naming the site, the size and the knobs.
+    * The `fail` overflow policy applies only when the decision lands
+    * on [[Shape.Shuffle]] — the Bloom tier is a designed regime, not
+    * a contract breach, and logs an info line instead. One decision
+    * should gate one whole probe SHAPE: a plan whose candidate
+    * fetches are downstream of a guarded batch key set inherits its
+    * bound through the hot-bucket caps, so counting every derived
+    * frame again would add jobs without adding safety.
     *
     * `keysUpperBound` (r21): a caller-known SOUND upper bound on the
     * key count (e.g. the batch row count a pipeline stage already
@@ -230,14 +180,14 @@ object ProbeGuard {
     * bound. */
   def shapeOf(keys: DataFrame, site: String,
               keysUpperBound: Long = -1L): (Shape, Long) = {
-    val mx = cap(keys)
+    val spark = keys.sparkSession
+    val mx = longConf(spark, ConfKey, DefaultMaxKeys)
     if (mx <= 0L) return (Shape.Probe, -1L)
     if (keysUpperBound >= 0L && keysUpperBound <= mx)
       return (Shape.Probe, keysUpperBound)
     val n = keys.count()
     if (n <= mx) return (Shape.Probe, n)
-    val policy = keys.sparkSession.conf.getOption(PolicyKey)
-      .getOrElse("fallback")
+    val policy = spark.conf.getOption(PolicyKey).getOrElse("fallback")
     require(Set("fallback", "fail", "fail-all").contains(policy),
       s"$PolicyKey must be 'fallback', 'fail' or 'fail-all', got '$policy'")
     if (policy == "fail-all")
@@ -247,12 +197,11 @@ object ProbeGuard {
           "over-broadcast tier (Bloom included) — this deployment " +
           "treats the cap as a hard SLA tripwire. Shrink the batch, " +
           s"raise $ConfKey, or relax the policy to 'fail'/'fallback'.")
-    val bloomMax = longConf(keys, BloomKeysKey, DefaultBloomMaxKeys)
-    val fpp = doubleConf(keys, BloomFppKey, DefaultBloomFpp)
-    val maxBits = longConf(keys, BloomBitsKey, DefaultBloomMaxBits)
+    val bloomMax = longConf(spark, BloomKeysKey, DefaultBloomMaxKeys)
+    val maxBits = longConf(spark, BloomBitsKey, DefaultBloomMaxBits)
     val bits =
       if (bloomMax > 0L && n <= bloomMax)
-        math.min(BloomFilter.optimalNumOfBits(n, fpp), maxBits)
+        math.min(BloomFilter.optimalNumOfBits(n, DefaultBloomFpp), maxBits)
       else 0L
     // achievable fpp at `bits`, optimal hash count: ~0.6185^(bits/n)
     val effFpp =
@@ -292,10 +241,10 @@ object ProbeGuard {
   def bloomPredicate(keys: DataFrame, joinCols: Seq[String], n: Long,
                      site: String): Column = {
     require(joinCols.nonEmpty, s"$site: bloomPredicate needs join columns")
-    val fpp = doubleConf(keys, BloomFppKey, DefaultBloomFpp)
-    val maxBits = longConf(keys, BloomBitsKey, DefaultBloomMaxBits)
-    val bits = math.max(64L,
-      math.min(BloomFilter.optimalNumOfBits(math.max(n, 1L), fpp), maxBits))
+    val maxBits = longConf(keys.sparkSession, BloomBitsKey,
+      DefaultBloomMaxBits)
+    val bits = math.max(64L, math.min(
+      BloomFilter.optimalNumOfBits(math.max(n, 1L), DefaultBloomFpp), maxBits))
     val hash = xxhash64(joinCols.map(col): _*)
     val bf = keys.select(hash.as("_h")).stat
       .bloomFilter("_h", math.max(n, 1L), bits)

@@ -23,7 +23,7 @@ class RuntimeStats extends QueryExecutionListener {
   // session-conf tag (not a thread-local property: listener callbacks
   // run on the listener-bus thread, which doesn't see local properties)
   private def tagOf(qe: QueryExecution): String =
-    qe.sparkSession.conf.getOption("graft.stats.tag").getOrElse("default")
+    qe.sparkSession.conf.getOption(RuntimeStats.TagKey).getOrElse("default")
 
   override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
     val t = tags.computeIfAbsent(tagOf(qe), _ => Tag())
@@ -50,8 +50,11 @@ class RuntimeStats extends QueryExecutionListener {
 }
 
 object RuntimeStats {
+  /** Session conf key naming the tag subsequent actions count under. */
+  val TagKey = "spark.graft.stats.tag"
+
   /** Install on a session; tag subsequent actions via
-    * `spark.conf.set("graft.stats.tag", ...)`. */
+    * `spark.conf.set(RuntimeStats.TagKey, ...)`. */
   def install(spark: SparkSession): RuntimeStats = {
     val s = new RuntimeStats
     spark.listenerManager.register(s)

@@ -1,11 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
-/** Pipeline STAGE BOUNDARY: materialize a stage's frame and — when the
-  * composed plan has grown past a threshold — cut its lineage. The
-  * multi-stage pipelines ([[graft.apps.Curate]],
+/** Pipeline STAGE BOUNDARY: materialize a stage's frame and cut its
+  * lineage. The multi-stage pipelines ([[graft.apps.Curate]],
   * [[graft.apps.PretrainPrep]]) chain 5-9 operators, each stage
   * persisted and counted; persist() alone leaves the LOGICAL plan
   * intact, so every downstream action re-enters Catalyst analysis over
@@ -15,150 +13,48 @@ import org.apache.spark.storage.StorageLevel
   * 10.8 s with stage cuts — identical results, all the difference in
   * plan re-analysis, none in data work.
   *
-  * The cut is NOT free, though: an eager localCheckpoint runs one
-  * dedicated materialization job and stores row-serialized blocks,
-  * where persist() caches the columnar InMemoryRelation on the same
-  * count() the pipeline already runs. apply() can therefore gate on
-  * the ANALYZED PLAN SIZE: below `spark.graft.stageCutMinNodes` nodes
-  * the frame is persisted and the lineage kept; at or above it the
-  * lineage is cut. The DEFAULT is cut-always ([[DefaultMinNodes]] = 0):
-  * round 13 set a 96-node gate off one driver measurement (a 3-stage
-  * embedding pipeline +1.6 s under unconditional cuts), but the
-  * round-16 re-measurement — all eight pipeline gates at sf0.1,
-  * min-of-2 timing, clean contention canaries, both settings — could
-  * not reproduce any persist win: cut-always won or tied EVERY gate
-  * (q118 8.36→5.82 s, q129 27.6→24.1, q72 16.5→14.6, q70 11.8→10.3,
-  * q65 5.4→4.1, q126 6.7→6.1, q71/q128 neutral; −11.6 s over the
-  * set). Set `stageCutMinNodes` above your deepest short pipeline to
-  * re-enable the persist gate on workloads where it measures better.
+  * Every boundary cuts. A persist path gated on the analyzed-plan size
+  * was tried (round 13, a 96-node gate); the round-16 A/B — all eight
+  * pipeline gates at sf0.1, min-of-2 timing, clean contention canaries
+  * — found cut-always winning or tying EVERY gate (q118 8.36→5.82 s,
+  * q129 27.6→24.1, q72 16.5→14.6, q70 11.8→10.3, q65 5.4→4.1, q126
+  * 6.7→6.1, q71/q128 neutral; −11.6 s over the set), so it is gone.
   *
   * The recovery trade: a LOCALLY checkpointed stage cannot be
   * recomputed after executor loss (the job fails and the driver
   * retries the run). Every pipeline stage in this engine is
   * deterministic (seeded hashes, min-id winners), so a retry
   * reproduces the identical output — acceptable on local[*] and small
-  * clusters. On a large cluster where executor churn is routine, set
-  * `spark.graft.stageCutMode=reliable` (with
-  * `sparkContext.setCheckpointDir`, or use [[withReliableCuts]]): cuts
-  * then go through a RELIABLE checkpoint (HDFS/object-store files)
-  * that survives any executor loss, keeping the analysis win without
-  * the recovery trade. `spark.graft.stageCutLineage=false` disables
-  * cutting entirely (plain persist(MEMORY_AND_DISK) — same storage
-  * footprint, same results, bigger plans).
-  *
-  * `spark.graft.stageCutLog=true` prints one stderr line per boundary
-  * (analyzed-node count, decision, analysis + materialization ms) —
-  * the instrumentation that picked the default threshold.
+  * clusters. Where executor churn is routine, set a checkpoint dir
+  * (`sparkContext.setCheckpointDir`, or scope one with
+  * [[withReliableCuts]]): cuts then go through a RELIABLE checkpoint
+  * (HDFS/object-store files) that survives any executor loss, keeping
+  * the analysis win without the recovery trade — the same rule
+  * [[graft.dedup.Dedup.dupClusters]] applies to its round snapshots.
   *
   * Cleanup: release stage frames with [[release]] — plain
   * `Dataset.unpersist` only clears CacheManager entries and cannot
   * reach the RDD a cut frame was rebased onto (those blocks would
   * otherwise wait for driver GC via ContextCleaner — fine for a few
   * stages, unbounded for a long training loop). release also deletes a
-  * reliable cut's checkpoint files. Under the persist path, release
-  * degrades to a normal unpersist.
+  * reliable cut's checkpoint files.
   */
 object StageCut {
 
-  /** Legacy kill switch: "false" never cuts (persist everywhere). */
-  val ConfKey = "spark.graft.stageCutLineage"
-  /** What a cut does: "local" (default) = eager localCheckpoint;
-    * "reliable" = eager reliable checkpoint (needs a checkpoint dir). */
-  val ModeKey = "spark.graft.stageCutMode"
-  /** Analyzed-plan node threshold below which apply() persists instead
-    * of cutting. 0 = always cut. */
-  val MinNodesKey = "spark.graft.stageCutMinNodes"
-  /** "true" logs one stderr line per boundary. */
-  val LogKey = "spark.graft.stageCutLog"
-
-  /** Default for [[MinNodesKey]]: 0 = cut always (the round-16
-    * re-measurement above — the round-13 96-node gate lost 0.6-3.5 s
-    * on six of eight pipeline gates and won none). The knob stays for
-    * workloads where the persist path measures better.
-    *
-    * DEPLOYMENT NOTE — cut-always widens the recovery trade to every
-    * stage boundary: a local checkpoint has no lineage, so after ANY
-    * executor loss the blocks it held are unrecoverable and the job
-    * fails (previously short pipelines stayed on recoverable persist
-    * under the 96-node gate). On preemptible/spot executors or any
-    * cluster where churn is routine, either run under
-    * `stageCutMode=reliable` with a checkpoint dir ([[withReliableCuts]]
-    * — survives any executor loss) or raise [[MinNodesKey]] back to a
-    * persist-biased threshold and accept the analysis-time cost. The
-    * local[*] single-JVM default has no executor churn, which is why
-    * cut-always is the measured default here. */
-  val DefaultMinNodes = 0
-
-  /** Materialization contract: the CUT paths (local/reliable
-    * checkpoint) are EAGER — the returned frame's blocks exist when
-    * apply() returns. The PERSIST path (plans under [[MinNodesKey]])
-    * is LAZY — nothing materializes until the caller's first action —
-    * and its lineage may pass through a PREVIOUS stage's cut frame, so
-    * `release(input)` is only safe AFTER an action on the frame this
-    * returns: releasing first unpersists checkpoint blocks the lazy
-    * frame still needs, and a later recompute (block eviction,
-    * executor loss) fails hard because a released local checkpoint has
-    * no lineage to rebuild from. Every pipeline in this engine
-    * count()s the returned frame before releasing its input — new
-    * call sites must keep that order. */
-  def apply(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val conf = spark.conf
-    val t0 = System.nanoTime()
-    val analyzed = df.queryExecution.analyzed
-    var nodes = 0
-    analyzed.foreach(_ => nodes += 1)
-    val analyzeMs = (System.nanoTime() - t0) / 1e6
-    val minNodes = conf.get(MinNodesKey, DefaultMinNodes.toString).toInt
-    val cut = conf.get(ConfKey, "true").toBoolean && nodes >= minNodes
-    val mode = conf.get(ModeKey, "local")
-    val t1 = System.nanoTime()
-    val out =
-      if (!cut) df.persist(StorageLevel.MEMORY_AND_DISK)
-      else mode match {
-        case "reliable" =>
-          require(spark.sparkContext.getCheckpointDir.isDefined,
-            s"$ModeKey=reliable needs sparkContext.setCheckpointDir " +
-              "(or run inside StageCut.withReliableCuts)")
-          df.checkpoint(true)
-        case "local" => df.localCheckpoint(true)
-        case other => throw new IllegalArgumentException(
-          s"$ModeKey must be 'local' or 'reliable', got '$other'")
-      }
-    if (conf.get(LogKey, "false").toBoolean) {
-      val matMs = (System.nanoTime() - t1) / 1e6
-      System.err.println(
-        f"[stagecut] nodes=$nodes%d min=$minNodes%d cut=$cut%b " +
-          f"mode=$mode%s analyzeMs=$analyzeMs%.1f matMs=$matMs%.1f")
-    }
-    out
-  }
-
-  /** Ensure a frame RETURNED BY [[apply]] is materialized before its
-    * parents are released — WITHOUT paying a redundant job when the
-    * cut path already ran one. The eager cut paths return a root
-    * [[org.apache.spark.sql.execution.LogicalRDD]] whose blocks exist
-    * by apply()'s contract, so a follow-up `count()` is a whole extra
-    * job per stage boundary that reads every cached block just to
-    * throw the number away (the tracked pipelines pay it 7-10 times
-    * per run for ledger fragments whose counts nobody reads). Only the
-    * LAZY persist path (plans under [[MinNodesKey]]) still needs the
-    * count. Callers that DO consume the count keep calling `count()`
-    * directly. */
-  def materialize(df: DataFrame): DataFrame = {
-    df.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => ()
-      case _ => df.count()
-    }
-    df
-  }
+  /** Cut `df` EAGERLY: its blocks exist when this returns (one
+    * dedicated materialization job), so a caller may release the
+    * frames it was built from right away. A reliable `checkpoint` when
+    * the session has a checkpoint dir, else a `localCheckpoint`. */
+  def apply(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(true)
+    else df.localCheckpoint(true)
 
   /** Deterministically free a frame RETURNED BY [[apply]] (or any
     * eager checkpoint). Only a ROOT-level checkpoint RDD is released —
     * the shape apply() returns — so calling this on a frame that
     * merely CONTAINS someone else's cut frame in its plan (a derived
-    * frame, or a persist-path stage built over a caller's checkpointed
-    * input) never frees blocks the caller still needs; those get a
+    * frame) never frees blocks the caller still needs; those get a
     * normal unpersist. A reliable cut's checkpoint files are deleted
     * (best-effort — an already-gone directory is fine). */
   def release(df: DataFrame): Unit = {
@@ -178,45 +74,36 @@ object StageCut {
     df.unpersist()
   }
 
-  /** Run `body` with RELIABLE stage cuts scoped to `dir` — the
-    * cluster-deployment idiom ([[graft.dedup.Dedup.withReliableClusters]]'s
-    * shape): sets `stageCutMode=reliable` plus the checkpoint dir
-    * (which also flips any [[graft.dedup.Dedup.dupClusters]] inside to
-    * its reliable snapshot mode), restores both after, and deletes the
-    * scope's resolved checkpoint directory — setCheckpointDir creates
-    * a fresh UUID subdir per call, so everything under it (rdd-*
-    * checkpoints a release missed, cluster snapshots) belongs to this
-    * scope. Stage cuts inside survive executor loss; the auto
-    * threshold still applies. Materialize results INSIDE the body —
+  /** Run `body` with `dir` as the session's checkpoint dir — the
+    * cluster-deployment scope: every [[apply]] cut inside is a
+    * reliable checkpoint and every [[graft.dedup.Dedup.dupClusters]]
+    * call runs its parquet-snapshot rounds. On exit the previous
+    * checkpoint dir is restored and the scope's resolved directory is
+    * deleted — setCheckpointDir creates a fresh UUID subdir per call,
+    * so everything under it (rdd-* checkpoints a release missed, the
+    * `graft-dup-clusters-*` snapshots backing returned cluster frames)
+    * belongs to this scope. Materialize results INSIDE the body —
     * after the scope exits, a cut frame's disk backing is gone and
     * re-evaluating it fails loudly, not silently.
     *
-    * SINGLE-CALLER scope (the [[graft.dedup.Dedup.withReliableClusters]]
-    * caveat): the checkpoint dir and `stageCutMode` are GLOBAL session
-    * state — concurrent jobs on the same SparkSession would checkpoint
-    * into this scope's directory and lose their files when the scope
+    * SINGLE-CALLER scope: the checkpoint dir is GLOBAL session state —
+    * concurrent jobs on the same SparkSession would checkpoint into
+    * this scope's directory and lose their files when the scope
     * deletes it. Run one reliable scope at a time per session. */
   def withReliableCuts[T](spark: org.apache.spark.sql.SparkSession,
                           dir: String)(body: => T): T = {
     val sc = spark.sparkContext
-    val prevMode = spark.conf.getOption(ModeKey)
     val prevDir = sc.getCheckpointDir
-    spark.conf.set(ModeKey, "reliable")
     sc.setCheckpointDir(dir)
     val resolved = sc.getCheckpointDir
     try body
     finally {
-      prevMode match {
-        case Some(m) => spark.conf.set(ModeKey, m)
-        case None => spark.conf.unset(ModeKey)
-      }
       // the setter is private[spark] but public in bytecode; None
-      // restores the no-checkpoint-dir default (the withReliableClusters
-      // idiom). A reflection failure degrades to a warning — and SKIPS
-      // the directory delete below: the global checkpoint dir still
-      // points inside this scope's dir, and deleting it would leave
-      // session state aimed at a path every later checkpoint would
-      // fail to write.
+      // restores the no-checkpoint-dir default. A reflection failure
+      // degrades to a warning — and SKIPS the directory delete below:
+      // the global checkpoint dir still points inside this scope's
+      // dir, and deleting it would leave session state aimed at a path
+      // every later checkpoint would fail to write.
       val restored =
         try {
           sc.getClass.getMethod("checkpointDir_$eq", classOf[Option[String]])

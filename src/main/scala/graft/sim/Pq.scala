@@ -57,7 +57,7 @@ object Pq {
                  m: Int, ks: Int, seed: Int = 0): DataFrame = {
     require(m >= 1, s"m must be >= 1, got $m")
     require(ks >= 1, s"ks must be >= 1, got $ks")
-    val subDim = subDimOf(df, vecCol, m)
+    val subDim = subDimOf(df, vecCol, m, "pq: empty corpus")
     import org.apache.spark.sql.expressions.Window
     val u = graft.text.TextOps.md5_32(
       concat(lit(s"$seed|"), col("_id").cast("string")))
@@ -79,9 +79,12 @@ object Pq {
         col("sc.centroid").as("centroid"))
   }
 
-  private def subDimOf(df: DataFrame, vecCol: String, m: Int): Int = {
+  /** The subvector dimension of `df`'s vectors split `m` ways; `what`
+    * names the frame when it holds no non-null vector. */
+  private def subDimOf(df: DataFrame, vecCol: String, m: Int,
+                       what: String): Int = {
     val d = CellSearch.uniformDim(df, vecCol,
-      "pq: empty corpus — no dimension to split",
+      s"$what — no dimension to split",
       (lo, hi) => s"pq: ragged vectors (dims $lo..$hi)")
     require(d % m == 0, s"pq: dimension $d not divisible by m=$m")
     d / m
@@ -136,7 +139,7 @@ object Pq {
     require(g.getInt(3) == g.getInt(4),
       s"$site: codebook has ragged centroid dims " +
         s"(${g.getInt(3)}..${g.getInt(4)})")
-    val d = subDimOf(df, vecCol, m)
+    val d = subDimOf(df, vecCol, m, s"$site: no non-null vector")
     require(d == g.getInt(3),
       s"$site: codebook subvector dim ${g.getInt(3)} does not match " +
         s"the frame's dim/m = $d — the artifact belongs to a different " +
@@ -146,13 +149,16 @@ object Pq {
   /** Adds `codes: array<int>` — per subvector, the argmin-distance
     * centroid id (strict `<`: the SMALLEST cid wins exact ties).
     * Carries `cents` along for the ADC consumer, like
-    * [[Quantize.withSq8Codes]] carries mins/maxs. The codebook is
-    * validated against the frame ([[requireCompatible]]) — a frozen
-    * artifact from another embedding space fails here, loudly. */
+    * [[Quantize.withSq8Codes]] carries mins/maxs. Null vectors are
+    * dropped (they have no nearest centroid), as [[IvfPq.withCodes]]
+    * drops them. The codebook is validated against the frame
+    * ([[requireCompatible]]) — a frozen artifact from another
+    * embedding space fails here, loudly. */
   def withPqCodes(df: DataFrame, vecCol: String,
                   codebook: DataFrame): DataFrame = {
     requireCompatible(df, vecCol, codebook, "Pq.withPqCodes")
-    df.crossJoin(broadcast(nested(codebook)))
+    df.filter(col(vecCol).isNotNull)
+      .crossJoin(broadcast(nested(codebook)))
       .withColumn("codes",
         transform(sequence(lit(0), size(col("cents")) - 1), s => {
           val cs = element_at(col("cents"), s + 1)
@@ -225,7 +231,9 @@ object Pq {
     * (bounded-heap, cell-id tie-break), candidates come from ONE
     * cell-keyed join against the broadcast routing (each probe row
     * carrying its precomputed LUT), per-probe top-k is again a
-    * bounded heap. Returns `(probe_id, rank, idCol, pdist)`. */
+    * bounded heap. Null and zero-norm probes are dropped, as in
+    * [[Quantize.ivfAdcTopKBatch]]. Returns
+    * `(probe_id, rank, idCol, pdist)`. */
   def ivfPqTopKBatch(corpus: DataFrame, probes: DataFrame,
                      idCol: String, vecCol: String, blockCol: String,
                      m: Int, ks: Int, nprobe: Int, k: Int,
@@ -234,8 +242,7 @@ object Pq {
     val cb = codebook.getOrElse(pqCodebook(corpus, idCol, vecCol, m, ks, seed))
     requireCompatible(probes, vecCol, cb, "Pq.ivfPqTopKBatch(probes)")
     val coded = withPqCodes(corpus, vecCol, cb).drop("cents")
-    val prep = withLut(probes.select(col(idCol).as("probe_id"),
-      col(vecCol).cast("array<double>").as("q"), col(vecCol).as("_pv")), cb)
+    val prep = withLut(CellSearch.probesNormed(probes, idCol, vecCol), cb)
     val routing = CellSearch.blockRouted(corpus, prep, vecCol, blockCol,
       nprobe, "lut")
     CellSearch.topK(CellSearch.candidates(coded, routing, blockCol, idCol,

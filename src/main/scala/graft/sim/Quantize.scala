@@ -43,10 +43,12 @@ object Quantize {
     * (x = max lands on 256 → 255; a constant dimension codes 0; the
     * low clamp matters when FROZEN params from [[saveParams]] code a
     * later batch whose values undershoot the trained range).
-    * Carries `mins`/`maxs` along for the ADC consumer. */
+    * Carries `mins`/`maxs` along for the ADC consumer. Null vectors
+    * are dropped (they have no code), as [[Pq.withPqCodes]] and
+    * [[IvfPq.withCodes]] drop them. */
   def withSq8Codes(df: DataFrame, vecCol: String,
                    params: DataFrame): DataFrame =
-    df.crossJoin(broadcast(params))
+    df.filter(col(vecCol).isNotNull).crossJoin(broadcast(params))
       .withColumn("codes", transform(col(vecCol), (x, i) => {
         val mn = element_at(col("mins"), i + 1)
         val mx = element_at(col("maxs"), i + 1)
@@ -129,14 +131,14 @@ object Quantize {
     * deterministic), candidates come from ONE cell-keyed join of the
     * coded corpus against the broadcast (probe, cell) routing table,
     * and the final per-probe top-k is again TopKPerGroup — no full
-    * sort, no corpus-sized shuffle beyond the cell join. Returns
-    * `(probe_id, rank, idCol, adist)`. */
+    * sort, no corpus-sized shuffle beyond the cell join. Null and
+    * zero-norm probes are dropped (cosine routing has no direction for
+    * them). Returns `(probe_id, rank, idCol, adist)`. */
   def ivfAdcTopKBatch(corpus: DataFrame, probes: DataFrame,
                       idCol: String, vecCol: String, blockCol: String,
                       nprobe: Int, k: Int): DataFrame = {
     val coded = sq8Coded(corpus, vecCol)
-    val prep = probes.select(col(idCol).as("probe_id"),
-      col(vecCol).cast("array<double>").as("q"), col(vecCol).as("_pv"))
+    val prep = CellSearch.probesNormed(probes, idCol, vecCol)
     val routing = CellSearch.blockRouted(corpus, prep, vecCol, blockCol,
       nprobe, "q")
     CellSearch.topK(CellSearch.candidates(coded, routing, blockCol, idCol,

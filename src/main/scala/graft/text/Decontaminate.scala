@@ -63,16 +63,14 @@ object Decontaminate {
     * each corpus row counts its distinct-gram hits in one codegen'd
     * scan expression ([[graft.functions.BenchGramCount]]) — zero
     * explode, zero exchange, the text never leaves its scan (6.10 s →
-    * 2.64 s on the q82 shape at sf0.1). The effective budget is
-    * `min(this, graft.probe.maxKeys)`, so forcing the ProbeGuard cap
-    * down (the ProbeGuardSpec fallback drills, a mispointed
-    * corpus-sized "benchmark") declines the row path and lands on the
-    * existing tiered probe/Bloom/sort-merge ladder unchanged. Set to
-    * 0 to disable the row path outright. */
-  val RowPathMaxGramsKey = "spark.graft.decontam.rowPathMaxGrams"
-
-  /** Default for [[RowPathMaxGramsKey]] — [[withContamination]]'s
-    * 2M-gram broadcast budget (a 13-gram eval suite sits far below). */
+    * 2.64 s on the q82 shape at sf0.1). It is [[withContamination]]'s
+    * 2M-gram broadcast budget (a 13-gram eval suite sits far below);
+    * the effective budget is `min(this, spark.graft.probe.maxKeys)`, so
+    * forcing the ProbeGuard cap down (the ProbeGuardSpec fallback
+    * drills, a mispointed corpus-sized "benchmark") declines the row
+    * path and lands on the existing tiered probe/Bloom/sort-merge
+    * ladder unchanged; a cap `<= 0` turns the guard off, as at every
+    * ProbeGuard site, and leaves this budget alone. */
   val DefaultRowPathMaxGrams = 2000000L
 
   /** Memoized COLLECTED gram sets for the row-path tier — bounded
@@ -93,18 +91,16 @@ object Decontaminate {
     * driver. */
   private def rowPathGrams(bench: DataFrame, textCol: String,
                            n: Int): Option[java.util.HashSet[String]] = {
-    val conf = bench.sparkSession.conf
-    val budget = math.min(math.min(
-      conf.get(RowPathMaxGramsKey, DefaultRowPathMaxGrams.toString).toLong,
-      conf.get(graft.ops.ProbeGuard.ConfKey,
-        graft.ops.ProbeGuard.DefaultMaxKeys.toString).toLong),
-      (Int.MaxValue - 2).toLong)
-    if (budget <= 0) return None
+    val cap = graft.ops.ProbeGuard.longConf(bench.sparkSession,
+      graft.ops.ProbeGuard.ConfKey, graft.ops.ProbeGuard.DefaultMaxKeys)
+    val budget =
+      if (cap <= 0L) DefaultRowPathMaxGrams
+      else math.min(DefaultRowPathMaxGrams, cap)
     val key = (bench.queryExecution.analyzed, textCol, n)
     gramSetCache.synchronized {
       val hit = gramSetCache.get(key)
       // a cached set only short-circuits when it fits the CURRENT
-      // budget — a session that lowered graft.probe.maxKeys after a
+      // budget — a session that lowered spark.graft.probe.maxKeys after a
       // larger run must still land on the tiered ladder
       if (hit != null && hit.size <= budget) return Some(hit)
     }

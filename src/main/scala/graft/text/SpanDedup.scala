@@ -193,7 +193,7 @@ object SpanDedup {
     * Scale shape: batch grams aggregate to per-hash counts (batch-
     * sized), and the corpus-vs-batch count join runs under the
     * [[graft.ops.ProbeGuard]] TIERED contract: within
-    * `graft.probe.maxKeys` the batch counts broadcast (the corpus
+    * `spark.graft.probe.maxKeys` the batch counts broadcast (the corpus
     * artifact streams through a scan-side hash join — zero exchange);
     * batch gram sets routinely EXCEED broadcast scale, and then the
     * Bloom tier filters the artifact's scan by a
@@ -201,7 +201,7 @@ object SpanDedup {
     * exchange the sort-merge join needs carries ~matching + fpp x
     * corpus rows instead of the whole artifact — bit-identical either
     * way (Bloom false positives fail the real join; false negatives
-    * are impossible). Beyond `graft.probe.bloomMaxKeys` the plan falls
+    * are impossible). Beyond `spark.graft.probe.bloomMaxKeys` the plan falls
     * back to the full sort-merge, loudly. The guard's count + Bloom
     * build re-evaluate the batch gram aggregation (one extra pass over
     * the batch text each — the pipelines hand this function a

@@ -259,8 +259,8 @@ object Unigram {
   private def emCounts(wf: DataFrame, vocab: Seq[Piece],
                        maxPieceLen: Int): Map[String, Long] = {
     val spark = wf.sparkSession
-    val maxExpr = spark.conf.get(EmExprMaxVocabKey,
-      DefaultEmExprMaxVocab.toString).toInt
+    val maxExpr = graft.ops.ProbeGuard.longConf(spark, EmExprMaxVocabKey,
+      DefaultEmExprMaxVocab)
     val counted =
       if (vocab.size <= maxExpr)
         wf.select(col("freq"),

@@ -7,11 +7,11 @@ import graft.ops.ProbeGuard
 /** The forced-broadcast probe contract must be SELF-ENFORCING and
   * degrade GRACEFULLY: every probe shape (corpus fingerprint probe,
   * LSH/Hamming band probes, the fuzzy key probe) counts its
-  * batch-derived key set and, above `graft.probe.maxKeys`, drops to
+  * batch-derived key set and, above `spark.graft.probe.maxKeys`, drops to
   * the Bloom tier (the standing side's scan is filtered by a
   * `might_contain` built from the keys — bit-identical, the standing
   * table still never exchanges at its own scale) and only beyond
-  * `graft.probe.bloomMaxKeys` to the sort-merge shape, loudly. Each
+  * `spark.graft.probe.bloomMaxKeys` to the sort-merge shape, loudly. Each
   * site test drives an over-threshold "batch" through BOTH degraded
   * tiers and asserts (a) the plan carries NO forced broadcast
   * (auto-broadcast is off, so any BroadcastExchange would be a hint)
@@ -57,20 +57,22 @@ class ProbeGuardSpec extends SparkSpec {
 
   // ---------------------------------------------------------- unit level
 
-  test("hinted: broadcast within cap, bare frame + loud log above it") {
+  test("tiered: broadcast within cap, no hint + loud log on the shuffle tier") {
     import spark.implicits._
     val keys = (1 to 100).toDF("k")
     val big = spark.range(0, 1000).select(col("id").as("k"))
+    def join(): DataFrame = {
+      val t = ProbeGuard.tiered(big, keys, Seq("k"), "spec-site")
+      t.standing.join(t.keys, Seq("k"))
+    }
     noAutoBroadcast {
       // within contract → the hint is attached
-      val okJoin = big.join(ProbeGuard.hinted(keys, "spec-site"), Seq("k"))
+      val okJoin = join()
       assert(planOf(okJoin).contains("BroadcastExchange"),
         "within the cap the probe must stay broadcast")
       // over contract → no hint, one warning naming the site and the knob
-      withCap("10") {
-        val (fbJoin, logs) = withLogCapture {
-          big.join(ProbeGuard.hinted(keys, "spec-site"), Seq("k"))
-        }
+      withShuffleTier("10") {
+        val (fbJoin, logs) = withLogCapture(join())
         assert(!planOf(fbJoin).contains("BroadcastExchange"),
           "over the cap the forced hint must be dropped:\n" + planOf(fbJoin))
         assert(logs.exists(m => m.contains("spec-site") &&
@@ -86,17 +88,17 @@ class ProbeGuardSpec extends SparkSpec {
       "same guidance; bad policy values are rejected") {
     import spark.implicits._
     val keys = (1 to 100).toDF("k")
-    withCap("10") {
+    withShuffleTier("10") {
       spark.conf.set(ProbeGuard.PolicyKey, "fail")
       try {
         val e = intercept[IllegalStateException] {
-          ProbeGuard.fits(keys, "spec-site")
+          ProbeGuard.shapeOf(keys, "spec-site")
         }
         assert(e.getMessage.contains("spec-site") &&
           e.getMessage.contains(ProbeGuard.ConfKey))
         spark.conf.set(ProbeGuard.PolicyKey, "explode")
         val e2 = intercept[IllegalArgumentException] {
-          ProbeGuard.fits(keys, "spec-site")
+          ProbeGuard.shapeOf(keys, "spec-site")
         }
         assert(e2.getMessage.contains(ProbeGuard.PolicyKey))
       } finally spark.conf.unset(ProbeGuard.PolicyKey)
@@ -106,9 +108,11 @@ class ProbeGuardSpec extends SparkSpec {
   test("cap <= 0 disables the guard; a non-numeric cap fails loudly") {
     import spark.implicits._
     val keys = (1 to 50).toDF("k")
-    withCap("0") {
-      val j = spark.range(0, 100).select(col("id").as("k"))
-        .join(ProbeGuard.hinted(keys, "spec-site"), Seq("k"))
+    withShuffleTier("0") {
+      val t = ProbeGuard.tiered(spark.range(0, 100).select(col("id").as("k")),
+        keys, Seq("k"), "spec-site")
+      assert(t.shape == ProbeGuard.Shape.Probe)
+      val j = t.standing.join(t.keys, Seq("k"))
       noAutoBroadcast {
         assert(planOf(j).contains("BroadcastExchange"),
           "cap 0 must disable the guard (always hint)")
@@ -116,7 +120,7 @@ class ProbeGuardSpec extends SparkSpec {
     }
     withCap("not-a-number") {
       val e = intercept[IllegalArgumentException] {
-        ProbeGuard.fits(keys, "spec-site")
+        ProbeGuard.shapeOf(keys, "spec-site")
       }
       assert(e.getMessage.contains(ProbeGuard.ConfKey))
     }
@@ -189,11 +193,14 @@ class ProbeGuardSpec extends SparkSpec {
         assert(e.getMessage.contains("spec-site") &&
           e.getMessage.contains("fail-all") &&
           e.getMessage.contains(ProbeGuard.ConfKey))
-        // fits() treats fail-all as fail
-        val e2 = intercept[IllegalStateException] {
-          ProbeGuard.fits(keys, "spec-site")
-        }
-        assert(e2.getMessage.contains("spec-site"))
+        // with the Bloom tier off it fails as under 'fail'
+        spark.conf.set(ProbeGuard.BloomKeysKey, "0")
+        try {
+          val e2 = intercept[IllegalStateException] {
+            ProbeGuard.tiered(keys, keys, Seq("k"), "spec-site")
+          }
+          assert(e2.getMessage.contains("spec-site"))
+        } finally spark.conf.unset(ProbeGuard.BloomKeysKey)
       } finally spark.conf.unset(ProbeGuard.PolicyKey)
       // within the broadcast cap the policy never fires
       spark.conf.set(ProbeGuard.PolicyKey, "fail-all")

@@ -157,7 +157,7 @@ class UploaderSpec extends SparkSpec {
 class RuntimeStatsSpec extends SparkSpec {
   test("collects per-tag execution counts and durations") {
     val stats = graft.ops.RuntimeStats.install(spark)
-    spark.conf.set("graft.stats.tag", "t1")
+    spark.conf.set("spark.graft.stats.tag", "t1")
     import spark.implicits._
     Seq(1, 2, 3).toDF("v").count()
     // listener delivery is async; poll briefly

@@ -127,33 +127,38 @@ class ClusterSpec extends SparkSpec {
     }
   }
 
-  test("withReliableClusters: repeated calls leave NO snapshots behind, config restored") {
+  test("withReliableCuts: cluster snapshots and cut files go on exit, dir restored") {
     val pairs1 = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val pairs2 = Seq((7L, 8L), (8L, 9L), (30L, 31L)).toDF("id_a", "id_b")
     val dir = java.nio.file.Files.createTempDirectory("graft-scope").toFile
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "suite assumes no global checkpoint dir")
+    def entries(prefix: String): Int = {
+      val walk = java.nio.file.Files.walk(dir.toPath)
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator())
+        .asScala.count(_.getFileName.toString.startsWith(prefix))
+      finally walk.close()
+    }
     try {
-      val (got1, got2) = Dedup.withReliableClusters(spark, dir.getAbsolutePath) {
-        // materialize INSIDE the scope — the snapshots backing these
+      val (got1, got2) = graft.ops.StageCut.withReliableCuts(spark,
+          dir.getAbsolutePath) {
+        // materialize INSIDE the scope — the files backing these
         // frames are deleted at scope exit
         val a = Dedup.dupClusters(pairs1).collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val b = Dedup.dupClusters(pairs2).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val cut = graft.ops.StageCut(Dedup.dupClusters(pairs2))
+        val b = cut.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(sc.getCheckpointDir.isDefined, "scope must set the dir")
+        assert(entries("graft-dup-clusters-") > 0 && entries("rdd-") > 0,
+          "inside the scope clustering and cuts must both write files")
         (a, b)
       }
       assert(got1 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
       assert(got2 == Map(7L -> 7L, 8L -> 7L, 9L -> 7L, 30L -> 30L, 31L -> 30L))
       assert(sc.getCheckpointDir.isEmpty, "scope must restore the previous config")
-      // no graft-dup-clusters run dirs may survive the scope
-      val walk = java.nio.file.Files.walk(dir.toPath)
-      val leftover =
-        try scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator())
-          .asScala.count(_.getFileName.toString.startsWith("graft-dup-clusters-"))
-        finally walk.close()
-      assert(leftover == 0, s"snapshot dirs accumulated: $leftover")
+      // no snapshot or checkpoint file may survive the scope
+      val left = (entries("graft-dup-clusters-"), entries("rdd-"))
+      assert(left == (0, 0), s"files accumulated (snapshots, cuts): $left")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 }

@@ -1,22 +1,49 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** StageCut — the lineage-cut stage boundary: cut, persist and
-  * reliable modes must produce identical pipeline results (the confs
-  * only trade plan-analysis time against materialization cost and
-  * executor-loss recovery), the auto gate must persist small plans and
-  * cut large ones, and release must free what each mode allocated. */
+/** StageCut — the lineage-cut stage boundary: every boundary cuts
+  * eagerly, a checkpoint dir turns the local cut into a reliable one
+  * with identical results (the dir only trades storage for
+  * executor-loss recovery), and release must free what each cut
+  * allocated. */
 class StageCutSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withMinNodes[T](n: Int)(body: => T): T = {
-    spark.conf.set(StageCut.MinNodesKey, n.toString)
-    try body finally spark.conf.unset(StageCut.MinNodesKey)
+  private def isCut(df: DataFrame): Boolean =
+    df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+
+  /** Restores the no-checkpoint-dir default (the setter is
+    * private[spark] — public in bytecode). */
+  private def clearCheckpointDir(): Unit =
+    spark.sparkContext.getClass
+      .getMethod("checkpointDir_$eq", classOf[Option[String]])
+      .invoke(spark.sparkContext, None)
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("every boundary cuts: the returned frame is an eager root checkpoint") {
+    val small = spark.range(100).toDF("id")
+      .withColumn("x", col("id") * 2)
+      .filter(col("x") % 3 === 0)
+    var grown = small
+    (1 to 96).foreach { i => grown = grown.withColumn(s"c$i", col("id") + i) }
+    for (df <- Seq(small, grown)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val cut = StageCut(df)
+      assert(isCut(cut), "a boundary must cut the lineage at any plan size")
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
+        "the cut must hold its blocks when apply returns")
+      assert(cut.count() == df.count())
+      StageCut.release(cut)
+    }
   }
 
-  test("cut and persist modes produce identical pipeline results") {
+  test("a Curate run under withReliableCuts equals the local-cut run") {
     val docs = graft.Tables.load(spark, sf(), "documents")
       .select(col("doc_id"), col("source"), col("text"))
     def runOnce(): Seq[(Long, Long)] = {
@@ -26,108 +53,81 @@ class StageCutSpec extends SparkSpec {
       val ids = out.select(col("doc_id"),
           graft.text.TextOps.tokenCount(col("text")).as("nt"))
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
-      out.unpersist()
+      StageCut.release(out)
       assert(rep.afterNear == ids.size.toLong)
       ids
     }
-    val cut = withMinNodes(0) { runOnce() } // force cut at every boundary
-    spark.conf.set(StageCut.ConfKey, "false")
-    try {
-      val persisted = runOnce()
-      assert(cut == persisted,
-        "persist fallback diverged from the lineage-cut run")
-    } finally spark.conf.unset(StageCut.ConfKey)
-    val auto = runOnce() // default threshold: mixed persist/cut
-    assert(cut == auto, "auto-gated run diverged from the cut-always run")
+    val local = runOnce()
+    val dir = tempDir("graft-sc-curate")
+    val reliable = StageCut.withReliableCuts(spark, dir) { runOnce() }
+    assert(reliable == local, "reliable cuts diverged from the local-cut run")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }
 
   test("release frees the checkpointed RDD deterministically") {
-    withMinNodes(0) {
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val cut = StageCut(spark.range(1000).toDF("id"))
-      val added = sc.getPersistentRDDs.keySet -- before
-      assert(added.nonEmpty, "the cut persisted no RDD")
-      StageCut.release(cut)
-      val after = sc.getPersistentRDDs.keySet
-      assert(added.forall(!after.contains(_)),
-        "release left checkpoint blocks for GC (plain unpersist cannot " +
-          "reach a cut frame's RDD)")
-    }
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val cut = StageCut(spark.range(1000).toDF("id"))
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.nonEmpty, "the cut persisted no RDD")
+    StageCut.release(cut)
+    val after = sc.getPersistentRDDs.keySet
+    assert(added.forall(!after.contains(_)),
+      "release left checkpoint blocks for GC (plain unpersist cannot " +
+        "reach a cut frame's RDD)")
   }
 
-  test("gate: default cuts always; a raised threshold persists small " +
-      "plans and cuts past it; the kill switch never cuts") {
-    val small = spark.range(100).toDF("id")
-      .withColumn("x", col("id") * 2)
-      .filter(col("x") % 3 === 0)
-    def isCut(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.logical.collectLeaves()
-        .exists(_.getClass.getSimpleName.contains("LogicalRDD"))
-    // the round-16 default: cut always (the 96-node gate lost on six
-    // of eight pipeline gates in the A/B re-measurement and won none)
-    assert(StageCut.DefaultMinNodes == 0)
-    val cutDefault = StageCut(small)
-    assert(isCut(cutDefault), "the default gate must cut every boundary")
-    StageCut.release(cutDefault)
-    // a RAISED threshold restores the persist gate: a small plan stays
-    // on persist; composition compounds until a boundary crosses
-    // minNodes, then the cut resets analysis cost
-    withMinNodes(96) {
-      val kept = StageCut(small)
-      assert(!isCut(kept), "a small plan must persist under a 96 gate")
-      assert(kept.storageLevel.useMemory, "persist path must cache")
-      kept.unpersist()
-      var grown = small
-      (1 to 96).foreach { i =>
-        grown = grown.withColumn(s"c$i", col("id") + i)
-      }
-      val cut = StageCut(grown)
-      assert(isCut(cut), "a plan past the threshold must cut its lineage")
-      StageCut.release(cut)
-    }
-    spark.conf.set(StageCut.ConfKey, "false")
+  test("a session checkpoint dir gives a reliable cut equal to the local one") {
+    val df = spark.range(500).toDF("id")
+      .withColumn("v", col("id") * 7 % 13)
+    val local = StageCut(df)
+    val expected = local.as[(Long, Long)].collect().sorted
+    StageCut.release(local)
+    val dir = tempDir("graft-sc-dir")
+    val sc = spark.sparkContext
+    assert(sc.getCheckpointDir.isEmpty, "suite assumes no global checkpoint dir")
+    sc.setCheckpointDir(dir)
     try {
-      val never = StageCut(small)
-      assert(!isCut(never), s"${StageCut.ConfKey}=false must never cut")
-      never.unpersist()
-    } finally spark.conf.unset(StageCut.ConfKey)
+      val cut = StageCut(df)
+      val file = cut.queryExecution.analyzed match {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          lr.rdd.getCheckpointFile
+        case _ => None
+      }
+      assert(file.exists(_.contains(dir)),
+        s"with a checkpoint dir the cut must write under it, got $file")
+      assert(cut.as[(Long, Long)].collect().sorted.toSeq == expected.toSeq,
+        "reliable cut diverged from the local cut")
+      StageCut.release(cut)
+      assert(!new java.io.File(new java.net.URI(file.get)).exists(),
+        "release must delete a reliable cut's files")
+    } finally {
+      clearCheckpointDir()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
   }
 
   test("reliable mode checkpoints to the dir, equals local, and cleans up") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sc-rel")
-      .toString
+    val dir = tempDir("graft-sc-rel")
     val df = spark.range(500).toDF("id")
-      .withColumn("v", (col("id") * 7 % 13))
-    val expected = withMinNodes(0) {
+      .withColumn("v", col("id") * 7 % 13)
+    val expected = {
       val c = StageCut(df); val r = c.as[(Long, Long)].collect().sorted
       StageCut.release(c); r
     }
-    // without a checkpoint dir, reliable mode fails loudly
-    spark.conf.set(StageCut.ModeKey, "reliable")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        withMinNodes(0) { StageCut(df) }
-      }
-      assert(e.getMessage.contains("setCheckpointDir"))
-    } finally spark.conf.unset(StageCut.ModeKey)
     val got = StageCut.withReliableCuts(spark, dir) {
-      withMinNodes(0) {
-        val c = StageCut(df)
-        // the cut's data lives in FILES under the scope's resolved dir
-        val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-          .filter(p => p.getFileName.toString.startsWith("rdd-"))
-          .count()
-        assert(files > 0, "reliable cut wrote no checkpoint directory")
-        val r = c.as[(Long, Long)].collect().sorted
-        StageCut.release(c)
-        r
-      }
+      val c = StageCut(df)
+      // the cut's data lives in FILES under the scope's resolved dir
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => p.getFileName.toString.startsWith("rdd-"))
+        .count()
+      assert(files > 0, "reliable cut wrote no checkpoint directory")
+      c.as[(Long, Long)].collect().sorted
+      // not released: the scope's exit must remove its files anyway
     }
     assert(got.toSeq == expected.toSeq,
       "reliable cut diverged from the local cut")
-    // scope exit removed the resolved dir and restored the mode/dir
-    assert(spark.conf.getOption(StageCut.ModeKey).isEmpty)
+    // scope exit removed the resolved dir and restored the dir
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
     val leftover = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
       .count()

@@ -81,6 +81,8 @@ class AnnEdgeSpec extends SparkSpec {
   private def req(msg: String) =
     s"ERR IllegalArgumentException: requirement failed: $msg"
   private val pqEmpty = req("pq: empty corpus — no dimension to split")
+  private def pqNoProbes(site: String) =
+    req(s"$site(probes): no non-null vector — no dimension to split")
 
   /** The three frame cases every batch entry point runs. */
   private def batchCases(name: String, want: (String, String, String))(
@@ -120,7 +122,9 @@ class AnnEdgeSpec extends SparkSpec {
 
   pinned("Quantize.ivfAdcTopKBatch") {
     batchCases("ivfAdcTopKBatch", (
-        "ERR SparkArithmeticException: [DIVIDE_BY_ZERO] Division by zero",
+        "probe_id:bigint,rank:bigint,id:bigint,adist:double | 100,1,1,0.009625;" +
+          "100,2,2,0.029461;100,3,9,0.913531;103,1,4,0.020164;" +
+          "103,2,3,0.059227;103,3,3,0.078453",
         "probe_id:bigint,rank:bigint,id:bigint,adist:double | ",
         "probe_id:bigint,rank:bigint,id:bigint,adist:double | ")) { (c, p) =>
       Quantize.ivfAdcTopKBatch(c, p, "id", "vec", "blk", nprobe = 2, k = 3)
@@ -141,7 +145,7 @@ class AnnEdgeSpec extends SparkSpec {
 
   pinned("Quantize.adcRecallBatch") {
     batchCases("adcRecallBatch", (
-        "probe_id:bigint,n_overlap:bigint | 100,3;101,3;102,3;103,3",
+        "probe_id:bigint,n_overlap:bigint | 100,3;101,3;102,3;103,5",
         "probe_id:bigint,n_overlap:bigint | ",
         "probe_id:bigint,n_overlap:bigint | ")) { (c, p) =>
       Quantize.adcRecallBatch(c, p, "id", "vec", k = 3)
@@ -150,8 +154,9 @@ class AnnEdgeSpec extends SparkSpec {
 
   pinned("Pq.ivfPqTopKBatch") {
     batchCases("ivfPqTopKBatch", (
-        "ERR SparkArithmeticException: [DIVIDE_BY_ZERO] Division by zero",
-        pqEmpty,
+        "probe_id:bigint,rank:bigint,id:bigint,pdist:double | 100,1,1,1.01;" +
+          "100,2,2,1.01;100,3,8,1.01;103,1,4,0.02;103,2,9,0.03;103,3,3,0.06",
+        pqNoProbes("Pq.ivfPqTopKBatch"),
         pqEmpty)) { (c, p) =>
       Pq.ivfPqTopKBatch(c, p, "id", "vec", "blk", m = 2, ks = 4,
         nprobe = 2, k = 3)
@@ -162,17 +167,24 @@ class AnnEdgeSpec extends SparkSpec {
     batchCases("ivfPqTopKBatchAuto", (
         "probe_id:bigint,rank:bigint,id:bigint,pdist:double | 100,1,1,1.01;" +
           "100,2,2,1.01;103,1,4,0.02;103,2,9,0.03;103,3,3,0.06",
-        pqEmpty,
+        pqNoProbes("Pq.ivfPqTopKBatchAuto"),
         pqEmpty)) { (c, p) =>
       Pq.ivfPqTopKBatchAuto(c, p, "id", "vec", m = 2, ks = 4, nprobe = 2,
         k = 3, numCells = 3)
     }
   }
 
+  pinned("Pq probe check on an all-null probe frame") {
+    val nullProbes = probes.filter(col("vec").isNull)
+    check("ivfPqTopKBatch/nullProbes", outcome(Pq.ivfPqTopKBatch(corpus,
+        nullProbes, "id", "vec", "blk", m = 2, ks = 4, nprobe = 2, k = 3)),
+      pqNoProbes("Pq.ivfPqTopKBatch"))
+  }
+
   pinned("Pq.pqRecallBatch") {
     batchCases("pqRecallBatch", (
-        "ERR SparkRuntimeException: [INVALID_INDEX_OF_ZERO] The index 0 is invalid",
-        pqEmpty,
+        "probe_id:bigint,n_overlap:bigint | 100,2;101,3;102,1;103,3",
+        pqNoProbes("Pq.pqRecallBatch"),
         pqEmpty)) { (c, p) =>
       Pq.pqRecallBatch(c, p, "id", "vec", m = 2, ks = 4, k = 3)
     }

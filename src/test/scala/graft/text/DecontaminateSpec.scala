@@ -34,6 +34,29 @@ class DecontaminateSpec extends SparkSpec {
     assert(batch.exists(_._3), "fixture produced no contamination")
   }
 
+  test("maxKeys=0 (guard off) keeps the row path and the default-run rows") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def runs(): Seq[org.apache.spark.sql.DataFrame] = Seq(
+      Decontaminate.contaminationReport(corpus, bench, "id", "text", 3),
+      Decontaminate.decontaminate(corpus, bench, "id", "text", 3),
+      Decontaminate.withContamination(corpus, "id", "text", bench, 3))
+    val want = runs().map(rows)
+    val key = graft.ops.ProbeGuard.ConfKey
+    spark.conf.set(key, "0")
+    try {
+      val got = runs()
+      assert(got.map(rows) == want, s"$key=0 changed the rows")
+      // <= 0 means "guard off", as at every ProbeGuard site — not
+      // "row path off": the gram-count expression stays in the plan
+      got.take(2).foreach { df =>
+        assert(df.queryExecution.analyzed.toString
+          .contains("graft_bench_gram_count"),
+          s"$key=0 must keep the row path:\n${df.queryExecution.analyzed}")
+      }
+    } finally spark.conf.unset(key)
+  }
+
   test("withContamination bounds the benchmark collect — a corpus-sized " +
       "frame fails loudly, not with a driver OOM") {
     // corpus has 3 distinct 3-grams over its multi-word docs; cap at 2
