@@ -332,7 +332,7 @@ object SimilarJoin {
     * vectors riding the ONE cell-keyed join (r20): the `a` side
     * replicates per qualifying cell pair (bounded by the broadcast
     * list's fan-out), the `b` side exchanges its vectors exactly once —
-    * the ivfTopKBatch shape IvfShuffleSpec measured at 8.2× fewer
+    * the ivfTopKBatch shape, measured at 8.2× fewer
     * shuffle bytes than enumerating (id_a, id_b) candidates and
     * re-joining each side BY PAIR ID for its vector (a vector lives in
     * exactly ONE cell, so unlike the banded text finders there is no

@@ -144,13 +144,6 @@ object CellOps {
     bi
   }
 
-  /** [[nearestLong]] over a per-row-selected codebook group — the
-    * Lloyd-pass shape ([[graft.sim.IvfPq]]: coarse training is group
-    * 0, book training is one group per subvector). */
-  def nearestLongGrouped(vec: ArrayData, g: Int,
-                         cents3: Array[Array[Array[Long]]]): Int =
-    nearestLong(vec, cents3(g))
-
   /** `vec - cents(cell)` as `array<long>` — the residual the PQ books
     * model; replicates `zip_with(xq, element_at(cl, cell+1), _-_)`. */
   def longResidual(vec: ArrayData, cell: Int,
@@ -318,47 +311,6 @@ case class NearestLongCell(vec: Expression, cents: Array[Array[Long]])
 
   override protected def withNewChildInternal(
       newChild: Expression): NearestLongCell = copy(vec = newChild)
-}
-
-/** [[NearestLongCell]] with the codebook group selected per row —
-  * the Lloyd training pass's assignment (coarse = group 0, books =
-  * one group per subvector). */
-case class NearestLongCellGrouped(vec: Expression, g: Expression,
-                                  cents3: Array[Array[Array[Long]]])
-  extends BinaryExpression {
-
-  require(cents3.nonEmpty && cents3.forall(_.nonEmpty),
-    "NearestLongCellGrouped: empty codebook group")
-
-  override def left: Expression = vec
-  override def right: Expression = g
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_nearest_long_cell_grouped"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (vec.dataType, g.dataType) match {
-      case (ArrayType(LongType, _), IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects (array<bigint>, int), got $other")
-    }
-
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(v: Any, gv: Any): Any =
-    CellOps.nearestLongGrouped(v.asInstanceOf[ArrayData],
-      gv.asInstanceOf[Int], cents3)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, gv) => {
-      val c = ctx.addReferenceObj("cents3", cents3, "long[][][]")
-      s"${ev.value} = graft.functions.CellOps.nearestLongGrouped($v, $gv, $c);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): NearestLongCellGrouped =
-    copy(vec = newLeft, g = newRight)
 }
 
 /** `vec - cents(cell)` — the coarse residual, reference-object form. */

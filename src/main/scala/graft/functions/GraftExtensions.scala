@@ -6,14 +6,18 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extension entry point: registers graft's native expressions
-  * as SQL functions. Activate with
+  * as SQL functions and plans the [[graft.plans.TopKPerGroup]] node.
+  * Activate with
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
   * or call [[GraftExtensions.registerAll]] on a live session — after
   * which `SELECT graft_dot(a, b)` works from plain SQL, and the typed
-  * [[dot]] helper from the DataFrame API. */
+  * [[dot]] helper from the DataFrame API. ([[graft.ops.TopK]] injects
+  * its strategy at runtime into sessions built without the extension.) */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.all.foreach(ext.injectFunction)
+    ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+  }
 }
 
 object GraftExtensions {

@@ -19,8 +19,8 @@ object TopK {
                    orderCols: Seq[(String, Boolean)], k: Int,
                    rankName: String = "rn"): DataFrame = {
     val spark = df.sparkSession
-    // idempotent strategy injection (extensions path covers new
-    // sessions; this covers an already-built one)
+    // idempotent strategy injection: GraftExtensions plans the node in
+    // sessions built with it; this covers sessions built without it
     if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKPerGroupStrategy

@@ -52,16 +52,16 @@ private[graft] object CellSearch {
 
   /** Caller-`blockCol` routing: each probe of `prep` (which carries the
     * raw vector as `_pv`) keeps its `nprobe` blocks whose mean vector
-    * is cosine-nearest, block id ascending on ties, carrying `carry`. */
+    * is cosine-nearest, block id ascending on ties, carrying `q`. */
   def blockRouted(corpus: DataFrame, prep: DataFrame, vecCol: String,
-                  blockCol: String, nprobe: Int, carry: String): DataFrame =
+                  blockCol: String, nprobe: Int): DataFrame =
     graft.ops.TopK.topKPerGroup(
         prep.crossJoin(broadcast(Similarity.centroids(corpus, blockCol, vecCol)))
           .withColumn("_csim",
             Similarity.cosine(col("centroid"), col("_pv"))),
         Seq("probe_id"), Seq(("_csim", false), (blockCol, true)),
         nprobe, "_crank")
-      .select(col("probe_id"), col(carry), col(blockCol))
+      .select(col("probe_id"), col("q"), col(blockCol))
 
   /** The candidates: the coded corpus joined by `cell` against the
     * broadcast routing, each probe's own id excluded, scored. */
@@ -114,6 +114,15 @@ private[graft] object CellSearch {
         Similarity.norm(col(vecCol)).as("_pnrm"))
       .filter(col("q").isNotNull && Similarity.finiteNorm(col("_pnrm")))
 
+  /** The recall audits' probe frame `(probe_id, q)`, `q` the exact
+    * probe in double — null probes dropped (they have no distance to
+    * rank); zero-norm probes stay, squared L2 needs no direction. */
+  def probesExact(probes: DataFrame, idCol: String,
+                  vecCol: String): DataFrame =
+    probes.select(col(idCol).as("probe_id"),
+        col(vecCol).cast("array<double>").as("q"))
+      .filter(col("q").isNotNull)
+
   /** Exact squared L2 between double arrays `q` and `v`, folded in
     * dimension order (cross-engine reproducible), rounded to 6dp. */
   def exactL2(q: Column, v: Column): Column = round(
@@ -124,11 +133,13 @@ private[graft] object CellSearch {
     }), 6)
 
   /** Per probe, how many rows of `top` are also in `exact` (both keyed
-    * `(probe_id, idCol)`), as `(probe_id, name)`. */
+    * `(probe_id, idCol)`), as `(probe_id, name)`. The exact side is
+    * made distinct first, so a corpus id held by several rows counts
+    * once per top-k row and the figure never exceeds `k`. */
   def overlap(top: DataFrame, exact: DataFrame, idCol: String,
               name: String): DataFrame =
     top.select(col("probe_id"), col(idCol))
-      .join(exact.select(col("probe_id"), col(idCol))
+      .join(exact.select(col("probe_id"), col(idCol)).distinct()
         .withColumn("_hit", lit(1)), Seq("probe_id", idCol), "left")
       .groupBy(col("probe_id"))
       .agg(count(col("_hit")).as(name))

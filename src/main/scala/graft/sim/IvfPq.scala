@@ -28,10 +28,11 @@ import org.apache.spark.sql.functions._
   * SUMs). Quantization costs < 1e-6 per coordinate — invisible next
   * to the PQ approximation the recall audit actually measures.
   *
-  * Distributed shape: training folds map-side over a bounded seeded
-  * SAMPLE (`trainSample` — cost never grows past it); the model is
-  * O((K + m·ks)·dim) longs of driver-held parameters broadcast as
-  * expression literals (never data rows); coding is one narrow
+  * Distributed shape: training collects a bounded seeded SAMPLE
+  * ([[DefaultTrainSample]] rows) and runs Lloyd on the driver — cost
+  * never grows past it; the model is O((K + m·ks)·dim) longs of
+  * driver-held parameters broadcast as expression literals (never
+  * data rows); coding is one narrow
   * codegen'd pass (cell + m codes per vector — ~9 small ints, the
   * 100 TB index); search routes probes to `nprobe` cells on the
   * broadcast side, builds each (probe, cell) ADC lookup table once,
@@ -48,20 +49,14 @@ object IvfPq {
   val ScaleBits: Int = 20
   val Scale: Long = 1L << ScaleBits
 
-  /** Default training-sample bound: Lloyd iteration cost is
-    * O(sample · K · dim) regardless of corpus size. */
-  val DefaultTrainSample: Int = 1 << 16
-
-  /** Samples up to this size train ON THE DRIVER after one collect
+  /** Training-sample bound: training collects at most this many
+    * seeded-first rows and runs its Lloyd passes on the driver
     * (64k × 64-dim longs ≈ 33 MB — model-fit input, the k-means
-    * contract): integer arithmetic is order-free, so the local loop
-    * is bit-identical to the distributed fold while paying ONE Spark
-    * job instead of ~(coarseIters + pqIters) job round-trips whose
-    * scheduling latency dominates at any scale (the corpus-sized
-    * work — coding, search — is distributed either way; only the
-    * bounded model fit moves). Larger `trainSample`s keep the
-    * distributed iteration. IvfPqSpec pins local ≡ distributed. */
-  val LocalTrainMax: Int = 1 << 16
+    * contract). Integer arithmetic is order-free, so the driver loop
+    * computes the model a distributed fold would, for ONE Spark job
+    * instead of one per Lloyd pass; the corpus-sized work (coding,
+    * search) stays distributed. */
+  val DefaultTrainSample: Int = 1 << 16
 
   /** The trained model: `coarse(cell)(dim)` cell centroids and
     * `books(sub)(cid)(subDim)` per-subvector residual codebooks, all
@@ -102,9 +97,8 @@ object IvfPq {
 
   /** Load a [[Model.save]] artifact; fails loudly on wrong columns,
     * non-contiguous cell/sub/cid ranges, ragged dims, or a coarse
-    * dim the books do not tile — the [[Pq.loadCodebook]] discipline
-    * (codes index the model POSITIONALLY; a silent gap would
-    * misalign every later code). */
+    * dim the books do not tile (codes index the model POSITIONALLY;
+    * a silent gap would misalign every later code). */
   def loadModel(spark: SparkSession, path: String): Model = {
     val df = spark.read.parquet(path)
     require(df.columns.toSet == Set("part", "sub", "cid", "cent"),
@@ -200,13 +194,6 @@ object IvfPq {
       bridge.expression(vq), cents))
   }
 
-  private def nearestCellGrouped(vq: Column, g: Column,
-                                 cents3: Array[Array[Array[Long]]]): Column = {
-    import org.apache.spark.sql.graft.bridge
-    bridge.column(graft.functions.NearestLongCellGrouped(
-      bridge.expression(vq), bridge.expression(g), cents3))
-  }
-
   private def residualCol(vq: Column, cell: Column,
                           cents: Array[Array[Long]]): Column = {
     import org.apache.spark.sql.graft.bridge
@@ -226,38 +213,6 @@ object IvfPq {
     import org.apache.spark.sql.graft.bridge
     bridge.column(graft.functions.RoutedLongCells(
       bridge.expression(vq), cents, nprobe))
-  }
-
-  /** One fixed-point Lloyd refinement pass shared by the coarse and
-    * per-subvector trainings: rows are `(g, vq)` with `g` the
-    * codebook group (0 for coarse; the subvector index for PQ),
-    * centroids are `cents(g)(cid)(dim)`. Assignment is the codegen'd
-    * [[nearestLit]] fold per group; the update is ONE map-side-
-    * combined `(g, cid, pos) → (Σ, n)` aggregate whose collect is
-    * model-sized (≤ groups·k·dim rows), with `Math.floorDiv` means
-    * (long sums — partition-order-exact) and empty cells keeping
-    * their previous centroid. */
-  private def lloyd(rows: DataFrame, cents: Array[Array[Array[Long]]],
-                    iters: Int): Array[Array[Array[Long]]] = {
-    var cur = cents
-    var it = 0
-    while (it < iters) {
-      val sums = rows
-        .withColumn("_cell", nearestCellGrouped(col("vq"), col("g"), cur))
-        .select(col("g"), col("_cell"),
-          posexplode(col("vq")).as(Seq("_p", "_v")))
-        .groupBy(col("g"), col("_cell"), col("_p"))
-        .agg(sum(col("_v")).as("_s"), count(lit(1)).as("_n"))
-        .collect()
-      val next = cur.map(_.map(_.clone()))
-      sums.foreach { r =>
-        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
-          Math.floorDiv(r.getLong(3), r.getLong(4))
-      }
-      cur = next
-      it += 1
-    }
-    cur
   }
 
   /** Validate + project the corpus to `(id, xq)` — null vectors
@@ -298,71 +253,35 @@ object IvfPq {
     * K-cell coarse quantizer, then `pqIters` passes per subvector
     * over the coarse RESIDUALS (the FAISS IVF-PQ construction — the
     * codebooks model what the cells do not). Training reads only the
-    * `trainSample` seeded-first rows (cost bounded at any corpus
-    * size); the returned [[Model]] codes any number of batches. */
+    * [[DefaultTrainSample]] seeded-first rows, collected once to the
+    * driver (cost and driver memory bounded at any corpus size); the
+    * returned [[Model]] codes any number of batches. */
   def train(df: DataFrame, idCol: String, vecCol: String,
             kCells: Int, m: Int, ks: Int,
-            coarseIters: Int = 4, pqIters: Int = 3, seed: Int = 0,
-            trainSample: Int = DefaultTrainSample): Model = {
+            coarseIters: Int = 4, pqIters: Int = 3, seed: Int = 0): Model = {
     require(kCells >= 1 && ks >= 1 && m >= 1 &&
       coarseIters >= 0 && pqIters >= 0,
       s"IvfPq.train: bad params kCells=$kCells m=$m ks=$ks " +
         s"coarseIters=$coarseIters pqIters=$pqIters")
-    require(trainSample >= math.max(kCells, ks),
-      s"IvfPq.train: trainSample=$trainSample smaller than the donor " +
-        s"count max(kCells=$kCells, ks=$ks)")
+    require(DefaultTrainSample >= math.max(kCells, ks),
+      s"IvfPq.train: training sample $DefaultTrainSample smaller than " +
+        s"the donor count max(kCells=$kCells, ks=$ks)")
     val q = quantized(df, idCol, vecCol, m, "IvfPq.train")
     val u = graft.text.TextOps.md5_32(
       concat(lit(s"$seed|"), col("_tid").cast("string")))
-    if (trainSample <= LocalTrainMax) {
-      // bounded sample ⇒ one collect, local integer Lloyd — bit-equal
-      // to the distributed path below (order-free arithmetic), minus
-      // its per-iteration job latency. TakeOrdered keeps donor order.
-      val data = q.withColumn("_u", u)
-        .orderBy(col("_u"), col("_tid"))
-        .limit(trainSample)
-        .select(col("xq")).collect()
-        .map(_.getSeq[Long](0).toArray)
-      return trainLocal(data, kCells, m, ks, coarseIters, pqIters)
-    }
-    val smp = q.withColumn("_u", u)
+    // TakeOrdered keeps donor order
+    val data = q.withColumn("_u", u)
       .orderBy(col("_u"), col("_tid"))
-      .limit(trainSample)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // donors: the seeded-first rows of the SAME ordering (⊆ sample)
-      val donors = smp.orderBy(col("_u"), col("_tid"))
-        .limit(math.max(kCells, ks))
-        .select(col("xq")).collect()
-        .map(_.getSeq[Long](0).toArray)
-      val coarse0 = Array(donors.take(math.min(kCells, donors.length)))
-      val coarse = lloyd(
-        smp.select(lit(0).as("g"), col("xq").as("vq")),
-        coarse0, coarseIters).head
-      // residuals of the sample against the trained coarse cells
-      val res = smp.withColumn("_cell", nearestCell(col("xq"), coarse))
-        .withColumn("_rq", residualCol(col("xq"), col("_cell"), coarse))
-      val subDim = donors.head.length / m
-      // book init: the donors' residuals, sliced per subvector
-      val donorRes = res.orderBy(col("_u"), col("_tid"))
-        .limit(math.min(ks, donors.length))
-        .select(col("_rq")).collect()
-        .map(_.getSeq[Long](0).toArray)
-      val books0 = Array.tabulate(m)(s =>
-        donorRes.map(_.slice(s * subDim, (s + 1) * subDim)))
-      val subRows = res.select(
-        posexplode(transform(sequence(lit(0), lit(m - 1)), s =>
-          slice(col("_rq"), s * subDim + 1, lit(subDim))))
-          .as(Seq("g", "vq")))
-      val books = lloyd(subRows, books0, pqIters)
-      Model(coarse, books)
-    } finally { smp.unpersist(); () }
+      .limit(DefaultTrainSample)
+      .select(col("xq")).collect()
+      .map(_.getSeq[Long](0).toArray)
+    trainLocal(data, kCells, m, ks, coarseIters, pqIters)
   }
 
-  /** The driver-local training loop — the same donors (`data` arrives
-    * in seeded order), the same integer Lloyd (strict-< argmin,
-    * `Math.floorDiv` means, empty cells keep their centroid), the
-    * same residual book construction as the distributed path. */
+  /** The driver-local training loop — donors are the first rows of
+    * `data` (it arrives in seeded order); integer Lloyd with a
+    * strict-< argmin, `Math.floorDiv` means, empty cells keep their
+    * centroid; books train on the coarse residuals. */
   private def trainLocal(data: Array[Array[Long]], kCells: Int, m: Int,
                          ks: Int, ci: Int, pi: Int): Model = {
     val dim = data.head.length
@@ -381,8 +300,9 @@ object IvfPq {
       }
       bi
     }
-    def lloyd(pts: Array[Array[Long]], init: Array[Array[Long]],
-              iters: Int): Array[Array[Long]] = {
+    // `iters` integer Lloyd passes from `init`
+    def fit(pts: Array[Array[Long]], init: Array[Array[Long]],
+            iters: Int): Array[Array[Long]] = {
       var c = init
       var it = 0
       while (it < iters) {
@@ -414,7 +334,7 @@ object IvfPq {
       }
       c
     }
-    val coarse = lloyd(data,
+    val coarse = fit(data,
       data.take(math.min(kCells, data.length)).map(_.clone()), ci)
     val resid = data.map { v =>
       val c = coarse(argmin(v, coarse))
@@ -422,7 +342,7 @@ object IvfPq {
     }
     val donorRes = resid.take(math.min(ks, resid.length))
     val books = Array.tabulate(m) { s =>
-      lloyd(resid.map(_.slice(s * sd, (s + 1) * sd)),
+      fit(resid.map(_.slice(s * sd, (s + 1) * sd)),
         donorRes.map(_.slice(s * sd, (s + 1) * sd)), pi)
     }
     Model(coarse, books)

@@ -118,11 +118,10 @@ object Pq {
     * the codebook's subs must be exactly 0..m-1 (positional indexing
     * in [[nested]]/[[subDist]] silently misaligns otherwise), its
     * centroid dims uniform, and m × subDim must tile the frame's
-    * vector dimension exactly — a FROZEN artifact from a different
+    * vector dimension exactly — a codebook built over a different
     * embedding space would otherwise score half a vector (or code -1
     * and die far away in the ADC lookup). One tiny codebook aggregate
-    * plus one size-only pass over `df` — the artifact-validation
-    * price every frozen-artifact consumer here pays. */
+    * plus one size-only pass over `df`. */
   private def requireCompatible(df: DataFrame, vecCol: String,
                                 cb: DataFrame, site: String): Unit = {
     val g = cb.agg(countDistinct(col("sub")).as("m"),
@@ -152,8 +151,8 @@ object Pq {
     * [[Quantize.withSq8Codes]] carries mins/maxs. Null vectors are
     * dropped (they have no nearest centroid), as [[IvfPq.withCodes]]
     * drops them. The codebook is validated against the frame
-    * ([[requireCompatible]]) — a frozen artifact from another
-    * embedding space fails here, loudly. */
+    * ([[requireCompatible]]) — a codebook from another embedding
+    * space fails here, loudly. */
   def withPqCodes(df: DataFrame, vecCol: String,
                   codebook: DataFrame): DataFrame = {
     requireCompatible(df, vecCol, codebook, "Pq.withPqCodes")
@@ -198,18 +197,14 @@ object Pq {
       (acc, s) => acc + element_at(element_at(col("lut"), s + 1),
         element_at(col("codes"), s + 1) + 1)), 6)
 
-  /** Asymmetric top-k against the PQ index (codebook trained inline,
-    * or FROZEN via `codebook` — a [[loadCodebook]] artifact, the
-    * production daily shape: the corpus is never re-sampled and codes
-    * stay comparable across batches; [[Quantize.adcTopK]]'s shape):
-    * probe exact, candidates
-    * reconstructed at their assigned centroids, smallest squared-L2
-    * first with id tie-break. Returns `(idCol, pdist)`. */
+  /** Asymmetric top-k against the PQ index ([[Quantize.adcTopK]]'s
+    * shape): probe exact, candidates reconstructed at their assigned
+    * centroids, smallest squared-L2 first with id tie-break. Returns
+    * `(idCol, pdist)`. */
   def pqAdcTopK(df: DataFrame, idCol: String, vecCol: String,
                 m: Int, ks: Int, probeId: Long, k: Int,
-                seed: Int = 0,
-                codebook: Option[DataFrame] = None): DataFrame = {
-    val cb = codebook.getOrElse(pqCodebook(df, idCol, vecCol, m, ks, seed))
+                seed: Int = 0): DataFrame = {
+    val cb = pqCodebook(df, idCol, vecCol, m, ks, seed)
     // candidates drop the bulky per-row codebook copy — scoring reads
     // the probe-side LUT only
     val coded = withPqCodes(df, vecCol, cb).drop("cents")
@@ -226,50 +221,24 @@ object Pq {
       .select(col(idCol), col("pdist"))
   }
 
-  /** Batch IVF-PQ — [[Quantize.ivfAdcTopKBatch]]'s plan over the PQ
-    * index: probes route to their `nprobe` centroid-nearest cells
-    * (bounded-heap, cell-id tie-break), candidates come from ONE
-    * cell-keyed join against the broadcast routing (each probe row
-    * carrying its precomputed LUT), per-probe top-k is again a
-    * bounded heap. Null and zero-norm probes are dropped, as in
-    * [[Quantize.ivfAdcTopKBatch]]. Returns
-    * `(probe_id, rank, idCol, pdist)`. */
-  def ivfPqTopKBatch(corpus: DataFrame, probes: DataFrame,
-                     idCol: String, vecCol: String, blockCol: String,
-                     m: Int, ks: Int, nprobe: Int, k: Int,
-                     seed: Int = 0,
-                     codebook: Option[DataFrame] = None): DataFrame = {
-    val cb = codebook.getOrElse(pqCodebook(corpus, idCol, vecCol, m, ks, seed))
-    requireCompatible(probes, vecCol, cb, "Pq.ivfPqTopKBatch(probes)")
-    val coded = withPqCodes(corpus, vecCol, cb).drop("cents")
-    val prep = withLut(CellSearch.probesNormed(probes, idCol, vecCol), cb)
-    val routing = CellSearch.blockRouted(corpus, prep, vecCol, blockCol,
-      nprobe, "lut")
-    CellSearch.topK(CellSearch.candidates(coded, routing, blockCol, idCol,
-      "pdist", pqAdcDist), "pdist", idCol, k)
-  }
-
-  /** [[ivfPqTopKBatch]] over SELF-TRAINED cells — no caller block
-    * column ([[Quantize.ivfAdcTopKBatchAuto]]'s composition on the PQ
-    * tier): AutoBlock angular cells (or a pre-trained [[CellIndex]])
-    * assign the coded corpus, probes route via the codegen'd
-    * (cosine, cell) struct sort, and the per-probe LUT + bounded-heap
-    * scoring are [[ivfPqTopKBatch]]'s exactly. `nprobe >= numCells`
+  /** Batch IVF-PQ over SELF-TRAINED cells
+    * ([[Quantize.ivfAdcTopKBatchAuto]]'s composition on the PQ tier):
+    * AutoBlock angular cells assign the coded corpus, probes route via
+    * the codegen'd (cosine, cell) struct sort, each routed probe row
+    * carries its precomputed LUT into ONE cell-keyed candidate join,
+    * and the per-probe top-k is a bounded heap. `nprobe >= numCells`
     * ⇒ exactly the flat PQ-ADC top-k at any centroid quality (gate
-    * q149). Zero-norm vectors drop on both sides (angular routing).
-    * A FROZEN [[loadCodebook]] artifact via `codebook` keeps codes
-    * comparable across batches. */
+    * q149). Null and zero-norm vectors drop on both sides (angular
+    * routing). Returns `(probe_id, rank, idCol, pdist)`. */
   def ivfPqTopKBatchAuto(corpus: DataFrame, probes: DataFrame,
                          idCol: String, vecCol: String,
                          m: Int, ks: Int, nprobe: Int, k: Int,
                          seed: Int = 0, numCells: Int = 0,
-                         refineIters: Int = 1,
-                         index: Option[CellIndex] = None,
-                         codebook: Option[DataFrame] = None): DataFrame = {
-    val cb = codebook.getOrElse(pqCodebook(corpus, idCol, vecCol, m, ks, seed))
+                         refineIters: Int = 1): DataFrame = {
+    val cb = pqCodebook(corpus, idCol, vecCol, m, ks, seed)
     requireCompatible(probes, vecCol, cb, "Pq.ivfPqTopKBatchAuto(probes)")
     val cents = CellSearch.cells(CellSearch.normed(corpus, idCol, vecCol),
-      numCells, refineIters, index)
+      numCells, refineIters, None)
     CellSearch.autoTopK(
         withLut(CellSearch.probesNormed(probes, idCol, vecCol), cb), cents,
         vecCol, idCol, "lut", "pdist", pqAdcDist, nprobe, k) {
@@ -280,65 +249,15 @@ object Pq {
   /** Recall audit for the PQ index — [[Quantize.adcRecallBatch]]'s
     * contract: per probe, how many of the PQ-ADC top-k survive in the
     * EXACT squared-L2 top-k. Integer output `(probe_id, n_overlap)`,
-    * exact cross-engine. Deliberately brute-force; sample probes in
-    * production. */
+    * exact cross-engine; null probes get no figure. Deliberately
+    * brute-force; sample probes in production. */
   def pqRecallBatch(corpus: DataFrame, probes: DataFrame,
                     idCol: String, vecCol: String, m: Int, ks: Int,
-                    k: Int, seed: Int = 0,
-                    codebook: Option[DataFrame] = None): DataFrame = {
-    val cb = codebook.getOrElse(pqCodebook(corpus, idCol, vecCol, m, ks, seed))
+                    k: Int, seed: Int = 0): DataFrame = {
+    val cb = pqCodebook(corpus, idCol, vecCol, m, ks, seed)
     requireCompatible(probes, vecCol, cb, "Pq.pqRecallBatch(probes)")
     CellSearch.recall(withPqCodes(corpus, vecCol, cb).drop("cents"),
-      withLut(probes.select(col(idCol).as("probe_id"),
-        col(vecCol).cast("array<double>").as("q")), cb),
+      withLut(CellSearch.probesExact(probes, idCol, vecCol), cb),
       vecCol, idCol, "pdist", pqAdcDist, k)
-  }
-
-  /** Persist the codebook as a parquet artifact — the train-once half
-    * of the incremental matrix ([[Quantize.saveParams]]'s contract):
-    * daily batches code new vectors against FROZEN centroids, so
-    * codes stay comparable across batches. */
-  def saveCodebook(codebook: DataFrame, path: String): Unit =
-    codebook.coalesce(1).write.mode("overwrite").parquet(path)
-
-  /** Load a [[saveCodebook]] artifact; fails loudly on wrong columns,
-    * a ragged (sub × cid) grid, non-contiguous sub/cid ranges (the
-    * coding path indexes POSITIONALLY — a missing sub or cid would
-    * silently misalign every later subvector or code), or ragged
-    * centroid dimensions. */
-  def loadCodebook(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame = {
-    val cb = spark.read.parquet(path)
-    require(cb.columns.toSet == Set("sub", "cid", "centroid"),
-      s"not a PQ codebook artifact: ${cb.columns.mkString(",")}")
-    val g = cb.groupBy(col("sub"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("cid")).as("d"),
-        min(col("cid").cast("int")).as("cmn"),
-        max(col("cid").cast("int")).as("cmx"),
-        min(size(col("centroid"))).as("lo"),
-        max(size(col("centroid"))).as("hi"))
-      .agg(countDistinct(col("n")).as("nn"),
-        sum(when(col("n") =!= col("d"), 1).otherwise(0)).as("dup"),
-        sum(when(col("cmn") =!= 0 || col("cmx") =!= col("n") - 1, 1)
-          .otherwise(0)).as("ncontig"),
-        countDistinct(col("lo")).as("dl"),
-        sum(when(col("lo") =!= col("hi"), 1).otherwise(0)).as("rag"),
-        countDistinct(col("sub")).as("m"),
-        min(col("sub").cast("int")).as("smn"),
-        max(col("sub").cast("int")).as("smx"))
-      .head()
-    require(g.getLong(0) == 1L && g.getLong(1) == 0L,
-      "PQ codebook artifact is ragged: every subvector needs the same " +
-        "count of distinct cids")
-    require(g.getLong(2) == 0L,
-      "PQ codebook artifact has non-contiguous cids (need exactly " +
-        "0..ks-1 per subvector — codes index the sorted list " +
-        "positionally)")
-    require(g.getLong(3) == 1L && g.getLong(4) == 0L,
-      "PQ codebook artifact has ragged centroid dimensions")
-    require(g.getInt(6) == 0 && g.getInt(7) == g.getLong(5).toInt - 1,
-      "PQ codebook artifact has non-contiguous subs (need exactly " +
-        "0..m-1 — subvectors index positionally)")
-    cb
   }
 }

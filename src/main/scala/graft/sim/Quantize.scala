@@ -41,8 +41,8 @@ object Quantize {
   /** Adds `codes: array<int>` — per dimension,
     * `floor((x - min) / (max - min) * 256)` clamped to [0, 255]
     * (x = max lands on 256 → 255; a constant dimension codes 0; the
-    * low clamp matters when FROZEN params from [[saveParams]] code a
-    * later batch whose values undershoot the trained range).
+    * low clamp matters when params taken over another frame code a
+    * batch whose values undershoot their range).
     * Carries `mins`/`maxs` along for the ADC consumer. Null vectors
     * are dropped (they have no code), as [[Pq.withPqCodes]] and
     * [[IvfPq.withCodes]] drop them. */
@@ -140,7 +140,7 @@ object Quantize {
     val coded = sq8Coded(corpus, vecCol)
     val prep = CellSearch.probesNormed(probes, idCol, vecCol)
     val routing = CellSearch.blockRouted(corpus, prep, vecCol, blockCol,
-      nprobe, "q")
+      nprobe)
     CellSearch.topK(CellSearch.candidates(coded, routing, blockCol, idCol,
       "adist", adcDist), "adist", idCol, k)
   }
@@ -148,10 +148,8 @@ object Quantize {
   /** [[ivfAdcTopKBatch]] over SELF-TRAINED cells — no caller block
     * column: [[AutoBlock.fitCells]] trains `numCells` angular
     * centroids (deterministic distinct-vector seeds + spherical
-    * k-means; `numCells = 0` derives K from the corpus count), or a
-    * pre-trained [[CellIndex]] skips training entirely (the
-    * train-once/query-many production shape — numCells/refineIters
-    * are then ignored). Corpus codes are assigned by the codegen'd
+    * k-means; `numCells = 0` derives K from the corpus count).
+    * Corpus codes are assigned by the codegen'd
     * centroid-literal expression (zero shuffle); probes route via ONE
     * codegen'd sort of the K (cosine, cell) structs (cell-id
     * tie-break — deterministic cutoff); the ADC scoring and
@@ -164,10 +162,10 @@ object Quantize {
   def ivfAdcTopKBatchAuto(corpus: DataFrame, probes: DataFrame,
                           idCol: String, vecCol: String,
                           nprobe: Int, k: Int,
-                          numCells: Int = 0, refineIters: Int = 1,
-                          index: Option[CellIndex] = None): DataFrame = {
+                          numCells: Int = 0,
+                          refineIters: Int = 1): DataFrame = {
     val cents = CellSearch.cells(CellSearch.normed(corpus, idCol, vecCol),
-      numCells, refineIters, index)
+      numCells, refineIters, None)
     CellSearch.autoTopK(CellSearch.probesNormed(probes, idCol, vecCol), cents,
         vecCol, idCol, "q", "adist", adcDist, nprobe, k) {
       sq8Coded(corpus, vecCol)
@@ -180,29 +178,11 @@ object Quantize {
     * squared-L2 top-k over the same candidates. Deliberately
     * brute-force (it measures the index, it IS not the index);
     * run on a sampled probe set in production. Integer output:
-    * `(probe_id, n_overlap)` — exact cross-engine. */
+    * `(probe_id, n_overlap)` — exact cross-engine; null probes get no
+    * figure. */
   def adcRecallBatch(corpus: DataFrame, probes: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame =
     CellSearch.recall(sq8Coded(corpus, vecCol),
-      probes.select(col(idCol).as("probe_id"),
-        col(vecCol).cast("array<double>").as("q")),
+      CellSearch.probesExact(probes, idCol, vecCol),
       vecCol, idCol, "adist", adcDist, k)
-
-  /** Persist SQ8 params as a 1-row parquet artifact — the train-once
-    * half of the incremental matrix (like CellIndex / LSH sigs): a
-    * daily batch codes new vectors with FROZEN ranges, so codes stay
-    * comparable across batches without re-reading the corpus. */
-  def saveParams(params: DataFrame, path: String): Unit =
-    params.coalesce(1).write.mode("overwrite").parquet(path)
-
-  /** Load a [[saveParams]] artifact; fails loudly if it does not
-    * carry exactly one row of `mins`/`maxs`. */
-  def loadParams(spark: org.apache.spark.sql.SparkSession,
-                 path: String): DataFrame = {
-    val p = spark.read.parquet(path)
-    require(p.columns.toSet == Set("mins", "maxs"),
-      s"not an SQ8 params artifact: ${p.columns.mkString(",")}")
-    require(p.count() == 1, "SQ8 params artifact must be exactly one row")
-    p
-  }
 }

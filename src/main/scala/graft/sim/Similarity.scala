@@ -122,61 +122,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF ANN over SELF-TRAINED cells: [[ivfTopK]] without a
-    * caller-supplied block column — the top-k sibling of the
-    * auto-blocked similarity join. [[AutoBlock.fitCells]] trains
-    * `numCells` angular centroids (deterministic distinct-vector
-    * sample + k-means refinement), every vector is assigned by the
-    * codegen'd centroid-literal expression (zero shuffle), and only
-    * the `nprobe` cells whose centroids are nearest the probe are
-    * brute-forced. Cell ranking happens on the DRIVER over the K
-    * centroid vectors already held as model parameters — no
-    * centroid-table job at query time; the probe row's collect is one
-    * vector, the ANN query's input. `nprobe >= numCells` degrades to
-    * exactly [[cosineTopK]] (the spec pins that identity), which is
-    * the standard IVF recall dial: cells searched vs work done.
-    *
-    * `numCells = 0` (the default) derives K from the corpus count
-    * ([[AutoBlock.resolveCells]]); a pre-trained [[CellIndex]] skips
-    * training entirely (numCells/refineIters are then ignored) — the
-    * train-once/query-many production shape. */
-  def ivfTopKAuto(emb: DataFrame, idCol: String, vecCol: String,
-                  probeId: Long, nprobe: Int, k: Int,
-                  numCells: Int = 0, refineIters: Int = 1,
-                  index: Option[CellIndex] = None): DataFrame = {
-    val base = CellSearch.normed(emb, idCol, vecCol)
-    val cents = CellSearch.cells(base, numCells, refineIters, index)
-    // a missing probe id returns an EMPTY result, matching cosineTopK
-    // (whose probe-frame join just matches nothing) instead of throwing
-    val probeRows = base.filter(col("id") === probeId)
-      .select(col("v").cast("array<double>"), col("nrm")).limit(1).collect()
-    if (probeRows.isEmpty || cents.isEmpty)
-      return emb.select(col(idCol), lit(0.0).as("cos_sim")).limit(0)
-    val probeVec = {
-      val v = probeRows.head.getSeq[Double](0).toArray
-      val n = probeRows.head.getDouble(1)
-      v.map(_ / n)
-    }
-    val topCells = cents.zipWithIndex
-      .map { case (c, i) => i -> -AutoBlock.angle(c, probeVec) }
-      .sortBy { case (i, negAng) => (-negAng, i) } // nearest first, stable
-      .take(nprobe).map(_._1)
-    CellSearch.assign(base, cents, "v", "nrm", "cell")
-      .filter(col("cell").isin(topCells.toSeq: _*) && col("id") =!= probeId)
-      // limit(1) matches the probeRows collect above: if the id column
-      // ever carried duplicates, both uses agree on ONE probe row
-      // instead of the crossJoin fanning out per duplicate
-      .crossJoin(broadcast(
-        base.filter(col("id") === probeId)
-          .select(col("v").as("probe_vec"), col("nrm").as("probe_norm"))
-          .limit(1)))
-      .select(col("id").as(idCol),
-        round(dot(col("v"), col("probe_vec"))
-          / (col("nrm") * col("probe_norm")), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(k)
-  }
-
   /** BATCH IVF ANN: top-k neighbors for EVERY probe row — the shape a
     * retrieval pipeline actually runs (one probe id is a debugging
     * convenience; production joins a whole query table against the
@@ -188,6 +133,10 @@ object Similarity {
     * the only shuffles, both on the cell key — and each probe's top k
     * comes from the bounded-heap [[graft.ops.TopK.topKPerGroup]]
     * operator, O(n log k) per partition with NO full sort anywhere.
+    * Vectors ride the cell join: the keys-only join with a by-id
+    * vector fetch afterwards moved 8.2× the shuffle bytes (1042 MB vs
+    * 127 MB at dim 256, 20k corpus × 1k probes), because its
+    * candidate list outnumbers both inputs.
     *
     * Returns (pid, id, cos_sim, rn) with rn = 1..k per probe, ordered.
     * Probes are not excluded from their own results: probe and corpus
@@ -206,39 +155,7 @@ object Similarity {
                    probes: DataFrame, probeIdCol: String, probeVecCol: String,
                    nprobe: Int, k: Int,
                    numCells: Int = 0, refineIters: Int = 1,
-                   index: Option[CellIndex] = None): DataFrame =
-    ivfTopKBatchImpl(emb, idCol, vecCol, probes, probeIdCol, probeVecCol,
-      nprobe, k, numCells, refineIters, index, lateFetch = false)
-
-  /** The MEASURED-AND-REJECTED candidate shape, kept private for the
-    * shuffle-cost comparison spec (IvfShuffleSpec): shuffle (cell, id)
-    * keys only through the cell join, then fetch both sides' vectors by
-    * id afterwards. Sounds like the auto-join's late-fetch discipline —
-    * but the economics invert here. In the pair JOIN each corpus vector
-    * rides the cell exchange exactly ONCE (a vector belongs to one
-    * cell; only probes replicate, ×nprobe), while late-fetch ships the
-    * CANDIDATE list — |probes| × nprobe × cell-population rows, orders
-    * of magnitude more rows than either input — through two additional
-    * exchanges, the second while already carrying the fetched dim×8-byte
-    * probe vector. Measured at dim 256 (20k corpus × 1k probes,
-    * broadcast disabled): 1042 MB shuffled vs the pair join's 127 MB
-    * (8.2×) and 18.6 s vs 4.4 s wall-clock; IvfShuffleSpec re-measures
-    * and pins the multiple. The auto-JOIN's late fetch stays correct
-    * because there the post-verify pair list is SMALLER than the
-    * exploded per-cell-pair candidate set; here candidates ARE the
-    * verify input. */
-  private[sim] def ivfTopKBatchLateFetch(emb: DataFrame, idCol: String,
-                   vecCol: String, probes: DataFrame, probeIdCol: String,
-                   probeVecCol: String, nprobe: Int, k: Int,
-                   numCells: Int = 0, refineIters: Int = 1,
-                   index: Option[CellIndex] = None): DataFrame =
-    ivfTopKBatchImpl(emb, idCol, vecCol, probes, probeIdCol, probeVecCol,
-      nprobe, k, numCells, refineIters, index, lateFetch = true)
-
-  private def ivfTopKBatchImpl(emb: DataFrame, idCol: String, vecCol: String,
-                   probes: DataFrame, probeIdCol: String, probeVecCol: String,
-                   nprobe: Int, k: Int, numCells: Int, refineIters: Int,
-                   index: Option[CellIndex], lateFetch: Boolean): DataFrame = {
+                   index: Option[CellIndex] = None): DataFrame = {
     val base = CellSearch.normed(emb, idCol, vecCol)
     val p0 = CellSearch.normed(probes, probeIdCol, probeVecCol,
       ("pid", "pv", "pnrm"))
@@ -249,18 +166,8 @@ object Similarity {
     val assigned = CellSearch.assign(base, cents, "v", "nrm", "cell")
     val routed = CellSearch.routed(p0, cents, "pv", "pnrm", nprobe,
       Seq("pid", "pv", "pnrm"), "cell")
-    val pairs =
-      if (lateFetch) {
-        // keys-only cell join, then per-side vector fetch by id — the
-        // rejected shape (see ivfTopKBatchLateFetch's doc comment)
-        routed.select(col("pid"), col("cell"))
-          .join(assigned.select(col("cell"), col("id")), Seq("cell"))
-          .select(col("pid"), col("id"))
-          .join(p0, Seq("pid"))
-          .join(base, Seq("id"))
-      } else routed.join(assigned, Seq("cell"))
-    val cand = pairs.select(col("pid"), col("id"),
-      round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
+    val cand = routed.join(assigned, Seq("cell")).select(col("pid"),
+      col("id"), round(dot(col("pv"), col("v")) / (col("pnrm") * col("nrm")), 6)
         .as("cos_sim"))
     graft.ops.TopK.topKPerGroup(cand, Seq("pid"),
         Seq(("cos_sim", false), ("id", true)), k)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Tunable thresholds for [[FilterPolicy]] — a policy someone tuned
   * for one corpus must ship WITH that corpus, so the config is a
   * first-class artifact ([[FilterPolicy.savePolicy]] /
-  * [[FilterPolicy.loadPolicy]], the `saveTokenizer`/`saveParams`
+  * [[FilterPolicy.loadPolicy]], the `saveTokenizer`/`CellIndex.save`
   * idiom): a one-row parquet that travels next to the curated data
   * and reproduces the exact keep/drop decisions later or elsewhere. */
 case class PolicyConfig(minTokens: Long, maxTokens: Long,

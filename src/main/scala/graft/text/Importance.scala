@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * into scoring; scoring is one explode → broadcast-join → map-side-
   * combined groupBy(doc) — one narrow (doc_id, weight) shuffle, text
   * never leaves its scan. The model is a train-once artifact
-  * ([[saveModel]]/[[loadModel]], the `saveParams` idiom): score
+  * ([[saveModel]]/[[loadModel]], the `CellIndex.save` idiom): score
   * tomorrow's crawl without touching the corpora again.
   *
   * Cross-engine determinism: buckets come from [[TextOps.md5_32]]
@@ -164,7 +164,7 @@ object Importance {
     * so scoring runs unchanged inside a Structured Streaming
     * `readStream → transform → writeStream` (score documents as they
     * are crawled). The B-row model is collected once (model
-    * PARAMETERS, never data rows — the `loadParams` class of collect)
+    * PARAMETERS, never data rows — the `CellIndex.load` class of collect)
     * and broadcast; tokenization, hashing and the bucket-ordered fold
     * run in plain Scala on `mapPartitions` (the dHash/DEFLATE
     * precedent for per-row codec-style work), and every step mirrors
@@ -226,7 +226,7 @@ object Importance {
       .toDF(idCol, "n_grams", "score")
   }
 
-  /** Persist / reload the model (the `saveParams` artifact idiom). */
+  /** Persist / reload the model (the `CellIndex.save` artifact idiom). */
   def saveModel(model: DataFrame, path: String): Unit =
     model.coalesce(1).write.mode("overwrite").parquet(path)
 

@@ -224,7 +224,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("ivfTopKBatch: one cell-key candidate join, no pair-id vector exchanges") {
-    // the IvfShuffleSpec-measured winner (vectors ride the single cell
+    // the measured winner (vectors ride the single cell
     // join; late fetch measured 8.2× the shuffle bytes) must not
     // silently regress into the keys-only + fetch-join shape
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -472,27 +472,21 @@ class PlanQualitySpec extends SparkSpec {
       "nothing corpus-sized may shuffle-join in the probe path")
   }
 
-  test("PQ batch IVF: both top-k stages custom, routing broadcast, " +
-      "no window, no corpus-sized shuffle join") {
+  test("batch IVF over caller blocks: both top-k stages custom, routing " +
+      "broadcast, no window, no corpus-sized shuffle join") {
     import org.apache.spark.sql.functions.col
     val emb = graft.Tables.load(spark, sf("sf0.01"), "embeddings")
-    val out = graft.sim.Pq.ivfPqTopKBatch(emb,
+    val out = graft.sim.Quantize.ivfAdcTopKBatch(emb,
       emb.filter(col("vec_id") < 5), "vec_id", "embedding", "label",
-      m = 8, ks = 16, nprobe = 2, k = 10)
+      nprobe = 2, k = 10)
     val p = out.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert("TopKPerGroup".r.findAllIn(p).size >= 2,
       "routing cutoff AND final per-probe rank must use TopKPerGroup")
-    // the only Windows allowed are pqCodebook's donor ranks — a
-    // row_number over the ks-row TakeOrdered donor frame, bounded by
-    // construction; every RANKING stage must be the custom operator
-    val windows = "Window".r.findAllIn(p).size
-    val donorRanks = "TakeOrderedAndProject".r.findAllIn(p).size
-    assert(windows <= 2 * donorRanks,
-      s"unexpected Window beyond the bounded donor ranks " +
-        s"($windows windows, $donorRanks TakeOrdered donor frames)")
+    // every RANKING stage must be the custom operator
+    assert(!p.contains("Window"), s"unexpected Window in the batch path:\n$p")
     assert(p.contains("BroadcastHashJoin"),
-      "the (probe, lut, cell) routing table must broadcast into the cell join")
+      "the (probe, q, cell) routing table must broadcast into the cell join")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       "the coded corpus must never shuffle-join or cross-join")
   }

@@ -35,6 +35,39 @@ class TopKPerGroupSpec extends SparkSpec {
     assert(!plan.contains("Sort "), "no full sort — bounded heaps instead")
   }
 
+  test("GraftExtensions alone plans TopKPerGroup; a session without it " +
+      "cannot") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+    import org.apache.spark.sql.graft.bridge
+    // the node is built by hand, NOT through TopK.topKPerGroup, so the
+    // runtime injection never runs in these sessions
+    def topK(s: SparkSession) = {
+      val df = s.range(10).select((col("id") % 2).as("g"), col("id"))
+      bridge.ofRows(s, TopKPerGroup(2, Seq(bridge.expression(df("g"))),
+        Seq(SortOrder(bridge.expression(df("id")), Ascending)), "rn",
+        bridge.logicalPlan(df)))
+    }
+    try {
+      val withExt = SparkSession.builder()
+        .withExtensions(new graft.functions.GraftExtensions).create()
+      assert(!withExt.experimental.extraStrategies
+        .contains(TopKPerGroupStrategy))
+      val out = topK(withExt)
+      assert(out.queryExecution.executedPlan.toString
+        .contains("TopKPerGroup"))
+      assert(out.select("g", "id", "rn").as[(Long, Long, Long)].collect()
+        .toSet == Set((0L, 0L, 1L), (0L, 2L, 2L), (1L, 1L, 1L), (1L, 3L, 2L)))
+      val bare = SparkSession.builder().create()
+      val e = intercept[Throwable](topK(bare).queryExecution.executedPlan)
+      assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("No plan for")), e)
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
+
   test("k larger than group size emits whole groups, ranked") {
     val df = Seq((1, 10), (1, 20), (2, 5)).toDF("k", "v")
     val got = TopK.topKPerGroup(df, Seq("k"), Seq(("v", false)), 5)

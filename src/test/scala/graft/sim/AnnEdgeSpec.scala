@@ -104,22 +104,6 @@ class AnnEdgeSpec extends SparkSpec {
     }
   }
 
-  pinned("Similarity.ivfTopKAuto") {
-    def run(c: DataFrame, pid: Long) =
-      Similarity.ivfTopKAuto(c, "id", "vec", pid, nprobe = 2, k = 3,
-        numCells = 3)
-    check("ivfTopKAuto/edge", outcome(run(corpus, 1L)),
-        "id:bigint,cos_sim:double | 2,0.993884")
-    check("ivfTopKAuto/dupProbe", outcome(run(corpus, 3L)),
-        "id:bigint,cos_sim:double | 2,0.110432;4,0.993884;9,0.5")
-    check("ivfTopKAuto/nullProbe", outcome(run(corpus, 7L)),
-        "id:bigint,cos_sim:double | ")
-    check("ivfTopKAuto/zeroProbe", outcome(run(corpus, 8L)),
-        "id:bigint,cos_sim:double | ")
-    check("ivfTopKAuto/noCorpus", outcome(run(noCorpus, 1L)),
-        "id:bigint,cos_sim:double | ")
-  }
-
   pinned("Quantize.ivfAdcTopKBatch") {
     batchCases("ivfAdcTopKBatch", (
         "probe_id:bigint,rank:bigint,id:bigint,adist:double | 100,1,1,0.009625;" +
@@ -145,21 +129,10 @@ class AnnEdgeSpec extends SparkSpec {
 
   pinned("Quantize.adcRecallBatch") {
     batchCases("adcRecallBatch", (
-        "probe_id:bigint,n_overlap:bigint | 100,3;101,3;102,3;103,5",
+        "probe_id:bigint,n_overlap:bigint | 100,3;102,3;103,3",
         "probe_id:bigint,n_overlap:bigint | ",
         "probe_id:bigint,n_overlap:bigint | ")) { (c, p) =>
       Quantize.adcRecallBatch(c, p, "id", "vec", k = 3)
-    }
-  }
-
-  pinned("Pq.ivfPqTopKBatch") {
-    batchCases("ivfPqTopKBatch", (
-        "probe_id:bigint,rank:bigint,id:bigint,pdist:double | 100,1,1,1.01;" +
-          "100,2,2,1.01;100,3,8,1.01;103,1,4,0.02;103,2,9,0.03;103,3,3,0.06",
-        pqNoProbes("Pq.ivfPqTopKBatch"),
-        pqEmpty)) { (c, p) =>
-      Pq.ivfPqTopKBatch(c, p, "id", "vec", "blk", m = 2, ks = 4,
-        nprobe = 2, k = 3)
     }
   }
 
@@ -176,14 +149,15 @@ class AnnEdgeSpec extends SparkSpec {
 
   pinned("Pq probe check on an all-null probe frame") {
     val nullProbes = probes.filter(col("vec").isNull)
-    check("ivfPqTopKBatch/nullProbes", outcome(Pq.ivfPqTopKBatch(corpus,
-        nullProbes, "id", "vec", "blk", m = 2, ks = 4, nprobe = 2, k = 3)),
-      pqNoProbes("Pq.ivfPqTopKBatch"))
+    check("ivfPqTopKBatchAuto/nullProbes", outcome(Pq.ivfPqTopKBatchAuto(
+        corpus, nullProbes, "id", "vec", m = 2, ks = 4, nprobe = 2, k = 3,
+        numCells = 3)),
+      pqNoProbes("Pq.ivfPqTopKBatchAuto"))
   }
 
   pinned("Pq.pqRecallBatch") {
     batchCases("pqRecallBatch", (
-        "probe_id:bigint,n_overlap:bigint | 100,2;101,3;102,1;103,3",
+        "probe_id:bigint,n_overlap:bigint | 100,2;102,1;103,2",
         pqNoProbes("Pq.pqRecallBatch"),
         pqEmpty)) { (c, p) =>
       Pq.pqRecallBatch(c, p, "id", "vec", m = 2, ks = 4, k = 3)
@@ -206,7 +180,7 @@ class AnnEdgeSpec extends SparkSpec {
   pinned("IvfPq.recallBatch") {
     batchCases("IvfPq.recallBatch", (
         "probe_id:bigint,n_overlap_adc:bigint,n_overlap:bigint | 100,2,2;" +
-          "102,1,2;103,5,5",
+          "102,1,2;103,3,3",
         req("IvfPq.recallBatch(probes): empty frame"),
         req("IvfPq.train: empty corpus"))) { (c, p) =>
       IvfPq.recallBatch(c, p, "id", "vec", kCells = 2, m = 2, ks = 2,

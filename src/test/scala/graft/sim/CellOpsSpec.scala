@@ -113,8 +113,7 @@ class CellOpsSpec extends SparkSpec {
     assert(gotRoute.toSeq == wantRoute.toSeq)
   }
 
-  test("grouped assignment, residual and probe LUT match their " +
-      "composable twins") {
+  test("residual and probe LUT match their composable twins") {
     val dim = 8
     val m = 2
     val sd = dim / m
@@ -124,23 +123,9 @@ class CellOpsSpec extends SparkSpec {
       Array.tabulate(8)(j =>
         Array.tabulate(sd)(d => ((s * 7 + j * 13 + d) % 97).toLong - 48)))
     val rows = (0 until 200).map(i =>
-      (i.toLong, (i % 3), Array.tabulate(dim)(d =>
-        ((i * 11 + d * 3) % 512).toLong)))
-    val df = rows.toDF("id", "g", "vq")
+      (i.toLong, Array.tabulate(dim)(d => ((i * 11 + d * 3) % 512).toLong)))
+    val df = rows.toDF("id", "vq")
     import org.apache.spark.sql.graft.bridge
-    // grouped nearest over a 3-group codebook
-    val g3: Array[Array[Array[Long]]] = Array.tabulate(3)(g =>
-      cents.map(_.map(_ + g)))
-    val got = df.select(col("id"), bridge.column(
-        graft.functions.NearestLongCellGrouped(bridge.expression(col("vq")),
-          bridge.expression(col("g")), g3)).as("c"))
-      .as[(Long, Int)].collect().sortBy(_._1)
-    val cl3 = typedLit(g3.map(_.map(_.toSeq).toSeq).toSeq)
-    val want = df.select(col("id"),
-        IvfPq.nearestLit(col("vq"), element_at(cl3, col("g") + 1),
-          cents.length).as("c"))
-      .as[(Long, Int)].collect().sortBy(_._1)
-    assert(got.toSeq == want.toSeq)
     // residual
     val cl = typedLit(cents.map(_.toSeq).toSeq)
     val cellCol = bridge.column(graft.functions.NearestLongCell(

@@ -122,17 +122,6 @@ class IvfPqSpec extends SparkSpec {
       again.books.map(_.map(_.toSeq).toSeq).toSeq)
   }
 
-  test("local and distributed training are bit-identical (the " +
-      "LocalTrainMax fast path changes latency, never the model)") {
-    val (kc, m, ks, ci, pi, _, _, _) = cfg
-    val local = IvfPq.train(vecs, "id", "vec", kc, m, ks, ci, pi)
-    val dist = IvfPq.train(vecs, "id", "vec", kc, m, ks, ci, pi,
-      trainSample = IvfPq.LocalTrainMax + 1)
-    assert(local.coarse.map(_.toSeq).toSeq == dist.coarse.map(_.toSeq).toSeq)
-    assert(local.books.map(_.map(_.toSeq).toSeq).toSeq ==
-      dist.books.map(_.map(_.toSeq).toSeq).toSeq)
-  }
-
   test("withCodes: cell + residual codes match the twin; frozen " +
       "model from another space fails loudly") {
     val (kc, m, ks, ci, pi, _, _, _) = cfg
@@ -234,7 +223,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("auto-cell quantized searches: nprobe >= numCells equals the " +
-      "flat result; pre-trained CellIndex ≡ inline training") {
+      "flat result") {
     val emb = graft.Tables.load(spark, sf("sf0.001"), "embeddings")
       .filter(col("vec_id") < 120)
     val probes = emb.filter(col("vec_id") < 5)
@@ -246,16 +235,18 @@ class IvfPqSpec extends SparkSpec {
       probes, "vec_id", "embedding", "_b", nprobe = 1, k = 5)
       .collect().toSeq
     assert(auto.map(_.toSeq).toSet == flat.map(_.toSeq).toSet)
-    val idx = CellIndex.train(emb, "vec_id", "embedding", numCells = 4)
-    val viaIdx = Quantize.ivfAdcTopKBatchAuto(emb, probes, "vec_id",
-      "embedding", nprobe = 4, k = 5, index = Some(idx)).collect().toSeq
-    assert(viaIdx.map(_.toSeq).toSet == auto.map(_.toSeq).toSet)
     val pqAuto = Pq.ivfPqTopKBatchAuto(emb, probes, "vec_id", "embedding",
       m = 8, ks = 4, nprobe = 4, k = 5, numCells = 4).collect().toSeq
-    val pqFlat = Pq.ivfPqTopKBatch(emb.withColumn("_b", lit(0)), probes,
-      "vec_id", "embedding", "_b", m = 8, ks = 4, nprobe = 1, k = 5)
-      .collect().toSeq
-    assert(pqAuto.map(_.toSeq).toSet == pqFlat.map(_.toSeq).toSet)
+    // flat twin: the exhaustive PQ-ADC top-k, one probe at a time,
+    // ranked by position
+    val pqFlat = probes.select(col("vec_id")).as[Long].collect().toSeq
+      .flatMap { pid =>
+        Pq.pqAdcTopK(emb, "vec_id", "embedding", m = 8, ks = 4, pid, k = 5)
+          .as[(Long, Double)].collect().toSeq.zipWithIndex
+          .map { case ((id, d), i) => Seq(pid, i + 1L, id, d) }
+      }
+    assert(pqAuto.nonEmpty)
+    assert(pqAuto.map(_.toSeq).toSet == pqFlat.toSet)
   }
 
   test("modelRows: one row per trained parameter") {

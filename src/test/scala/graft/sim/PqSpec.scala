@@ -88,6 +88,13 @@ class PqSpec extends SparkSpec {
       .select(col("id"), col("codes")).as[(Long, Seq[Int])].collect().toMap
     // sub 0 is identical everywhere → every row codes to cid 0 there
     assert(codes.values.forall(_.head == 0))
+    // a batch absent from the codebook's corpus codes against its
+    // centroids
+    val batch = Seq((100L, Seq(2.5f, 3.5f, 6.0f, 7.0f))).toDF("id", "vec")
+    val batchCodes = Pq.withPqCodes(batch, "vec",
+        Pq.pqCodebook(vecs, "id", "vec", m = 2, ks = 4))
+      .select(col("codes")).as[Seq[Int]].collect().head
+    assert(batchCodes.length == 2 && batchCodes.forall(c => c >= 0 && c < 4))
   }
 
   test("pqAdcTopK: ranks by centroid-reconstructed squared-L2, probe " +
@@ -115,15 +122,14 @@ class PqSpec extends SparkSpec {
     assert(got == want, s"got=$got want=$want")
   }
 
-  test("ivfPqTopKBatch at nprobe = #cells equals per-probe pqAdcTopK") {
-    val withCells = vecs.withColumn("cell", (col("id") % 2).cast("int"))
-    val probes = withCells.filter(col("id") < 2)
-    val batch = Pq.ivfPqTopKBatch(withCells, probes, "id", "vec", "cell",
-        m = 2, ks = 4, nprobe = 2, k = 3)
+  test("ivfPqTopKBatchAuto at nprobe = numCells equals per-probe pqAdcTopK") {
+    val probes = vecs.filter(col("id") < 2)
+    val batch = Pq.ivfPqTopKBatchAuto(vecs, probes, "id", "vec",
+        m = 2, ks = 4, nprobe = 2, k = 3, numCells = 2)
       .select(col("probe_id"), col("id"), col("pdist"))
       .as[(Long, Long, Double)].collect().toSet
     val single = (0L until 2L).flatMap { pid =>
-      Pq.pqAdcTopK(withCells, "id", "vec", m = 2, ks = 4, pid, k = 3)
+      Pq.pqAdcTopK(vecs, "id", "vec", m = 2, ks = 4, pid, k = 3)
         .as[(Long, Double)].collect().map { case (id, dd) => (pid, id, dd) }
     }.toSet
     assert(batch == single)
@@ -141,67 +147,6 @@ class PqSpec extends SparkSpec {
         "id", "vec", m = 2, ks = 2, k = 3)
       .as[(Long, Long)].collect().toMap
     assert(coarse.values.forall(n => n >= 0L && n <= 3L))
-  }
-
-  test("codebook artifact: save/load round trip codes identically; " +
-      "junk and ragged artifacts fail loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toFile
-    try {
-      val path = new java.io.File(dir, "cb").getAbsolutePath
-      val cb = Pq.pqCodebook(vecs, "id", "vec", m = 2, ks = 3)
-      Pq.saveCodebook(cb, path)
-      val loaded = Pq.loadCodebook(spark, path)
-      val a = Pq.withPqCodes(vecs, "vec", cb)
-        .select(col("id"), col("codes")).as[(Long, Seq[Int])].collect().toMap
-      val b = Pq.withPqCodes(vecs, "vec", loaded)
-        .select(col("id"), col("codes")).as[(Long, Seq[Int])].collect().toMap
-      assert(a == b)
-      val junkPath = new java.io.File(dir, "junk").getAbsolutePath
-      vecs.write.mode("overwrite").parquet(junkPath)
-      val e = intercept[IllegalArgumentException] {
-        Pq.loadCodebook(spark, junkPath)
-      }
-      assert(e.getMessage.contains("codebook"))
-      // ragged grid: a sub with fewer cids
-      val raggedPath = new java.io.File(dir, "ragged").getAbsolutePath
-      cb.filter(!(col("sub") === 1 && col("cid") === 2))
-        .write.mode("overwrite").parquet(raggedPath)
-      val e2 = intercept[IllegalArgumentException] {
-        Pq.loadCodebook(spark, raggedPath)
-      }
-      assert(e2.getMessage.contains("ragged"))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
-  }
-
-  test("frozen codebook: searches with a loaded artifact equal inline " +
-      "training, and a NEW batch codes against the frozen centroids " +
-      "(never re-sampled)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqf").toFile
-    try {
-      val path = new java.io.File(dir, "cb").getAbsolutePath
-      Pq.saveCodebook(Pq.pqCodebook(vecs, "id", "vec", m = 2, ks = 4), path)
-      val frozen = Pq.loadCodebook(spark, path)
-      val inline = Pq.pqAdcTopK(vecs, "id", "vec", m = 2, ks = 4,
-        probeId = 0L, k = 3).as[(Long, Double)].collect().toSeq
-      val viaArtifact = Pq.pqAdcTopK(vecs, "id", "vec", m = 2, ks = 4,
-          probeId = 0L, k = 3, codebook = Some(frozen))
-        .as[(Long, Double)].collect().toSeq
-      assert(viaArtifact == inline)
-      val recallInline = Pq.pqRecallBatch(vecs, vecs.filter(col("id") < 2),
-        "id", "vec", m = 2, ks = 4, k = 3).as[(Long, Long)].collect().toMap
-      val recallFrozen = Pq.pqRecallBatch(vecs, vecs.filter(col("id") < 2),
-          "id", "vec", m = 2, ks = 4, k = 3, codebook = Some(frozen))
-        .as[(Long, Long)].collect().toMap
-      assert(recallFrozen == recallInline)
-      // day-2 shape: a batch of vectors ABSENT from the training
-      // corpus codes against the frozen centroids — codes comparable
-      // across batches because the codebook never moved
-      val batch = Seq((100L, Seq(2.5f, 3.5f, 6.0f, 7.0f)))
-        .toDF("id", "vec")
-      val codes = Pq.withPqCodes(batch, "vec", frozen)
-        .select(col("codes")).as[Seq[Int]].collect().head
-      assert(codes.length == 2 && codes.forall(c => c >= 0 && c < 4))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
   test("preconditions: ragged vectors, indivisible dims and empty " +

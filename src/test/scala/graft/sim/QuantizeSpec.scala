@@ -91,30 +91,13 @@ class QuantizeSpec extends SparkSpec {
     assert(out == Seq((0L, 2L), (1L, 2L)))
   }
 
-  test("params artifact: save/load round trip codes identically") {
-    val dir = java.nio.file.Files.createTempDirectory("sq8p").toString
+  test("withSq8Codes: a batch outside the params' range clamps on " +
+      "both sides") {
     val params = Quantize.sq8Params(vecs, "vec")
-    Quantize.saveParams(params, s"$dir/params")
-    val loaded = Quantize.loadParams(spark, s"$dir/params")
-    val a = Quantize.withSq8Codes(vecs, "vec", params)
-      .select(col("id"), col("codes")).as[(Long, Seq[Int])].collect().toSet
-    val b = Quantize.withSq8Codes(vecs, "vec", loaded)
-      .select(col("id"), col("codes")).as[(Long, Seq[Int])].collect().toSet
-    assert(a == b)
-    // frozen ranges: a NEW batch outside the trained range still codes
-    // (clamped BOTH sides), so cross-batch codes stay comparable
     val batch = Seq((9L, Seq(-5.0f, 2.0f, 5.0f))).toDF("id", "vec")
-    val c = Quantize.withSq8Codes(batch, "vec", loaded)
+    val c = Quantize.withSq8Codes(batch, "vec", params)
       .select(col("codes")).as[Seq[Int]].collect().head
     assert(c == Seq(0, 255, 0))
-  }
-
-  test("loadParams rejects non-artifact inputs") {
-    val dir = java.nio.file.Files.createTempDirectory("sq8bad").toString
-    vecs.write.mode("overwrite").parquet(s"$dir/notparams")
-    intercept[IllegalArgumentException] {
-      Quantize.loadParams(spark, s"$dir/notparams")
-    }
   }
 
   test("adc distance of a vector against its own codes is small") {

@@ -37,33 +37,6 @@ class SimilaritySpec extends SparkSpec {
     assert((ivf -- brute).size <= 10) // sanity: sets comparable in size
   }
 
-  test("ivfTopKAuto with nprobe = numCells IS brute-force top-k") {
-    // the recall dial's exact end: probing every self-trained cell must
-    // reproduce cosineTopK identically — scores, ids, and order
-    val brute = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val auto = Similarity.ivfTopKAuto(emb, "vec_id", "embedding", 0L,
-        nprobe = 8, k = 10, numCells = 8)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(auto == brute)
-  }
-
-  test("ivfTopKAuto narrow probe: k rows, descending scores, subset-consistent") {
-    val narrow = Similarity.ivfTopKAuto(emb, "vec_id", "embedding", 0L,
-        nprobe = 2, k = 10, numCells = 8)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(narrow.size == 10)
-    assert(narrow.map(_._2) == narrow.map(_._2).sorted.reverse,
-      "scores must be descending")
-    // any id the narrow probe shares with the exact top-k carries the
-    // SAME score (the approximation changes which cells are searched,
-    // never the cosine arithmetic)
-    val brute = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(narrow.filter(t => brute.contains(t._1))
-      .forall(t => brute(t._1) == t._2))
-  }
-
   test("ivfTopKBatch with nprobe = numCells IS per-probe brute force") {
     import spark.implicits._
     val probes = emb.orderBy(col("vec_id")).limit(5)
