@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -39,8 +40,21 @@ import org.apache.spark.sql.types._
   *  - probe routing returns cells in the literal path's exact order:
   *    cosine descending / integer distance ascending, cell id
   *    ascending on ties.
-  * `AutoBlockSpec`/`IvfPqSpec` pin expression ≡ literal fold on real
+  * `AutoBlockSpec`/`CellOpsSpec` pin expression ≡ literal fold on real
   * corpora including a K = 256 configuration the gates never reach.
+  *
+  * Placement rule for per-row kernels: whole-stage codegen defers a
+  * deterministic Project output until its first use, and a
+  * BroadcastHashJoin does not force its stream side's columns — so a
+  * column first read by a score computed after a fan-out join is
+  * evaluated once per CANDIDATE, inside the join's match loop, not
+  * once per row. A per-row kernel whose output feeds such a score must
+  * share one expression with the join key (as [[LongPqEncode]]'s
+  * `struct(cell, codes)` does: the key forces the struct, the codes
+  * are then a field read), or be consumed before the join. Declare a
+  * kernel output non-nullable when it cannot be null, or the join's
+  * inferred `isnotnull(key)` filter pushes a second copy of the kernel
+  * under the join.
   */
 object CellOps {
 
@@ -93,7 +107,7 @@ object CellOps {
   }
 
   /** Integer squared L2 of an `array<long>` row against a centroid —
-    * the associative long sum of [[graft.sim.IvfPq]]'s `iDist`. */
+    * the associative long sum of [[longL2]]. */
   @inline private def iDistCent(vec: ArrayData,
                                 cent: Array[Long]): Long = {
     val n = vec.numElements()
@@ -132,7 +146,7 @@ object CellOps {
 
   /** Argmin integer-L2 cell: strict improvement on an ascending scan —
     * the literal fold's `d < acc.d` tie-break (smallest cell wins). */
-  def nearestLong(vec: ArrayData, cents: Array[Array[Long]]): Int = {
+  private def nearestLong(vec: ArrayData, cents: Array[Array[Long]]): Int = {
     var bi = 0
     var bd = iDistCent(vec, cents(0))
     var j = 1
@@ -142,6 +156,111 @@ object CellOps {
       j += 1
     }
     bi
+  }
+
+  /** The IVF-PQ code of one fixed-point vector, `struct(cell, codes)`:
+    * the nearest coarse cell ([[nearestLong]]), then per subvector `s`
+    * the book entry nearest to slice `s` of the residual against that
+    * cell — the composed `cell → residual → argmin over slice`
+    * construction, strict `<` everywhere (smallest cell / code id wins
+    * ties), in one call per row. A null vector fails: callers drop
+    * null vectors first, and the non-null result keeps the join on
+    * `cell` from inferring a second, filtering copy of this kernel. */
+  def pqEncode(vec: ArrayData, coarse: Array[Array[Long]],
+               books: Array[Array[Array[Long]]]): InternalRow = {
+    if (vec == null)
+      throw new IllegalArgumentException(
+        "CellOps.pqEncode: null vector (drop null vectors before coding)")
+    val cell = nearestLong(vec, coarse)
+    val c = coarse(cell)
+    val n = c.length
+    val res = new Array[Long](n)
+    var i = 0
+    while (i < n) { res(i) = vec.getLong(i) - c(i); i += 1 }
+    val m = books.length
+    val sd = n / m
+    val codes = new Array[Int](m)
+    var s = 0
+    while (s < m) {
+      val book = books(s)
+      val off = s * sd
+      var bi = 0
+      var bd = subDist(res, off, book(0))
+      var j = 1
+      while (j < book.length) {
+        val d = subDist(res, off, book(j))
+        if (d < bd) { bd = d; bi = j }
+        j += 1
+      }
+      codes(s) = bi
+      s += 1
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](cell, UnsafeArrayData.fromPrimitiveArray(codes)))
+  }
+
+  /** Integer squared L2 of `res(off until off + cent.length)` against
+    * a book entry. */
+  @inline private def subDist(res: Array[Long], off: Int,
+                              cent: Array[Long]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < cent.length) {
+      val d = res(off + i) - cent(i)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
+
+  /** ADC distance of one candidate: `Σ_s lut(s)(codes(s))`, summed in
+    * subvector order — the plain long sum of the `aggregate` fold it
+    * replaces. A code outside its LUT row fails, as the fold's
+    * `element_at` did. */
+  def adcSum(lut: ArrayData, codes: ArrayData): Long = {
+    val m = codes.numElements()
+    if (lut.numElements() < m)
+      throw new IllegalArgumentException(
+        s"CellOps.adcSum: $m codes against a ${lut.numElements()}-row LUT")
+    var acc = 0L
+    var s = 0
+    while (s < m) {
+      val row = lut.getArray(s)
+      val j = codes.getInt(s)
+      if (j < 0 || j >= row.numElements())
+        throw new IllegalArgumentException(
+          s"CellOps.adcSum: code $j outside LUT row $s of ${row.numElements()}")
+      acc += row.getLong(j)
+      s += 1
+    }
+    acc
+  }
+
+  /** Whether [[longL2]] is defined on `a`, `b`: equal lengths and no
+    * null element — where the `zip_with` fold it replaces is null. */
+  def longL2Defined(a: ArrayData, b: ArrayData): Boolean = {
+    val n = a.numElements()
+    if (b.numElements() != n) return false
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** Integer squared L2 of two `array<long>` rows of equal length —
+    * a plain associative long sum. */
+  def longL2(a: ArrayData, b: ArrayData): Long = {
+    val n = a.numElements()
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      val d = a.getLong(i) - b.getLong(i)
+      acc += d * d
+      i += 1
+    }
+    acc
   }
 
   /** `vec - cents(cell)` as `array<long>` — the residual the PQ books
@@ -277,46 +396,10 @@ case class NearestUnitCell(vec: Expression, nrm: Expression,
     copy(vec = newLeft, nrm = newRight)
 }
 
-/** Argmin integer-L2 cell id over a long centroid table —
-  * [[graft.sim.IvfPq]]'s assignment expression, reference-object form
-  * (see [[CellOps]]). */
-case class NearestLongCell(vec: Expression, cents: Array[Array[Long]])
-  extends UnaryExpression {
-
-  require(cents.nonEmpty, "NearestLongCell: empty centroid table")
-
-  override def child: Expression = vec
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_nearest_long_cell"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    vec.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects array<bigint>, got ${other.simpleString}")
-    }
-
-  override def dataType: DataType = IntegerType
-
-  override def nullSafeEval(v: Any): Any =
-    CellOps.nearestLong(v.asInstanceOf[ArrayData], cents)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val c = ctx.addReferenceObj("cents", cents, "long[][]")
-      s"${ev.value} = graft.functions.CellOps.nearestLong($v, $c);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NearestLongCell = copy(vec = newChild)
-}
-
 /** `vec - cents(cell)` — the coarse residual, reference-object form. */
 case class LongCellResidual(vec: Expression, cell: Expression,
                             cents: Array[Array[Long]])
-  extends BinaryExpression {
+  extends BinaryExpression with ExpectsInputTypes {
 
   require(cents.nonEmpty, "LongCellResidual: empty centroid table")
 
@@ -325,14 +408,7 @@ case class LongCellResidual(vec: Expression, cell: Expression,
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_long_cell_residual"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (vec.dataType, cell.dataType) match {
-      case (ArrayType(LongType, _), IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects (array<bigint>, int), got $other")
-    }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), IntegerType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -354,7 +430,7 @@ case class LongCellResidual(vec: Expression, cell: Expression,
 /** The per-(probe, cell) m×ks ADC LUT off a residual — books as a
   * reference object. */
 case class LongProbeLut(prl: Expression, books: Array[Array[Array[Long]]])
-  extends UnaryExpression {
+  extends UnaryExpression with ExpectsInputTypes {
 
   require(books.nonEmpty && books.forall(_.nonEmpty),
     "LongProbeLut: empty codebook")
@@ -363,14 +439,7 @@ case class LongProbeLut(prl: Expression, books: Array[Array[Array[Long]]])
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_long_probe_lut"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    prl.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects array<bigint>, got ${other.simpleString}")
-    }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   override def dataType: DataType =
     ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
@@ -386,6 +455,111 @@ case class LongProbeLut(prl: Expression, books: Array[Array[Array[Long]]])
 
   override protected def withNewChildInternal(
       newChild: Expression): LongProbeLut = copy(prl = newChild)
+}
+
+/** `struct(cell, codes)` of a fixed-point vector against a trained
+  * IVF-PQ model — [[graft.sim.IvfPq]]'s encode, one call per row
+  * ([[CellOps.pqEncode]]), coarse table and books as reference
+  * objects. Non-nullable: a null vector fails (see [[CellOps]] on why
+  * the join key must not be nullable). */
+case class LongPqEncode(vec: Expression, coarse: Array[Array[Long]],
+                        books: Array[Array[Array[Long]]])
+  extends UnaryExpression with ExpectsInputTypes {
+
+  require(coarse.nonEmpty && books.nonEmpty && books.forall(_.nonEmpty),
+    "LongPqEncode: empty coarse table or codebook")
+  require(coarse.forall(_.length == books.length * books(0)(0).length) &&
+      books.forall(_.forall(_.length == books(0)(0).length)),
+    "LongPqEncode: the books do not tile the coarse dimension")
+
+  override def child: Expression = vec
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_long_pq_encode"
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("cell", IntegerType, nullable = false),
+    StructField("codes", ArrayType(IntegerType, containsNull = false),
+      nullable = false)))
+
+  override def eval(input: InternalRow): Any =
+    CellOps.pqEncode(vec.eval(input).asInstanceOf[ArrayData], coarse, books)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = vec.genCode(ctx)
+    val cs = ctx.addReferenceObj("coarse", coarse, "long[][]")
+    val bs = ctx.addReferenceObj("books", books, "long[][][]")
+    ev.copy(code = code"""
+      ${v.code}
+      InternalRow ${ev.value} = graft.functions.CellOps.pqEncode(
+        ${v.isNull} ? null : ${v.value}, $cs, $bs);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): LongPqEncode = copy(vec = newChild)
+}
+
+/** ADC distance `Σ_s lut(s)(codes(s))` of a candidate against its
+  * per-(probe, cell) LUT ([[CellOps.adcSum]]). */
+case class AdcLutSum(lut: Expression, codes: Expression)
+  extends BinaryExpression with ExpectsInputTypes {
+
+  override def left: Expression = lut
+  override def right: Expression = codes
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "graft_adc_lut_sum"
+
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(ArrayType(LongType)), ArrayType(IntegerType))
+
+  override def dataType: DataType = LongType
+
+  override def nullSafeEval(l: Any, c: Any): Any =
+    CellOps.adcSum(l.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (l, c) => s"graft.functions.CellOps.adcSum($l, $c)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): AdcLutSum =
+    copy(lut = newLeft, codes = newRight)
+}
+
+/** Integer squared L2 of two `array<long>` columns ([[CellOps.longL2]]);
+  * null when the lengths differ or an element is null, as the
+  * `zip_with` fold it replaces. */
+case class LongL2(a: Expression, b: Expression)
+  extends BinaryExpression with ExpectsInputTypes {
+
+  override def left: Expression = a
+  override def right: Expression = b
+  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_long_l2"
+
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(LongType), ArrayType(LongType))
+
+  override def dataType: DataType = LongType
+
+  override def nullSafeEval(x: Any, y: Any): Any = {
+    val (xa, ya) = (x.asInstanceOf[ArrayData], y.asInstanceOf[ArrayData])
+    if (CellOps.longL2Defined(xa, ya)) CellOps.longL2(xa, ya) else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"""if (graft.functions.CellOps.longL2Defined($x, $y)) {
+         |  ${ev.value} = graft.functions.CellOps.longL2($x, $y);
+         |} else {
+         |  ${ev.isNull} = true;
+         |}""".stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): LongL2 =
+    copy(a = newLeft, b = newRight)
 }
 
 /** `array<int>` of the probe's `nprobe` nearest cells, cosine
@@ -434,7 +608,7 @@ case class RoutedUnitCells(vec: Expression, nrm: Expression,
   * ascending — [[graft.sim.IvfPq]]'s router, reference-object form. */
 case class RoutedLongCells(vec: Expression, cents: Array[Array[Long]],
                            nprobe: Int)
-  extends UnaryExpression {
+  extends UnaryExpression with ExpectsInputTypes {
 
   require(cents.nonEmpty, "RoutedLongCells: empty centroid table")
   require(nprobe >= 0, s"RoutedLongCells: nprobe must be >= 0, got $nprobe")
@@ -443,14 +617,7 @@ case class RoutedLongCells(vec: Expression, cents: Array[Array[Long]],
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "graft_routed_long_cells"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    vec.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects array<bigint>, got ${other.simpleString}")
-    }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 

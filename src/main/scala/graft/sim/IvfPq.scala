@@ -1,7 +1,9 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 /** TRAINED residual product quantization — the retrieval-quality tier
   * past [[Pq]]'s seeded-sample codebooks (FAISS's `IVFx,PQm` +
@@ -31,15 +33,20 @@ import org.apache.spark.sql.functions._
   * Distributed shape: training collects a bounded seeded SAMPLE
   * ([[DefaultTrainSample]] rows) and runs Lloyd on the driver — cost
   * never grows past it; the model is O((K + m·ks)·dim) longs of
-  * driver-held parameters broadcast as expression literals (never
-  * data rows); coding is one narrow
-  * codegen'd pass (cell + m codes per vector — ~9 small ints, the
-  * 100 TB index); search routes probes to `nprobe` cells on the
-  * broadcast side, builds each (probe, cell) ADC lookup table once,
-  * joins candidates by cell key only, heaps top-`refine` per probe
-  * ([[graft.ops.TopK.topKPerGroup]]), and only then fetches the
-  * shortlisted ids' raw vectors for the exact re-rank — the index
-  * never stores full-precision vectors.
+  * driver-held parameters carried by the expressions as reference
+  * objects (never data rows); coding is one narrow codegen'd pass,
+  * ONE fused kernel call per vector
+  * ([[graft.functions.LongPqEncode]]: cell + m codes — ~9 small
+  * ints, the 100 TB index), evaluated ahead of the cell join, so a
+  * search codes each corpus row once, not once per candidate;
+  * search routes probes to `nprobe` cells on the broadcast side,
+  * builds each (probe, cell) ADC lookup table once, joins
+  * candidates by cell key only, scores them with the codegen'd LUT
+  * sum ([[graft.functions.AdcLutSum]]), heaps top-`refine` per
+  * probe ([[graft.ops.TopK.topKPerGroup]]), and only then fetches
+  * the shortlisted ids' raw vectors for the exact re-rank (the
+  * codegen'd [[graft.functions.LongL2]]) — the index never stores
+  * full-precision vectors.
   */
 object IvfPq {
 
@@ -61,7 +68,7 @@ object IvfPq {
   /** The trained model: `coarse(cell)(dim)` cell centroids and
     * `books(sub)(cid)(subDim)` per-subvector residual codebooks, all
     * in [[Scale]] fixed point — O((K + m·ks)·dim) driver-held longs,
-    * broadcast as expression literals. */
+    * carried by the kernels as reference objects. */
   case class Model(coarse: Array[Array[Long]],
                    books: Array[Array[Array[Long]]]) {
     require(coarse.nonEmpty, "IvfPq.Model: no coarse centroids")
@@ -131,8 +138,8 @@ object IvfPq {
 
   /** Largest |coordinate| the fixed-point distance arithmetic can
     * carry at dimension `dim` with NO possibility of Long overflow:
-    * [[iDist]] sums `dim` squares of differences, each difference at
-    * most `2·max·Scale`, so safety needs
+    * the integer distances sum `dim` squares of differences, each
+    * difference at most `2·max·Scale`, so safety needs
     * `dim · (2·max·Scale)² < Long.MaxValue`, i.e.
     * `max < sqrt(Long.MaxValue / dim) / 2 / Scale` (~181 at dim 64).
     * Embedding pipelines are far below this (unit-norm coordinates
@@ -159,61 +166,21 @@ object IvfPq {
         .otherwise(floor(x.cast("double") * lit(Scale.toDouble))))
   }
 
-  /** Integer squared L2 between two `array<long>` columns — a plain
-    * sum of per-dim squares (associative: fold order is irrelevant,
-    * unlike the double-arithmetic [[Pq]] folds). */
-  private def iDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, t) => acc + t)
-
-  /** Argmin cell over a centroid-list LITERAL: fold over the list,
-    * strict `<` so the SMALLEST index wins exact ties. Superseded in
-    * every production path by the reference-object expression
-    * ([[nearestCell]] — r20, the large-K fix: plan/codegen O(1) in K
-    * instead of O(K·dim)); kept as the pinning twin IvfPqSpec asserts
-    * bit-equal at K = 256. */
-  private[graft] def nearestLit(vq: Column, cents: Column, n: Int): Column =
-    aggregate(sequence(lit(0), lit(n - 1)),
-      struct(lit(Long.MaxValue).as("d"), lit(-1).as("c")),
-      (acc, c) => {
-        val d = iDist(vq, element_at(cents, c + 1))
-        when(d < acc.getField("d"),
-          struct(d.as("d"), c.cast("int").as("c"))).otherwise(acc)
-      }).getField("c")
-
   // ---- reference-object expression builders (r20) -------------------
   // The centroid/book tables ride the expression as plain JVM arrays
   // (graft.functions.CellOps — the `might_contain` pattern), so plan
   // size and generated code are O(1) in K at any cell count; the
   // argmin arithmetic and tie-breaks are decision-identical to the
-  // literal folds above (IvfPqSpec pins it at K=256).
+  // literal folds they replaced (CellOpsSpec pins it at K=256).
 
-  private def nearestCell(vq: Column, cents: Array[Array[Long]]): Column = {
-    import org.apache.spark.sql.graft.bridge
-    bridge.column(graft.functions.NearestLongCell(
-      bridge.expression(vq), cents))
-  }
+  private def ex(c: Column): Expression = bridge.expression(c)
+  private def kernel(e: Expression): Column = bridge.column(e)
 
-  private def residualCol(vq: Column, cell: Column,
-                          cents: Array[Array[Long]]): Column = {
-    import org.apache.spark.sql.graft.bridge
-    bridge.column(graft.functions.LongCellResidual(
-      bridge.expression(vq), bridge.expression(cell), cents))
-  }
-
-  private def probeLutCol(prl: Column,
-                          books: Array[Array[Array[Long]]]): Column = {
-    import org.apache.spark.sql.graft.bridge
-    bridge.column(graft.functions.LongProbeLut(
-      bridge.expression(prl), books))
-  }
-
-  private def routedCellsCol(vq: Column, cents: Array[Array[Long]],
-                             nprobe: Int): Column = {
-    import org.apache.spark.sql.graft.bridge
-    bridge.column(graft.functions.RoutedLongCells(
-      bridge.expression(vq), cents, nprobe))
-  }
+  /** Integer squared L2 between two `array<long>` columns — a plain
+    * sum of per-dim squares (associative: fold order is irrelevant,
+    * unlike the double-arithmetic [[Pq]] folds). */
+  private def iDist(a: Column, b: Column): Column =
+    kernel(graft.functions.LongL2(ex(a), ex(b)))
 
   /** Validate + project the corpus to `(id, xq)` — null vectors
     * dropped, uniform dimension divisible by `m` enforced (ONE
@@ -355,21 +322,18 @@ object IvfPq {
     * `cell` + `codes` (~m+1 small ints) are the stored index. */
   def withCodes(df: DataFrame, vecCol: String, model: Model): DataFrame = {
     requireDim(df, vecCol, model, "IvfPq.withCodes")
-    val sd = model.subDim
-    // reference-object assignment (r20): cell, residual and per-sub
-    // codes each via one tight-loop expression — same integer argmins
-    // and tie-breaks as the literal-fold construction (spec-pinned),
-    // but the plan no longer carries the K·dim coarse table or the
-    // m·ks·subDim books as literals. `m` is model-sized and static,
-    // so the codes array is built by a Scala-level loop.
+    // ONE fused kernel per row (cell argmin, residual, per-sub
+    // argmins); `cell` and `codes` are field reads of its struct, so
+    // the cell join key forces the whole code before any fan-out join
+    // and a search never re-encodes a row per candidate (CellOps'
+    // placement rule)
     df.filter(col(vecCol).isNotNull)
       .withColumn("xq", quantizeChecked(col(vecCol), model.dim))
-      .withColumn("cell", nearestCell(col("xq"), model.coarse))
-      .withColumn("_rq", residualCol(col("xq"), col("cell"), model.coarse))
-      .withColumn("codes", array((0 until model.m).map(s =>
-        nearestCell(slice(col("_rq"), s * sd + 1, sd),
-          model.books(s))): _*))
-      .drop("_rq")
+      .withColumn("_enc", kernel(graft.functions.LongPqEncode(ex(col("xq")),
+        model.coarse, model.books)))
+      .withColumn("cell", col("_enc.cell"))
+      .withColumn("codes", col("_enc.codes"))
+      .drop("_enc")
   }
 
   /** The routed probe frame `(probe_id, pq, cell, lut)`: each probe
@@ -387,21 +351,21 @@ object IvfPq {
     // sort_array order), residual + m×ks LUT off the model arrays —
     // the plan carries none of them as literals.
     quantizedProbes(probes, idCol, vecCol, model)
-      .withColumn("_cells", routedCellsCol(col("pq"), model.coarse,
-        math.min(nprobe, model.kCells)))
+      .withColumn("_cells", kernel(graft.functions.RoutedLongCells(
+        ex(col("pq")), model.coarse, math.min(nprobe, model.kCells))))
       .select(col("probe_id"), col("pq"),
         explode(col("_cells")).as("cell"))
-      .withColumn("_prl", residualCol(col("pq"), col("cell"), model.coarse))
-      .withColumn("lut", probeLutCol(col("_prl"), model.books))
+      .withColumn("_prl", kernel(graft.functions.LongCellResidual(
+        ex(col("pq")), ex(col("cell")), model.coarse)))
+      .withColumn("lut", kernel(graft.functions.LongProbeLut(
+        ex(col("_prl")), model.books)))
       .drop("_prl")
   }
 
   /** ADC distance off the per-(probe, cell) LUT — integer, plain
     * associative sum. Expects `lut`/`codes` in scope. */
   private def adcFromLut: Column =
-    aggregate(sequence(lit(0), size(col("codes")) - 1), lit(0L),
-      (acc, s) => acc + element_at(element_at(col("lut"), s + 1),
-        element_at(col("codes"), s + 1) + 1))
+    kernel(graft.functions.AdcLutSum(ex(col("lut")), ex(col("codes"))))
 
   /** Batch IVF-PQ search with exact refine — the full production
     * shape. Probes route to `nprobe` cells (broadcast routing +

@@ -503,6 +503,21 @@ class PlanQualitySpec extends SparkSpec {
       "the routing table and the refine shortlist must broadcast")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       "the coded corpus must never shuffle-join or cross-join — the " +
-        "model rides as expression literals, not a joined frame")
+        "model rides in the kernels as reference objects, not a joined frame")
+  }
+
+  test("q146 trained IVF-PQ: the fused encode runs once per corpus row, " +
+      "in a Project below the cell join — never in a Filter") {
+    val p = plan("q146_ivfpq_topk")
+    // formatted explain details: "(n) Filter" then its Input/Condition
+    val filters = p.split("\n(?=\\(\\d+\\) )").filter(_.matches("(?s)\\(\\d+\\) Filter\n.*"))
+    assert(filters.nonEmpty, "the corpus scan must keep its null filter")
+    assert(!filters.exists(_.contains("graft_long_pq_encode")),
+      "the join's inferred isnotnull(cell) filter must not re-run the " +
+        "encode kernel:\n" + filters.mkString("\n"))
+    assert("graft_long_pq_encode\\(".r.findAllIn(p).size == 1,
+      "one encode per corpus row: cell and codes are fields of one struct")
+    assert(p.contains("graft_adc_lut_sum") && p.contains("graft_long_l2"),
+      "ADC and refine distances must be the codegen'd kernels")
   }
 }
