@@ -820,4 +820,72 @@ class CurateSpec extends SparkSpec {
     graft.ops.StageCut.release(ledger)
     graft.ops.StageCut.release(acc)
   }
+
+  test("AudioHash media path: full run and tracked daily run keep the " +
+      "audio nouns in the report, the ledger and the log") {
+    import spark.implicits._
+    import graft.multimodal.Multimodal
+    val audio = SimilarityMethod.AudioHash()
+    // corpus run: 4 byte-copies 1 (exact), 3 is the AU re-encode of 2
+    // (hash-identical, near), 9 carries no audio magic (validity)
+    val corpus0 = Seq(
+      (1L, Multimodal.synthStepWav(10L, 0)),
+      (2L, Multimodal.synthStepWav(20L, 0)),
+      (3L, Multimodal.synthStepAu(20L, 0)),
+      (4L, Multimodal.synthStepWav(10L, 0)),
+      (9L, Array[Byte](1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12)))
+      .toDF("media_id", "payload")
+    val fullLog = scala.collection.mutable.ArrayBuffer.empty[String]
+    val (corpus, full) = Curate.runMedia(corpus0, "media_id", "payload",
+      audio, m => fullLog.synchronized { fullLog += m })
+    assert(corpus.select("media_id").as[Long].collect().toSet == Set(1L, 2L))
+    assert(full == Curate.MediaReport(5, 4, 3, 2, Map("wav" -> 2L)))
+    assert(fullLog.toSeq == Seq(
+      "[curate-img] audio magic: 5 -> 4",
+      "[curate-img] exact byte dedup: 4 -> 3",
+      "[curate-img] near dedup (hash <= 7): 3 -> 2",
+      "[curate-img] kept 2 audios; formats: wav=2"), s"log: $fullLog")
+    // daily batch against that corpus, every stage firing:
+    //   101 byte-copies corpus 1           -> duplicate_of_corpus
+    //   102 gain-half of corpus 1          -> near_duplicate_of_corpus(1)
+    //   103 novel base                     -> kept
+    //   104 one window poked off 103       -> near_duplicate(103)
+    //   105 byte-copies 103                -> duplicate_bytes(103)
+    //   106 unrelated base, AU container   -> kept
+    //   110 no audio magic                 -> invalid_audio
+    val batch = Seq(
+      (101L, Multimodal.synthStepWav(10L, 0)),
+      (102L, Multimodal.synthStepWav(10L, 1)),
+      (103L, Multimodal.synthStepWav(40L, 0)),
+      (104L, Multimodal.synthStepWav(40L, 3)),
+      (105L, Multimodal.synthStepWav(40L, 0)),
+      (106L, Multimodal.synthStepAu(50L, 0)),
+      (110L, Array[Byte](9, 9, 9, 9, 9, 9, 9, 9, 9, 9, 9, 9)))
+      .toDF("media_id", "payload")
+    val incLog = scala.collection.mutable.ArrayBuffer.empty[String]
+    val (acc, report, ledger) = Curate.runIncrementalMediaTracked(
+      batch, corpus, "media_id", "payload", audio,
+      log = m => incLog.synchronized { incLog += m })
+    val accIds = acc.select("media_id").as[Long].collect().toSet
+    assert(accIds == Set(103L, 106L), s"accepted: $accIds")
+    assert(report == Curate.MediaReport(7, 6, 4, 2,
+      Map("wav" -> 1L, "au" -> 1L)))
+    val rows = ledger
+      .select(col("media_id"), col("stage"), col("reason"), col("winner_id"))
+      .as[(Long, String, String, Option[Long])].collect().sortBy(_._1).toSeq
+    assert(rows == Seq(
+      (101L, "exact", "duplicate_of_corpus", None),
+      (102L, "near", "near_duplicate_of_corpus", Some(1L)),
+      (104L, "near", "near_duplicate", Some(103L)),
+      (105L, "exact", "duplicate_bytes", Some(103L)),
+      (110L, "validity", "invalid_audio", None)), s"ledger: $rows")
+    assert(incLog.toSeq == Seq(
+      "[curate-img+] audio magic: 7 -> 6",
+      "[curate-img+] exact byte dedup (batch + corpus fps): 6 -> 4",
+      "[curate-img+] near dedup vs corpus (hash <= 7): 4 -> 2",
+      "[curate-img+] accepted 2 audios; formats: au=1, wav=1"),
+      s"log: $incLog")
+    graft.ops.StageCut.release(ledger)
+    graft.ops.StageCut.release(acc); corpus.unpersist()
+  }
 }
