@@ -38,9 +38,88 @@ object Curate {
                        afterNear: Long, dimProfile: Map[Int, Long])
 
   /** [[runMedia]]'s stage counts: the profile is a container-format
-    * histogram (png/jpeg/gif/bmp) of the surviving images. */
+    * histogram (png/jpeg/gif/bmp, or wav/aiff/au) of the survivors. */
   case class MediaReport(input: Long, afterValid: Long, afterExact: Long,
                          afterNear: Long, formatProfile: Map[String, Long])
+
+  /** What the curate stages need to know about one modality (text,
+    * embedding, media): the stage-1 columns (`score`) and keep
+    * predicate with its ledger stage and reason, the exact-dedup
+    * fingerprint with its corpus-table family and builder name and its
+    * batch-duplicate reason, the log wording, and the stage-4 profile —
+    * the report plus the log tail that follows the survivor noun. */
+  private case class Modality[R](
+      tag: String, content: String,
+      score: DataFrame => DataFrame, keep: Column,
+      validStage: String, invalid: String, validLog: String,
+      fp: Column, family: String, builder: String,
+      dup: String, exactLog: String, nearLog: String,
+      kept: String, accepted: String,
+      profile: (DataFrame, Long, Long, Long, Long) => (R, String))
+
+  private def render[K: Ordering](m: Map[K, Long]): String =
+    m.toSeq.sortBy(_._1).map { case (k, n) => s"$k=$n" }.mkString(", ")
+
+  /** One small aggregation: survivor count per `key`. */
+  private def histogram[K](df: DataFrame, key: Column): Map[K, Long] =
+    df.groupBy(key).agg(count(lit(1)).as("n")).collect()
+      .map(r => r.getAs[K](0) -> r.getLong(1)).toMap
+
+  /** Text: quality score >= `minQuality`, normalized-text fingerprint,
+    * a language/token profile. */
+  private def textModality(textCol: String, minQuality: Double,
+                           method: SimilarityMethod) = Modality[Report](
+    "curate", textCol, TextOps.withQualityScore(_, textCol, "quality"),
+    col("quality") >= minQuality, "quality", "low_quality",
+    s"quality >= $minQuality", TextOps.fingerprint(col(textCol)),
+    "_fp_text", "textFingerprints", "duplicate_text", "exact dedup",
+    method.getClass.getSimpleName, "docs", "new docs",
+    (curated, in, q, e, n) => {
+      val profile = curated
+        .transform(TextOps.withLangId(_, textCol, "_lang"))
+        .groupBy(col("_lang"))
+        .agg(count(lit(1)).as("n"), sum(TextOps.tokenCount(col(textCol))).as("toks"))
+        .collect()
+      val langs = profile.map(r => r.getString(0) -> r.getLong(1)).toMap
+      val tokens = profile.map(r => r.getLong(2)).sum
+      (Report(in, q, e, n, langs, tokens),
+        s", $tokens tokens; languages: ${render(langs)}")
+    })
+
+  /** Embedding: [[validVector]], the [[vecFp]] fingerprint, a dimension
+    * histogram. */
+  private def embModality(embCol: String,
+                          method: SimilarityMethod.EmbeddingCosine) =
+    Modality[EmbReport](
+      "curate-emb", embCol, identity, validVector(embCol), "validity",
+      "invalid_vector", "valid vectors", vecFp(embCol), "_fp_emb",
+      "embeddingFingerprints", "duplicate_vector", "exact vector dedup",
+      s"cos >= ${method.minCos}", "vectors", "new vectors",
+      (curated, in, v, e, n) => {
+        val dims = histogram[Int](curated, size(col(embCol)).as("_dim"))
+        (EmbReport(in, v, e, n, dims), s"; dims: ${render(dims)}")
+      })
+
+  /** Media: a container magic of the method's medium (image magics for
+    * [[SimilarityMethod.ImageDHash]], audio magics for
+    * [[SimilarityMethod.AudioHash]]), md5 of the raw bytes, a
+    * container-format histogram. */
+  private def mediaModality(payloadCol: String,
+                            method: SimilarityMethod.PerceptualHash) = {
+    val (format, kind) = method match {
+      case _: SimilarityMethod.ImageDHash => (imageFormat(payloadCol), "image")
+      case _: SimilarityMethod.AudioHash  => (audioFormat(payloadCol), "audio")
+    }
+    Modality[MediaReport](
+      "curate-img", payloadCol, identity, format.isNotNull, "validity",
+      s"invalid_$kind", s"$kind magic", md5(col(payloadCol)), "_fp_img",
+      "mediaFingerprints", "duplicate_bytes", "exact byte dedup",
+      s"hash <= ${method.maxHamming}", s"${kind}s", s"${kind}s",
+      (curated, in, v, e, n) => {
+        val formats = histogram[String](curated, format.as("_fmt"))
+        (MediaReport(in, v, e, n, formats), s"; formats: ${render(formats)}")
+      })
+  }
 
   /** Stage-1 shape shared by every pipeline: run `stage` over the input
     * with the raw row count observed on the SAME scan (at 100 TB a
@@ -131,9 +210,9 @@ object Curate {
     * append the accepted batch's fingerprints after each run.
     *
     * The fingerprint column NAME carries the method family
-    * (`_fp_text` vs `_fp_emb`) so a cross-wired artifact — a text
-    * table handed to an embedding run or vice versa — fails loudly at
-    * the consuming join instead of being silently inert (both are md5
+    * (`_fp_text`, `_fp_emb`, `_fp_img`) so a cross-wired artifact — a
+    * text table handed to an embedding run or vice versa — fails loudly
+    * at the consuming join instead of being silently inert (all are md5
     * strings, so a value-level mix-up would simply never match and
     * corpus-exact batch rows would survive to the near stage). The
     * family check is schema-only: zero scan cost. */
@@ -143,6 +222,12 @@ object Curate {
   /** See [[textFingerprints]]. */
   def embeddingFingerprints(corpus: DataFrame, embCol: String): DataFrame =
     corpus.select(vecFp(embCol).as("_fp_emb")).distinct()
+
+  /** The corpus BYTE-fingerprint table of the media incremental run —
+    * md5 of the binary payload (bit-identical files, the crawl's
+    * literal re-downloads, no decode). See [[textFingerprints]]. */
+  def mediaFingerprints(corpus: DataFrame, payloadCol: String): DataFrame =
+    corpus.select(md5(col(payloadCol)).as("_fp_img")).distinct()
 
   /** Family-checks a caller-supplied fingerprint table and normalizes
     * it to the internal `_fp` name. Schema-only — no data read. */
@@ -160,51 +245,93 @@ object Curate {
     fps.select(col(wantCol).as("_fp"))
   }
 
-  def run(docs: DataFrame, idCol: String, textCol: String,
-          minQuality: Double = 0.5,
-          method: SimilarityMethod = SimilarityMethod.MinHashLsh(minJaccard = 0.8),
-          log: String => Unit = m => System.err.println(m)): (DataFrame, Report) = {
-    // stage 1: quality — pure map, the filter rides the scan
-    val (quality, input, afterQuality) = observedStage(docs,
-      _.transform(TextOps.withQualityScore(_, textCol, "quality"))
-        .filter(col("quality") >= minQuality))
-    log(s"[curate] quality >= $minQuality: $input -> $afterQuality")
+  /** The full curation run, one body for every modality: (1) the keep
+    * predicate, filtered on the scan; (2) exact dedup, min id per
+    * fingerprint; (3) near-dup clusters ([[SimilarJoin.similarClusters]]),
+    * every non-representative member dropped; (4) the survivor profile.
+    * Each stage is cut and counted before its input is released. */
+  private def curate[R](docs: DataFrame, idCol: String, m: Modality[R],
+                        method: SimilarityMethod,
+                        log: String => Unit): (DataFrame, R) = {
+    val (valid, input, afterValid) =
+      observedStage(docs, d => m.score(d).filter(m.keep))
+    log(s"[${m.tag}] ${m.validLog}: $input -> $afterValid")
 
-    // stage 2: exact dedup, keep min id per normalized-text fingerprint
-    val exact = keepMinPerFp(
-        quality.withColumn("_fp", TextOps.fingerprint(col(textCol))), idCol)
+    val exact = keepMinPerFp(valid.withColumn("_fp", m.fp), idCol)
       .drop("_fp")
       .transform(graft.ops.StageCut.apply)
     val afterExact = exact.count()
-    graft.ops.StageCut.release(quality)
-    log(s"[curate] exact dedup: $afterQuality -> $afterExact")
+    graft.ops.StageCut.release(valid)
+    log(s"[${m.tag}] ${m.exactLog}: $afterValid -> $afterExact")
 
-    // stage 3: near-dup clusters over the exact-deduped corpus; every
-    // non-representative member (cluster != id) is dropped
-    val clusters = SimilarJoin.similarClusters(exact, idCol, textCol, method)
-    val dropIds = clusters.filter(col("cluster") =!= col("id"))
-      .select(col("id").as(idCol))
-    val curated = exact.join(dropIds, Seq(idCol), "left_anti")
-      .transform(graft.ops.StageCut.apply)
-    val afterNear = curated.count()
+    val (curated, afterNear) = Stages.nearWithin(Stages.DropLedger.off,
+      exact, SimilarJoin.similarClusters(exact, idCol, m.content, method), idCol)
     graft.ops.StageCut.release(exact)
-    log(s"[curate] near dedup (${method.getClass.getSimpleName}): " +
-      s"$afterExact -> $afterNear")
+    log(s"[${m.tag}] near dedup (${m.nearLog}): $afterExact -> $afterNear")
 
-    // stage 4: profile of the surviving corpus — one small aggregation
-    val profile = curated
-      .transform(TextOps.withLangId(_, textCol, "_lang"))
-      .groupBy(col("_lang"))
-      .agg(count(lit(1)).as("n"), sum(TextOps.tokenCount(col(textCol))).as("toks"))
-      .collect()
-    val langProfile = profile.map(r => r.getString(0) -> r.getLong(1)).toMap
-    val totalTokens = profile.map(r => r.getLong(2)).sum
-    log(s"[curate] kept $afterNear docs, $totalTokens tokens; languages: " +
-      langProfile.toSeq.sortBy(_._1).map { case (l, n) => s"$l=$n" }.mkString(", "))
-
-    (curated, Report(input, afterQuality, afterExact, afterNear,
-      langProfile, totalTokens))
+    val (report, tail) = m.profile(curated, input, afterValid, afterExact, afterNear)
+    log(s"[${m.tag}] kept $afterNear ${m.kept}$tail")
+    (curated, report)
   }
+
+  /** The incremental run, one body for every modality: the [[curate]]
+    * stages over the BATCH only, each against the standing corpus.
+    * (1) the keep predicate; its ledger fragment is the in-row
+    * complement `not(pred <=> true)` — exactly the rows the filter
+    * dropped (false AND null verdicts), no id anti-join. (2) exact dedup
+    * within the batch, then against the corpus fingerprint table, which
+    * is probed and never shuffled ([[corpusFpHits]]); `afterValid`
+    * (already counted) soundly bounds the distinct batch fingerprints,
+    * so the guard skips its own count. (3) ONE component pass over
+    * within-batch + batch×corpus pairs ([[Stages.batchNearDrops]]) with
+    * the method `nearMethod` yields when the stage starts. (4) the
+    * profile of the ACCEPTED batch (the corpus is unchanged by
+    * construction). */
+  private def curateIncremental[R](batch: DataFrame, corpus: DataFrame,
+                                   idCol: String, m: Modality[R],
+                                   nearMethod: () => SimilarityMethod,
+                                   corpusSigs: Option[DataFrame],
+                                   corpusFps: Option[DataFrame],
+                                   keepLedger: Boolean,
+                                   log: String => Unit): (DataFrame, R, Option[DataFrame]) = {
+    val tag = s"[${m.tag}+]"
+    val ledger = new Stages.DropLedger(keepLedger, idCol, batch.schema(idCol).dataType)
+    val (valid, input, afterValid) =
+      observedStage(batch, d => m.score(d).filter(m.keep))
+    ledger.drop(m.score(batch).filter(!(m.keep <=> lit(true))),
+      m.validStage, lit(m.invalid))
+    log(s"$tag ${m.validLog}: $input -> $afterValid")
+
+    val cfps = corpusFps.map(requireFps(_, m.family, m.builder))
+      .getOrElse(corpus.select(m.fp.as(m.family)).distinct()
+        .select(col(m.family).as("_fp")))
+    val withFp = valid.withColumn("_fp", m.fp)
+    val fps = new Stages.MinIdPerFp(ledger, withFp.select(col("_fp"), col(idCol)), idCol)
+    val batchFp = withFp.join(fps.keepIds, Seq("_fp", idCol), "left_semi")
+    val fpHits = corpusFpHits(batchFp, "_fp", cfps, afterValid)
+    val exact = batchFp.join(fpHits, Seq("_fp"), "left_anti")
+      .drop("_fp")
+      .transform(graft.ops.StageCut.apply)
+    val afterExact = exact.count()
+    fps.attribute(m.dup, Some(fpHits))
+    graft.ops.StageCut.release(valid)
+    log(s"$tag ${m.exactLog} (batch + corpus fps): $afterValid -> $afterExact")
+
+    val (curated, afterNear) = Stages.nearVsCorpus(ledger, exact, corpus,
+      idCol, m.content, nearMethod(), corpusSigs)
+    graft.ops.StageCut.release(exact)
+    log(s"$tag near dedup vs corpus (${m.nearLog}): $afterExact -> $afterNear")
+
+    val (report, tail) = m.profile(curated, input, afterValid, afterExact, afterNear)
+    log(s"$tag accepted $afterNear ${m.accepted}$tail")
+    (curated, report, ledger.result())
+  }
+
+  def run(docs: DataFrame, idCol: String, textCol: String,
+          minQuality: Double = 0.5,
+          method: SimilarityMethod = SimilarityMethod.MinHashLsh(minJaccard = 0.8),
+          log: String => Unit = m => System.err.println(m)): (DataFrame, Report) =
+    curate(docs, idCol, textModality(textCol, minQuality, method), method, log)
 
   /** Curation over an EMBEDDING column — the multimodal-corpus shape:
     * image/audio/video rows carry no text, only a vector, so the text
@@ -226,43 +353,8 @@ object Curate {
     * of the survivors (the lang/token profile has no meaning here). */
   def runEmbedding(docs: DataFrame, idCol: String, embCol: String,
                    method: SimilarityMethod.EmbeddingCosine,
-                   log: String => Unit = m => System.err.println(m)): (DataFrame, EmbReport) = {
-    // stage 1: validity — pure codegen'd filter riding the scan
-    val (valid, input, afterValid) = observedStage(docs,
-      _.filter(validVector(embCol)))
-    log(s"[curate-emb] valid vectors: $input -> $afterValid")
-
-    // stage 2: exact dedup, keep min id per identical vector
-    val exact = keepMinPerFp(valid.withColumn("_fp", vecFp(embCol)), idCol)
-      .drop("_fp")
-      .transform(graft.ops.StageCut.apply)
-    val afterExact = exact.count()
-    graft.ops.StageCut.release(valid)
-    log(s"[curate-emb] exact vector dedup: $afterValid -> $afterExact")
-
-    // stage 3: near-dup clusters at cosine >= minCos; every
-    // non-representative member (cluster != id) is dropped
-    val clusters = SimilarJoin.similarClusters(exact, idCol, embCol, method)
-    val dropIds = clusters.filter(col("cluster") =!= col("id"))
-      .select(col("id").as(idCol))
-    val curated = exact.join(dropIds, Seq(idCol), "left_anti")
-      .transform(graft.ops.StageCut.apply)
-    val afterNear = curated.count()
-    graft.ops.StageCut.release(exact)
-    log(s"[curate-emb] near dedup (cos >= ${method.minCos}): " +
-      s"$afterExact -> $afterNear")
-
-    // stage 4: dimension histogram of the survivors — one tiny agg
-    val profile = curated
-      .groupBy(size(col(embCol)).as("_dim"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    val dimProfile = profile.map(r => r.getInt(0) -> r.getLong(1)).toMap
-    log(s"[curate-emb] kept $afterNear vectors; dims: " +
-      dimProfile.toSeq.sortBy(_._1).map { case (d, n) => s"$d=$n" }.mkString(", "))
-
-    (curated, EmbReport(input, afterValid, afterExact, afterNear, dimProfile))
-  }
+                   log: String => Unit = m => System.err.println(m)): (DataFrame, EmbReport) =
+    curate(docs, idCol, embModality(embCol, method), method, log)
 
   /** The four JDK-decodable image containers by magic prefix — the
     * expression twin of `Multimodal.ImageIoCodec.sniff`, usable as a
@@ -292,76 +384,42 @@ object Curate {
       .otherwise(lit(null))
   }
 
-  /** The validity/profile format column for a perceptual-hash method:
-    * image magics for [[SimilarityMethod.ImageDHash]], audio magics
-    * for [[SimilarityMethod.AudioHash]]. */
-  private def mediaFormat(payloadCol: String,
-                          method: SimilarityMethod.PerceptualHash): Column =
-    method match {
-      case _: SimilarityMethod.ImageDHash => imageFormat(payloadCol)
-      case _: SimilarityMethod.AudioHash  => audioFormat(payloadCol)
-    }
-
-  /** The validity-stage ledger reason / log noun per media method. */
-  private def mediaKind(method: SimilarityMethod.PerceptualHash): String =
-    method match {
-      case _: SimilarityMethod.ImageDHash => "image"
-      case _: SimilarityMethod.AudioHash  => "audio"
-    }
-
-  /** Curation over a binary IMAGE column — [[runEmbedding]]'s contract
-    * with perceptual stages: (1) validity = the payload carries a
-    * JDK-decodable image magic (pure codegen'd prefix check riding the
-    * scan — no decode); (2) exact dedup = keep min id per md5 of the
-    * raw BYTES (bit-identical files — the crawl's literal re-downloads
-    * — collapse without any decode either); (3) near-dup =
-    * [[SimilarJoin.similarClusters]] with
-    * [[SimilarityMethod.ImageDHash]] — the ONE O(pixels) decode pass,
-    * producing 64-bit dHashes banded exactly like SimHash text
-    * signatures; rows whose magic lied (undecodable behind a valid
-    * prefix) have no hash, never pair, and survive as singletons — the
-    * per-row degrade contract of the multimodal layer; (4) a
-    * container-format histogram of the survivors. */
+  /** Curation over a binary IMAGE or AUDIO column — [[runEmbedding]]'s
+    * contract with perceptual stages: (1) validity = the payload
+    * carries a JDK-decodable container magic of the method's medium
+    * (pure codegen'd prefix check riding the scan — no decode); (2)
+    * exact dedup = keep min id per md5 of the raw BYTES (bit-identical
+    * files — the crawl's literal re-downloads — collapse without any
+    * decode either); (3) near-dup = [[SimilarJoin.similarClusters]]
+    * with the perceptual hash — the ONE decode pass, producing 64-bit
+    * hashes banded exactly like SimHash text signatures; rows whose
+    * magic lied (undecodable behind a valid prefix) have no hash, never
+    * pair, and survive as singletons — the per-row degrade contract of
+    * the multimodal layer; (4) a container-format histogram of the
+    * survivors. */
   def runMedia(media: DataFrame, idCol: String, payloadCol: String,
                method: SimilarityMethod.PerceptualHash = SimilarityMethod.ImageDHash(),
-               log: String => Unit = m => System.err.println(m)): (DataFrame, MediaReport) = {
-    // stage 1: validity — prefix check only, rides the scan
-    val (valid, input, afterValid) = observedStage(media,
-      _.filter(mediaFormat(payloadCol, method).isNotNull))
-    log(s"[curate-img] ${mediaKind(method)} magic: $input -> $afterValid")
+               log: String => Unit = m => System.err.println(m)): (DataFrame, MediaReport) =
+    curate(media, idCol, mediaModality(payloadCol, method), method, log)
 
-    // stage 2: exact byte dedup, keep min id per payload md5 — (fp, id)
-    // only through the exchange, never the payload bytes
-    val exact = keepMinPerFp(valid.withColumn("_fp", md5(col(payloadCol))), idCol)
-      .drop("_fp")
-      .transform(graft.ops.StageCut.apply)
-    val afterExact = exact.count()
-    graft.ops.StageCut.release(valid)
-    log(s"[curate-img] exact byte dedup: $afterValid -> $afterExact")
-
-    // stage 3: perceptual near-dup clusters; every non-representative
-    // member (cluster != id) is dropped
-    val clusters = SimilarJoin.similarClusters(exact, idCol, payloadCol, method)
-    val dropIds = clusters.filter(col("cluster") =!= col("id"))
-      .select(col("id").as(idCol))
-    val curated = exact.join(dropIds, Seq(idCol), "left_anti")
-      .transform(graft.ops.StageCut.apply)
-    val afterNear = curated.count()
-    graft.ops.StageCut.release(exact)
-    log(s"[curate-img] near dedup (hash <= ${method.maxHamming}): " +
-      s"$afterExact -> $afterNear")
-
-    // stage 4: container histogram of the survivors — one tiny agg
-    val profile = curated
-      .groupBy(mediaFormat(payloadCol, method).as("_fmt"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    val formatProfile = profile.map(r => r.getString(0) -> r.getLong(1)).toMap
-    log(s"[curate-img] kept $afterNear ${mediaKind(method)}s; formats: " +
-      formatProfile.toSeq.sortBy(_._1).map { case (f, n) => s"$f=$n" }.mkString(", "))
-
-    (curated, MediaReport(input, afterValid, afterExact, afterNear, formatProfile))
-  }
+  /** The embedding daily run's near-dup method. For the auto-blocked
+    * method ONE cell index trained on the CORPUS serves both pair
+    * finders (the within-batch join stays exact under any index — radii
+    * recompute over the frame actually joined; the stale-index
+    * CellIndexSpec pin is exactly this property), so the daily run
+    * trains zero new models instead of two. BOOTSTRAP guard: an empty
+    * (or all-invalid) corpus trains zero centroids, and injecting that
+    * empty index would short-circuit the WITHIN-BATCH join too — day-one
+    * batch near-dups would all be accepted — so the method is then left
+    * untouched and the batch self-join trains on the batch itself. */
+  private def corpusIndexed(corpus: DataFrame, idCol: String, embCol: String,
+                            method: SimilarityMethod.EmbeddingCosine): SimilarityMethod =
+    method match {
+      case e @ SimilarityMethod.EmbeddingCosine(_, None, cells, iters, None) =>
+        val idx = graft.sim.CellIndex.train(corpus, idCol, embCol, cells, iters)
+        if (idx.centroids.nonEmpty) e.copy(index = Some(idx)) else e
+      case other => other
+    }
 
   /** INCREMENTAL embedding curation — [[runIncremental]]'s contract
     * (corpus survivors INVARIANT, one component pass over within-batch
@@ -383,8 +441,9 @@ object Curate {
                               method: SimilarityMethod.EmbeddingCosine,
                               corpusFps: Option[DataFrame] = None,
                               log: String => Unit = m => System.err.println(m)): (DataFrame, EmbReport) = {
-    val (curated, report, _) = runIncrementalEmbeddingImpl(newVecs, corpus,
-      idCol, embCol, method, corpusFps, keepLedger = false, log)
+    val (curated, report, _) = curateIncremental(newVecs, corpus, idCol,
+      embModality(embCol, method), () => corpusIndexed(corpus, idCol, embCol, method),
+      None, corpusFps, keepLedger = false, log)
     (curated, report)
   }
 
@@ -398,171 +457,43 @@ object Curate {
                               method: SimilarityMethod.EmbeddingCosine,
                               corpusFps: Option[DataFrame] = None,
                               log: String => Unit = m => System.err.println(m)): (DataFrame, EmbReport, DataFrame) = {
-    val (curated, report, ledger) = runIncrementalEmbeddingImpl(newVecs,
-      corpus, idCol, embCol, method, corpusFps, keepLedger = true, log)
+    val (curated, report, ledger) = curateIncremental(newVecs, corpus, idCol,
+      embModality(embCol, method), () => corpusIndexed(corpus, idCol, embCol, method),
+      None, corpusFps, keepLedger = true, log)
     (curated, report, ledger.get)
   }
-
-  private def runIncrementalEmbeddingImpl(newVecs: DataFrame, corpus: DataFrame,
-                              idCol: String, embCol: String,
-                              method: SimilarityMethod.EmbeddingCosine,
-                              corpusFps: Option[DataFrame],
-                              keepLedger: Boolean,
-                              log: String => Unit): (DataFrame, EmbReport, Option[DataFrame]) = {
-    val stage = (df: DataFrame) => graft.ops.StageCut(df)
-    val ledgerFrags = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def frag(df: => DataFrame): Unit = if (keepLedger) {
-      ledgerFrags += stage(df)
-    }
-    def noWin = lit(null).cast(newVecs.schema(idCol).dataType).as("winner_id")
-
-    // stage 1: validity on the BATCH only (the corpus already passed).
-    // The ledger fragment is the IN-ROW COMPLEMENT of the keep
-    // predicate (r20): `not(pred <=> true)` keeps exactly the rows
-    // `filter(pred)` dropped (false AND null verdicts), so no id
-    // anti-join exchange.
-    val (valid, input, afterValid) = observedStage(newVecs,
-      _.filter(validVector(embCol)))
-    frag(newVecs.filter(!(validVector(embCol) <=> lit(true)))
-      .select(col(idCol), lit("validity").as("stage"),
-        lit("invalid_vector").as("reason"), noWin))
-    log(s"[curate-emb+] valid vectors: $input -> $afterValid")
-
-    // stage 2: exact vector dedup within the batch, then against the
-    // corpus — the standing fingerprint table is probed, never
-    // shuffled ([[corpusFpHits]]). Ledger mode materializes the
-    // (fp, id) frame once so attribution never re-fingerprints.
-    val cfps = corpusFps.map(requireFps(_, "_fp_emb", "embeddingFingerprints"))
-      .getOrElse(embeddingFingerprints(corpus, embCol)
-        .select(col("_fp_emb").as("_fp")))
-    val withFp = valid.withColumn("_fp", vecFp(embCol))
-    val fpAll =
-      if (keepLedger) Some(stage(withFp.select(col("_fp"), col(idCol))))
-      else None
-    val keepIds = fpAll.getOrElse(withFp.select(col("_fp"), col(idCol)))
-      .groupBy(col("_fp")).agg(min(col(idCol)).as(idCol))
-    val batchFp = withFp.join(keepIds, Seq("_fp", idCol), "left_semi")
-    // the hit set comes back broadcast-hinted (or guard-fallback plain)
-    // from corpusFpHits — the hint decision lives there
-    // r21: afterValid (already counted) soundly bounds the distinct
-    // batch fingerprint count — the guard skips its dedicated count
-    val fpHits = corpusFpHits(batchFp, "_fp", cfps, afterValid)
-    val exact = batchFp
-      .join(fpHits, Seq("_fp"), "left_anti")
-      .drop("_fp")
-      .transform(stage)
-    val afterExact = exact.count()
-    fpAll.foreach { fa =>
-      frag(fa.join(keepIds.withColumnRenamed(idCol, "_win"), Seq("_fp"))
-        .join(fpHits.withColumn("_c", lit(true)), Seq("_fp"), "left")
-        .filter(col("_c").isNotNull || col(idCol) =!= col("_win"))
-        .select(col(idCol), lit("exact").as("stage"),
-          when(col("_c").isNotNull, lit("duplicate_of_corpus"))
-            .otherwise(lit("duplicate_vector")).as("reason"),
-          when(col("_c").isNotNull, lit(null)).otherwise(col("_win"))
-            .as("winner_id")))
-      graft.ops.StageCut.release(fa)
-    }
-    graft.ops.StageCut.release(valid)
-    log(s"[curate-emb+] exact vector dedup (batch + corpus fps): " +
-      s"$afterValid -> $afterExact")
-
-    // stage 3: the shared incremental component pass. For the
-    // auto-blocked method, ONE cell index trained on the CORPUS serves
-    // both pair finders (the within-batch join stays exact under any
-    // index — radii recompute over the frame actually joined; the
-    // stale-index CellIndexSpec pin is exactly this property), so the
-    // daily run trains zero new models instead of two.
-    val m3 = method match {
-      case e @ SimilarityMethod.EmbeddingCosine(_, None, cells, iters, None) =>
-        val idx = graft.sim.CellIndex.train(corpus, idCol, embCol, cells, iters)
-        // BOOTSTRAP guard: an empty (or all-invalid) corpus trains zero
-        // centroids, and injecting that empty index would short-circuit
-        // the WITHIN-BATCH join too — day-one batch near-dups would all
-        // be accepted. Leave the method untouched so the batch self-join
-        // trains on the batch itself.
-        if (idx.centroids.nonEmpty) e.copy(index = Some(idx)) else e
-      case other => other
-    }
-    val nearDrops =
-      if (keepLedger) {
-        Some(stage(batchNearDrops(exact, corpus, idCol, embCol, m3)))
-      } else None
-    val curated = nearDrops
-      .map(d => exact.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
-      .getOrElse(dropBatchNearDups(exact, corpus, idCol, embCol, m3))
-      .transform(stage)
-    val afterNear = curated.count()
-    nearDrops.foreach { d =>
-      frag(d.select(col(idCol), lit("near").as("stage"),
-        when(col("_corpus"), lit("near_duplicate_of_corpus"))
-          .otherwise(lit("near_duplicate")).as("reason"),
-        col("_win").as("winner_id")))
-      graft.ops.StageCut.release(d)
-    }
-    graft.ops.StageCut.release(exact)
-    log(s"[curate-emb+] near dedup vs corpus (cos >= ${method.minCos}): " +
-      s"$afterExact -> $afterNear")
-
-    // stage 4: dimension histogram of the ACCEPTED batch
-    val profile = curated
-      .groupBy(size(col(embCol)).as("_dim"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    val dimProfile = profile.map(r => r.getInt(0) -> r.getLong(1)).toMap
-    log(s"[curate-emb+] accepted $afterNear new vectors; dims: " +
-      dimProfile.toSeq.sortBy(_._1).map { case (d, n) => s"$d=$n" }.mkString(", "))
-
-    val ledger =
-      if (keepLedger) {
-        val l = stage(ledgerFrags.reduce(_.unionByName(_)))
-        ledgerFrags.foreach(graft.ops.StageCut.release)
-        Some(l)
-      } else None
-    (curated, EmbReport(input, afterValid, afterExact, afterNear,
-      dimProfile), ledger)
-  }
-
-  /** The persistable corpus BYTE-fingerprint table for the media
-    * incremental run's exact stage — [[textFingerprints]]'s analog
-    * over raw payload bytes (md5 of the binary — bit-identical files,
-    * the crawl's literal re-downloads, no decode). `_fp_img` family
-    * stamp so a cross-wired text/embedding table fails loudly; same
-    * staleness rule: append the accepted batch's fingerprints after
-    * each run. */
-  def mediaFingerprints(corpus: DataFrame, payloadCol: String): DataFrame =
-    corpus.select(md5(col(payloadCol)).as("_fp_img")).distinct()
 
   /** INCREMENTAL media curation — [[runIncrementalEmbedding]]'s
     * contract with [[runMedia]]'s perceptual stages, completing the
     * text/embedding/media × full/incremental matrix: (1) validity =
-    * decodable image magic on the BATCH only (codegen'd prefix check,
-    * no decode); (2) exact BYTE dedup within the batch, then against
-    * the corpus payload fingerprints ([[mediaFingerprints]] — the
-    * standing table is probed, never shuffled, the [[corpusFpHits]]
+    * decodable container magic on the BATCH only (codegen'd prefix
+    * check, no decode); (2) exact BYTE dedup within the batch, then
+    * against the corpus payload fingerprints ([[mediaFingerprints]] —
+    * the standing table is probed, never shuffled, the [[corpusFpHits]]
     * shape); (3) near-dup = ONE component pass over within-batch +
-    * batch×corpus dHash pairs (Curate's incremental drop rule;
-    * `corpusSigs` = the stored [[graft.dedup.Dedup.dhashSignatures]]
-    * table — with it AND `corpusFps` supplied, the daily run decodes
-    * ZERO corpus images); (4) a container-format histogram of the
-    * accepted batch. Corpus survivors are INVARIANT; batch and corpus
-    * ids must share one collision-free id space. */
+    * batch×corpus hash pairs (Curate's incremental drop rule;
+    * `corpusSigs` = the stored [[graft.dedup.Dedup.dhashSignatures]] or
+    * [[graft.dedup.Dedup.audioSignatures]] table — with it AND
+    * `corpusFps` supplied, the daily run decodes ZERO corpus payloads);
+    * (4) a container-format histogram of the accepted batch. Corpus
+    * survivors are INVARIANT; batch and corpus ids must share one
+    * collision-free id space. */
   def runIncrementalMedia(newMedia: DataFrame, corpus: DataFrame,
                           idCol: String, payloadCol: String,
                           method: SimilarityMethod.PerceptualHash = SimilarityMethod.ImageDHash(),
                           corpusFps: Option[DataFrame] = None,
                           corpusSigs: Option[DataFrame] = None,
                           log: String => Unit = m => System.err.println(m)): (DataFrame, MediaReport) = {
-    val (curated, report, _) = runIncrementalMediaImpl(newMedia, corpus,
-      idCol, payloadCol, method, corpusFps, corpusSigs,
+    val (curated, report, _) = curateIncremental(newMedia, corpus, idCol,
+      mediaModality(payloadCol, method), () => method, corpusSigs, corpusFps,
       keepLedger = false, log)
     (curated, report)
   }
 
   /** [[runIncrementalMedia]] with the per-document drop ledger — the
     * [[runIncrementalTracked]] contract over the perceptual stages:
-    * `stage` ∈ {validity, exact, near}, reasons `invalid_image`,
-    * `duplicate_bytes`/`duplicate_of_corpus`,
+    * `stage` ∈ {validity, exact, near}, reasons `invalid_image` (or
+    * `invalid_audio`), `duplicate_bytes`/`duplicate_of_corpus`,
     * `near_duplicate`/`near_duplicate_of_corpus`. */
   def runIncrementalMediaTracked(newMedia: DataFrame, corpus: DataFrame,
                           idCol: String, payloadCol: String,
@@ -570,183 +501,10 @@ object Curate {
                           corpusFps: Option[DataFrame] = None,
                           corpusSigs: Option[DataFrame] = None,
                           log: String => Unit = m => System.err.println(m)): (DataFrame, MediaReport, DataFrame) = {
-    val (curated, report, ledger) = runIncrementalMediaImpl(newMedia,
-      corpus, idCol, payloadCol, method, corpusFps, corpusSigs,
+    val (curated, report, ledger) = curateIncremental(newMedia, corpus, idCol,
+      mediaModality(payloadCol, method), () => method, corpusSigs, corpusFps,
       keepLedger = true, log)
     (curated, report, ledger.get)
-  }
-
-  private def runIncrementalMediaImpl(newMedia: DataFrame, corpus: DataFrame,
-                          idCol: String, payloadCol: String,
-                          method: SimilarityMethod.PerceptualHash,
-                          corpusFps: Option[DataFrame],
-                          corpusSigs: Option[DataFrame],
-                          keepLedger: Boolean,
-                          log: String => Unit): (DataFrame, MediaReport, Option[DataFrame]) = {
-    val stage = (df: DataFrame) => graft.ops.StageCut(df)
-    val ledgerFrags = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def frag(df: => DataFrame): Unit = if (keepLedger) {
-      ledgerFrags += stage(df)
-    }
-    def noWin = lit(null).cast(newMedia.schema(idCol).dataType).as("winner_id")
-
-    // stage 1: validity — prefix check only, rides the scan; ledger
-    // fragment is the in-row complement (no anti-join, r20).
-    // `isNotNull` is never null itself, so plain negation complements.
-    val (valid, input, afterValid) = observedStage(newMedia,
-      _.filter(mediaFormat(payloadCol, method).isNotNull))
-    frag(newMedia.filter(mediaFormat(payloadCol, method).isNull)
-      .select(col(idCol), lit("validity").as("stage"),
-        lit(s"invalid_${mediaKind(method)}").as("reason"), noWin))
-    log(s"[curate-img+] ${mediaKind(method)} magic: $input -> $afterValid")
-
-    // stage 2: exact byte dedup within the batch, then against the
-    // corpus payload fingerprints — (fp, id) only through every
-    // exchange, the payload bytes never shuffle. Ledger mode
-    // materializes the (fp, id) frame once.
-    val cfps = corpusFps.map(requireFps(_, "_fp_img", "mediaFingerprints"))
-      .getOrElse(mediaFingerprints(corpus, payloadCol)
-        .select(col("_fp_img").as("_fp")))
-    val withFp = valid.withColumn("_fp", md5(col(payloadCol)))
-    val fpAll =
-      if (keepLedger) Some(stage(withFp.select(col("_fp"), col(idCol))))
-      else None
-    val keepIds = fpAll.getOrElse(withFp.select(col("_fp"), col(idCol)))
-      .groupBy(col("_fp")).agg(min(col(idCol)).as(idCol))
-    val batchFp = withFp.join(keepIds, Seq("_fp", idCol), "left_semi")
-    // hint decision lives in corpusFpHits (ProbeGuard)
-    // r21: afterValid (already counted) soundly bounds the distinct
-    // batch fingerprint count — the guard skips its dedicated count
-    val fpHits = corpusFpHits(batchFp, "_fp", cfps, afterValid)
-    val exact = batchFp
-      .join(fpHits, Seq("_fp"), "left_anti")
-      .drop("_fp")
-      .transform(stage)
-    val afterExact = exact.count()
-    fpAll.foreach { fa =>
-      frag(fa.join(keepIds.withColumnRenamed(idCol, "_win"), Seq("_fp"))
-        .join(fpHits.withColumn("_c", lit(true)), Seq("_fp"), "left")
-        .filter(col("_c").isNotNull || col(idCol) =!= col("_win"))
-        .select(col(idCol), lit("exact").as("stage"),
-          when(col("_c").isNotNull, lit("duplicate_of_corpus"))
-            .otherwise(lit("duplicate_bytes")).as("reason"),
-          when(col("_c").isNotNull, lit(null)).otherwise(col("_win"))
-            .as("winner_id")))
-      graft.ops.StageCut.release(fa)
-    }
-    graft.ops.StageCut.release(valid)
-    log(s"[curate-img+] exact byte dedup (batch + corpus fps): " +
-      s"$afterValid -> $afterExact")
-
-    // stage 3: the shared incremental component pass over dHash pairs
-    // — the ONE O(pixels) decode pass per side (zero corpus decodes
-    // with corpusSigs supplied)
-    val nearDrops =
-      if (keepLedger) {
-        Some(stage(batchNearDrops(exact, corpus, idCol, payloadCol,
-          method, corpusSigs)))
-      } else None
-    val curated = nearDrops
-      .map(d => exact.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
-      .getOrElse(dropBatchNearDups(exact, corpus, idCol, payloadCol,
-        method, corpusSigs))
-      .transform(stage)
-    val afterNear = curated.count()
-    nearDrops.foreach { d =>
-      frag(d.select(col(idCol), lit("near").as("stage"),
-        when(col("_corpus"), lit("near_duplicate_of_corpus"))
-          .otherwise(lit("near_duplicate")).as("reason"),
-        col("_win").as("winner_id")))
-      graft.ops.StageCut.release(d)
-    }
-    graft.ops.StageCut.release(exact)
-    log(s"[curate-img+] near dedup vs corpus (hash <= ${method.maxHamming}): " +
-      s"$afterExact -> $afterNear")
-
-    // stage 4: container histogram of the ACCEPTED batch
-    val profile = curated
-      .groupBy(mediaFormat(payloadCol, method).as("_fmt"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    val formatProfile = profile.map(r => r.getString(0) -> r.getLong(1)).toMap
-    log(s"[curate-img+] accepted $afterNear ${mediaKind(method)}s; formats: " +
-      formatProfile.toSeq.sortBy(_._1).map { case (f, n) => s"$f=$n" }.mkString(", "))
-
-    val ledger =
-      if (keepLedger) {
-        val l = stage(ledgerFrags.reduce(_.unionByName(_)))
-        ledgerFrags.foreach(graft.ops.StageCut.release)
-        Some(l)
-      } else None
-    (curated, MediaReport(input, afterValid, afterExact, afterNear,
-      formatProfile), ledger)
-  }
-
-  /** The shared near-dup stage of the incremental pipelines: one
-    * connected-components pass over within-batch pairs
-    * ([[SimilarJoin.similarJoin]]) plus batch×corpus pairs
-    * ([[SimilarJoin.similarJoinAgainst]] — candidate work ∝ |batch|,
-    * the corpus costs one signature pass). A batch row is dropped if
-    * its component touches the corpus (it near-duplicates standing
-    * content, directly or transitively through other batch rows) or if
-    * it is a non-representative (non-min-id) member of a batch-only
-    * component. Both pair finders persist their lists internally;
-    * dupClusters materializes its edge snapshot up front, after which
-    * the lists are released. Returns the surviving batch frame
-    * UN-persisted (callers persist + count). */
-  private[apps] def dropBatchNearDups(exact: DataFrame, corpus: DataFrame,
-                                idCol: String, contentCol: String,
-                                method: SimilarityMethod,
-                                corpusSigs: Option[DataFrame] = None): DataFrame =
-    exact.join(
-      batchNearDrops(exact, corpus, idCol, contentCol, method, corpusSigs)
-        .select(col(idCol)),
-      Seq(idCol), "left_anti")
-
-  /** The DROP rows behind [[dropBatchNearDups]] — `(idCol, _win,
-    * _corpus)`: each dropped batch doc with the surviving twin it is
-    * attributed to and whether its component touches the standing
-    * corpus. For a batch-only component `_win` is the cluster label
-    * (the min-id member — the one row that survives); for a
-    * corpus-touched component the label itself may be a DROPPED batch
-    * doc (the whole component drops), so `_win` is resolved to the
-    * component's min CORPUS member instead — a real survivor, and the
-    * standing doc the batch content near-duplicates. One evaluation
-    * yields both the survivor anti-join and the drop ledger's near
-    * attribution. */
-  private[apps] def batchNearDrops(exact: DataFrame, corpus: DataFrame,
-                                idCol: String, contentCol: String,
-                                method: SimilarityMethod,
-                                corpusSigs: Option[DataFrame] = None): DataFrame = {
-    val batchPairs = SimilarJoin.similarJoin(exact, idCol, contentCol, method)
-    val crossPairs = SimilarJoin.similarJoinAgainst(exact, corpus,
-      idCol, contentCol, method, corpusSigs = corpusSigs)
-    val edges = batchPairs.select(col("id_a"), col("id_b"))
-      .unionByName(crossPairs.select(col("id_a"), col("id_b")))
-    val clusters = Dedup.dupClusters(edges)
-    batchPairs.unpersist(); crossPairs.unpersist()
-    // which component members are CORPUS docs? The corpus id column is
-    // corpus-sized — probe it with the broadcast component member ids
-    // (candidate-scale: only docs touched by an edge) instead of
-    // shuffling it; the min corpus member per component (the ledger's
-    // winner AND the corpus-touched marker) is then broadcast into
-    // both joins (one scan, reused exchange, no standing-table shuffle
-    // — the corpusFpHits shape).
-    val corpusHits = corpus.select(col(idCol).as("id"))
-      .join(broadcast(clusters.select(col("id"))), Seq("id"), "left_semi")
-    // components containing ANY corpus member: every batch doc inside
-    // near-duplicates standing content — drop them all (the component
-    // label itself may be a batch id, so label math alone is not enough)
-    val corpusWin = clusters
-      .join(broadcast(corpusHits), Seq("id"), "left_semi")
-      .groupBy(col("cluster")).agg(min(col("id")).as("_cwin"))
-    val batchMembers = clusters.join(broadcast(corpusHits), Seq("id"), "left_anti")
-    batchMembers
-      .join(broadcast(corpusWin), Seq("cluster"), "left")
-      .filter(col("id") =!= col("cluster") || col("_cwin").isNotNull)
-      .select(col("id").as(idCol),
-        coalesce(col("_cwin"), col("cluster")).as("_win"),
-        col("_cwin").isNotNull.as("_corpus"))
   }
 
   /** INCREMENTAL curation — today's batch of new documents curated
@@ -805,9 +563,9 @@ object Curate {
                      corpusSigs: Option[DataFrame] = None,
                      corpusFps: Option[DataFrame] = None,
                      log: String => Unit = m => System.err.println(m)): (DataFrame, Report) = {
-    val (curated, report, _) = runIncrementalImpl(newDocs, corpus, idCol,
-      textCol, minQuality, method, corpusSigs, corpusFps,
-      keepLedger = false, log)
+    val (curated, report, _) = curateIncremental(newDocs, corpus, idCol,
+      textModality(textCol, minQuality, method), () => method, corpusSigs,
+      corpusFps, keepLedger = false, log)
     (curated, report)
   }
 
@@ -831,131 +589,10 @@ object Curate {
                      corpusSigs: Option[DataFrame] = None,
                      corpusFps: Option[DataFrame] = None,
                      log: String => Unit = m => System.err.println(m)): (DataFrame, Report, DataFrame) = {
-    val (curated, report, ledger) = runIncrementalImpl(newDocs, corpus,
-      idCol, textCol, minQuality, method, corpusSigs, corpusFps,
-      keepLedger = true, log)
+    val (curated, report, ledger) = curateIncremental(newDocs, corpus, idCol,
+      textModality(textCol, minQuality, method), () => method, corpusSigs,
+      corpusFps, keepLedger = true, log)
     (curated, report, ledger.get)
-  }
-
-  private def runIncrementalImpl(newDocs: DataFrame, corpus: DataFrame,
-                     idCol: String, textCol: String,
-                     minQuality: Double,
-                     method: SimilarityMethod,
-                     corpusSigs: Option[DataFrame],
-                     corpusFps: Option[DataFrame],
-                     keepLedger: Boolean,
-                     log: String => Unit): (DataFrame, Report, Option[DataFrame]) = {
-    // drop-ledger plumbing: the PretrainPrep.runImpl discipline —
-    // each fragment materializes BEFORE its parents are released
-    val stage = (df: DataFrame) => graft.ops.StageCut(df)
-    val ledgerFrags = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def frag(df: => DataFrame): Unit = if (keepLedger) {
-      ledgerFrags += stage(df)
-    }
-    def noWin = lit(null).cast(newDocs.schema(idCol).dataType).as("winner_id")
-
-    // stage 1: quality on the BATCH only (the corpus already passed
-    // it). The ledger fragment is the in-row complement of the keep
-    // predicate (r20): `not(pred <=> true)` keeps exactly the rows
-    // `filter(pred)` dropped (false AND null scores) — no anti-join.
-    val (quality, input, afterQuality) = observedStage(newDocs,
-      _.transform(TextOps.withQualityScore(_, textCol, "quality"))
-        .filter(col("quality") >= minQuality))
-    frag(newDocs
-      .transform(TextOps.withQualityScore(_, textCol, "quality"))
-      .filter(!((col("quality") >= minQuality) <=> lit(true)))
-      .select(col(idCol), lit("quality").as("stage"),
-        lit("low_quality").as("reason"), noWin))
-    log(s"[curate+] quality >= $minQuality: $input -> $afterQuality")
-
-    // stage 2: exact dedup within the batch, then against the corpus.
-    // The corpus fingerprint table never moves: it is probed once by
-    // the broadcast batch fingerprints and only the hit set (at most
-    // batch-sized) is broadcast into the anti-join ([[corpusFpHits]]).
-    // In ledger mode the (fp, id) frame is materialized ONCE so winner
-    // attribution does not re-fingerprint the batch text.
-    val cfps = corpusFps.map(requireFps(_, "_fp_text", "textFingerprints"))
-      .getOrElse(textFingerprints(corpus, textCol)
-        .select(col("_fp_text").as("_fp")))
-    val withFp = quality.withColumn("_fp", TextOps.fingerprint(col(textCol)))
-    val fpAll =
-      if (keepLedger) Some(stage(withFp.select(col("_fp"), col(idCol))))
-      else None
-    val keepIds = fpAll.getOrElse(withFp.select(col("_fp"), col(idCol)))
-      .groupBy(col("_fp")).agg(min(col(idCol)).as(idCol))
-    val batchFp = withFp.join(keepIds, Seq("_fp", idCol), "left_semi")
-    // the hit set comes back broadcast-hinted (or guard-fallback plain)
-    // from corpusFpHits — the hint decision lives there
-    // r21: afterQuality (already counted) soundly bounds the distinct
-    // batch fingerprint count — the guard skips its dedicated count
-    val fpHits = corpusFpHits(batchFp, "_fp", cfps, afterQuality)
-    val exact = batchFp
-      .join(fpHits, Seq("_fp"), "left_anti")
-      .drop("_fp")
-      .transform(stage)
-    val afterExact = exact.count()
-    // attribution: a fingerprint standing in the corpus drops ALL its
-    // batch holders (winner unknown to the batch — NULL); a batch-only
-    // duplicate names its min-id winner
-    fpAll.foreach { fa =>
-      frag(fa.join(keepIds.withColumnRenamed(idCol, "_win"), Seq("_fp"))
-        .join(fpHits.withColumn("_c", lit(true)), Seq("_fp"), "left")
-        .filter(col("_c").isNotNull || col(idCol) =!= col("_win"))
-        .select(col(idCol), lit("exact").as("stage"),
-          when(col("_c").isNotNull, lit("duplicate_of_corpus"))
-            .otherwise(lit("duplicate_text")).as("reason"),
-          when(col("_c").isNotNull, lit(null)).otherwise(col("_win"))
-            .as("winner_id")))
-      graft.ops.StageCut.release(fa)
-    }
-    graft.ops.StageCut.release(quality)
-    log(s"[curate+] exact dedup (batch + corpus fps): $afterQuality -> $afterExact")
-
-    // stage 3: ONE component pass over within-batch + cross-side
-    // edges. Ledger mode materializes the (id, _win, _corpus) drop
-    // rows once and shares them with the anti-join.
-    val nearDrops =
-      if (keepLedger) {
-        Some(stage(batchNearDrops(exact, corpus, idCol, textCol,
-          method, corpusSigs)))
-      } else None
-    val curated = nearDrops
-      .map(d => exact.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
-      .getOrElse(dropBatchNearDups(exact, corpus, idCol, textCol, method,
-        corpusSigs))
-      .transform(stage)
-    val afterNear = curated.count()
-    nearDrops.foreach { d =>
-      frag(d.select(col(idCol), lit("near").as("stage"),
-        when(col("_corpus"), lit("near_duplicate_of_corpus"))
-          .otherwise(lit("near_duplicate")).as("reason"),
-        col("_win").as("winner_id")))
-      graft.ops.StageCut.release(d)
-    }
-    graft.ops.StageCut.release(exact)
-    log(s"[curate+] near dedup vs corpus (${method.getClass.getSimpleName}): " +
-      s"$afterExact -> $afterNear")
-
-    // stage 4: profile of the ACCEPTED batch (the corpus is unchanged
-    // by construction — profiling it again would be a wasted pass)
-    val profile = curated
-      .transform(TextOps.withLangId(_, textCol, "_lang"))
-      .groupBy(col("_lang"))
-      .agg(count(lit(1)).as("n"), sum(TextOps.tokenCount(col(textCol))).as("toks"))
-      .collect()
-    val langProfile = profile.map(r => r.getString(0) -> r.getLong(1)).toMap
-    val totalTokens = profile.map(r => r.getLong(2)).sum
-    log(s"[curate+] accepted $afterNear new docs, $totalTokens tokens; languages: " +
-      langProfile.toSeq.sortBy(_._1).map { case (l, n) => s"$l=$n" }.mkString(", "))
-
-    val ledger =
-      if (keepLedger) {
-        val l = stage(ledgerFrags.reduce(_.unionByName(_)))
-        ledgerFrags.foreach(graft.ops.StageCut.release)
-        Some(l)
-      } else None
-    (curated, Report(input, afterQuality, afterExact, afterNear,
-      langProfile, totalTokens), ledger)
   }
 }
 

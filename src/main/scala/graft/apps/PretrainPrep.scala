@@ -1,7 +1,7 @@
 package graft.apps
 
 import graft.dedup.{SimilarJoin, SimilarityMethod}
-import graft.ops.{Packing, Profile, Sampling}
+import graft.ops.{Packing, Profile, Sampling, StageCut}
 import graft.text.{C4Clean, Decontaminate, FilterPolicy, PolicyConfig, SpanDedup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -169,11 +169,10 @@ object PretrainPrep {
           seed: Int = 0,
           countInput: Boolean = true,
           log: String => Unit = m => System.err.println(m)): (DataFrame, Report) = {
-    val r = runImpl(docs, idCol, textCol, srcCol, bench,
-      config, badWords, spanN, spanMinDocs, method, decontamN, embDecontam,
-      quotaPerSource, tokenBudget, sourceBudgets, sourceBudgetDefault,
-      nShards, seed, countInput,
-      keepArtifacts = false, keepLedger = false, log)
+    val r = runTracked(docs, idCol, textCol, srcCol, bench, config, badWords,
+      spanN, spanMinDocs, method, decontamN, embDecontam, quotaPerSource,
+      tokenBudget, sourceBudgets, sourceBudgetDefault, nShards, seed,
+      countInput, log = log)
     (r.out, r.report)
   }
 
@@ -201,11 +200,10 @@ object PretrainPrep {
           seed: Int = 0,
           countInput: Boolean = true,
           log: String => Unit = m => System.err.println(m)): (DataFrame, Report, PrepArtifacts) = {
-    val r = runImpl(docs, idCol, textCol, srcCol, bench,
-      config, badWords, spanN, spanMinDocs, method, decontamN, embDecontam,
-      quotaPerSource, tokenBudget, sourceBudgets, sourceBudgetDefault,
-      nShards, seed, countInput,
-      keepArtifacts = true, keepLedger = false, log)
+    val r = runTracked(docs, idCol, textCol, srcCol, bench, config, badWords,
+      spanN, spanMinDocs, method, decontamN, embDecontam, quotaPerSource,
+      tokenBudget, sourceBudgets, sourceBudgetDefault, nShards, seed,
+      countInput, keepArtifacts = true, log = log)
     (r.out, r.report, r.artifacts.get)
   }
 
@@ -232,215 +230,41 @@ object PretrainPrep {
           countInput: Boolean = true,
           keepArtifacts: Boolean = false,
           keepLedger: Boolean = false,
-          log: String => Unit = m => System.err.println(m)): Tracked[Report] =
-    runImpl(docs, idCol, textCol, srcCol, bench, config, badWords, spanN,
-      spanMinDocs, method, decontamN, embDecontam, quotaPerSource,
-      tokenBudget, sourceBudgets, sourceBudgetDefault, nShards, seed,
-      countInput, keepArtifacts, keepLedger, log)
-
-  private def runImpl(docs: DataFrame, idCol: String, textCol: String,
-          srcCol: String,
-          bench: Option[DataFrame],
-          config: PolicyConfig,
-          badWords: Seq[String],
-          spanN: Int,
-          spanMinDocs: Int,
-          method: SimilarityMethod,
-          decontamN: Int,
-          embDecontam: Option[EmbDecontam],
-          quotaPerSource: Int,
-          tokenBudget: Long,
-          sourceBudgets: Map[String, Long],
-          sourceBudgetDefault: Long,
-          nShards: Int,
-          seed: Int,
-          countInput: Boolean,
-          keepArtifacts: Boolean,
-          keepLedger: Boolean,
-          log: String => Unit): Tracked[Report] = {
-    // stage boundary: materialize + cut lineage
-    val stage = (df: DataFrame) => graft.ops.StageCut(df)
-    require(spanN >= 1, s"spanN must be >= 1, got $spanN")
-    require(spanMinDocs >= 2, s"spanMinDocs must be >= 2, got $spanMinDocs")
-    require(decontamN >= 1, s"decontamN must be >= 1, got $decontamN")
-    require(quotaPerSource >= 1,
-      s"quotaPerSource must be >= 1, got $quotaPerSource")
-    require(nShards >= 1, s"nShards must be >= 1, got $nShards")
-    // drop-ledger plumbing: each fragment is an id-column frame built
-    // from frames alive at its stage, materialized BEFORE those parents
-    // are released — the StageCut ordering contract (the cut is
-    // eager, so no extra count job). Fragments union into one final
-    // ledger at the end.
-    val ledgerFrags = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def frag(df: => DataFrame): Unit = if (keepLedger) {
-      ledgerFrags += stage(df)
-    }
-    def noWin = lit(null).cast(docs.schema(idCol).dataType).as("winner_id")
-
-    // stage 1: policy gate. The input stat is a dedicated count():
-    // free only when `docs` is a plain parquet scan (row-group counts,
-    // no data read); a TRANSFORMED input pays one full scan here —
-    // `countInput = false` skips it (Report.input becomes -1).
-    val input = if (countInput) docs.count() else -1L
-    // The verdict is a pure per-row expression since r20
-    // ([[FilterPolicy.withVerdict]]), so the gate FILTERS THE SCAN
-    // ITSELF — no verdict semi-join back onto a second read of `docs`.
-    // Ledger mode materializes the flagged frame once so keep AND
-    // drop reasons come from a single policy evaluation + one scan.
-    // The stage-2 bad-words verdict is PRECOMPUTED into the stage-1
-    // materialization (r21): `_nb` = `badWordCount <=> 0` (null-safe —
-    // false for hit docs AND null-text docs, exactly the complement
-    // the ledger fragment wants) rides the same one-pass policy scan,
-    // so stage 2 becomes a trivial boolean filter over the stage-1
-    // blocks instead of either a second corpus-sized checkpoint (the
-    // pre-r21 shape) or a re-run of the tokenizing bad-words fold on
-    // every downstream scan.
-    def withNb(df: DataFrame): DataFrame =
-      if (badWords.isEmpty) df
-      else df.withColumn("_nb",
-        C4Clean.badWordCount(col(textCol), badWords) <=> 0)
-    val flagged =
-      if (keepLedger) Some(stage(withNb(FilterPolicy.withVerdict(
-        docs.select(col(idCol), col(srcCol), col(textCol)),
-        textCol, config)
-        .select(col(idCol), col(srcCol), col(textCol),
-          col("keep"), col("reason")))))
-      else None
-    // In ledger mode `kept` is a LAZY filter over the already-cut
-    // flagged frame (r21): cutting it again re-materialized the whole
-    // keep subset — text and all — a second corpus-sized checkpoint
-    // whose only reader is the next stage's scan. The filter view
-    // reads flagged's cached blocks instead; flagged therefore stays
-    // alive until stage 3 (the views' last readers) has materialized.
-    val kept = flagged
-      .map(_.filter(col("keep")).drop("keep", "reason"))
-      .getOrElse(stage(withNb(FilterPolicy.withVerdict(
-        docs.select(col(idCol), col(srcCol), col(textCol)),
-        textCol, config).filter(col("keep"))
-        .select(col(idCol), col(srcCol), col(textCol)))))
-    val afterPolicy = kept.count()
-    flagged.foreach { v =>
-      frag(v.filter(!col("keep")).select(col(idCol),
-        lit("policy").as("stage"), col("reason"), noWin))
-    }
-    log(s"[prep] policy gate: $input -> $afterPolicy")
-
-    // stage 2: C4 bad-words page filter — the precomputed `_nb`
-    // boolean filter over the stage-1 blocks; the ledger fragment is
-    // its in-row complement (r20 semantics, r21 shape).
-    val noBad =
-      if (badWords.isEmpty) kept
-      else kept.filter(col("_nb"))
-        .select(col(idCol), col(srcCol), col(textCol))
-    val afterBadWords = noBad.count()
-    frag(
-      (if (badWords.isEmpty) kept.filter(lit(false))
-       else kept.filter(!col("_nb")))
-        .select(col(idCol), lit("bad_words").as("stage"),
-          lit("bad_word").as("reason"), noWin))
-    log(s"[prep] bad-words (${badWords.size} terms): " +
-      s"$afterPolicy -> $afterBadWords")
+          log: String => Unit = m => System.err.println(m)): Tracked[Report] = {
+    requireKnobs(spanN, spanMinDocs, decontamN, quotaPerSource, nShards)
+    val p = new PrepRun(idCol, textCol, srcCol,
+      new Stages.DropLedger(keepLedger, idCol, docs.schema(idCol).dataType),
+      "[prep]", log)
+    val s = p.screen(docs, config, badWords, countInput)
 
     // stage 3: exact dedup on the raw-text fingerprint — (fp, id)
-    // only through the exchange, the heavy text never shuffles. In
-    // ledger mode the (fp, id) frame is materialized ONCE so winner
-    // attribution does not re-fingerprint the text.
-    val fpAll =
-      if (keepLedger) Some(stage(noBad
-        .select(graft.text.TextOps.fingerprint(col(textCol)).as("_f"),
-          col(idCol))))
-      else None
-    val fpMin = fpAll
-      .getOrElse(noBad
-        .select(graft.text.TextOps.fingerprint(col(textCol)).as("_f"),
-          col(idCol)))
-      .groupBy(col("_f")).agg(min(col(idCol)).as(idCol))
-    val exact = noBad.join(fpMin.select(col(idCol)), Seq(idCol), "left_semi")
-      .transform(stage)
+    // only through the exchange, the heavy text never shuffles
+    val fps = p.fingerprints(s.noBad)
+    val exact = s.noBad.join(fps.keepIds.select(col(idCol)), Seq(idCol), "left_semi")
+      .transform(StageCut.apply)
     val afterExact = exact.count()
-    fpAll.foreach { fa =>
-      frag(fa.join(fpMin.withColumnRenamed(idCol, "_win"), Seq("_f"))
-        .filter(col(idCol) =!= col("_win"))
-        .select(col(idCol), lit("exact").as("stage"),
-          lit("duplicate_text").as("reason"), col("_win").as("winner_id")))
-      graft.ops.StageCut.release(fa)
-    }
-    // release the stage-1 root (noBad was a lazy view over it):
-    // flagged in ledger mode, the cut kept frame otherwise
-    flagged match {
-      case Some(v) => graft.ops.StageCut.release(v)
-      case None    => graft.ops.StageCut.release(kept)
-    }
-    log(s"[prep] exact dedup: $afterBadWords -> $afterExact")
+    fps.attribute("duplicate_text")
+    StageCut.release(s.root)
+    log(s"[prep] exact dedup: ${s.afterBadWords} -> $afterExact")
 
     // stage 4: span scrub — text becomes clean_text (+ n_kept);
     // documents whose every token was boilerplate disappear
-    val scrubbed = SpanDedup
-      .removeDuplicatedSpans(exact, idCol, textCol, spanN, spanMinDocs)
-      .join(exact.select(col(idCol), col(srcCol)), Seq(idCol))
-      .transform(stage)
-    val afterSpanScrub = scrubbed.count()
-    frag(exact.select(col(idCol))
-      .join(scrubbed.select(col(idCol)), Seq(idCol), "left_anti")
-      .select(col(idCol), lit("span_scrub").as("stage"),
-        lit("all_spans_duplicated").as("reason"), noWin))
-    // artifact mode keeps the scrub input alive: fps + gram counts are
-    // then one cached pass each, and the CALLER releases it
-    val artifacts =
-      if (keepArtifacts) Some(PrepArtifacts(
-        Curate.textFingerprints(exact, textCol),
-        SpanDedup.gramDocCounts(exact, idCol, textCol, spanN),
-        exact))
-      else { graft.ops.StageCut.release(exact); None }
+    val (scrubbed, afterSpanScrub, artifacts) = p.scrub(exact,
+      SpanDedup.removeDuplicatedSpans(exact, idCol, textCol, spanN, spanMinDocs),
+      spanN, keepArtifacts)
     log(s"[prep] span scrub (n=$spanN, minDocs=$spanMinDocs): " +
       s"$afterExact -> $afterSpanScrub")
 
-    // stage 5: near-dup clusters over the scrubbed text. Ledger mode
-    // materializes the (id, cluster) drop pairs ONCE — winner
-    // attribution and the anti-join share a single LSH evaluation.
-    val clusters = SimilarJoin.similarClusters(
-      scrubbed.select(col(idCol), col("clean_text").as(textCol)),
-      idCol, textCol, method)
-    val nearPairs =
-      if (keepLedger)
-        Some(stage(clusters.filter(col("cluster") =!= col("id"))
-          .select(col("id").as(idCol), col("cluster").as("_win"))))
-      else None
-    val dropIds = nearPairs.map(_.select(col(idCol)))
-      .getOrElse(clusters.filter(col("cluster") =!= col("id"))
-        .select(col("id").as(idCol)))
-    val near = scrubbed.join(dropIds, Seq(idCol), "left_anti")
-      .transform(stage)
-    val afterNear = near.count()
-    nearPairs.foreach { p =>
-      frag(p.select(col(idCol), lit("near").as("stage"),
-        lit("near_duplicate").as("reason"), col("_win").as("winner_id")))
-      graft.ops.StageCut.release(p)
-    }
-    graft.ops.StageCut.release(scrubbed)
+    // stage 5: near-dup clusters over the scrubbed text
+    val (near, afterNear) = Stages.nearWithin(p.ledger, scrubbed,
+      SimilarJoin.similarClusters(
+        scrubbed.select(col(idCol), col("clean_text").as(textCol)),
+        idCol, textCol, method), idCol)
+    StageCut.release(scrubbed)
     log(s"[prep] near dedup (${method.getClass.getSimpleName}): " +
       s"$afterSpanScrub -> $afterNear")
 
-    // stage 6: n-gram decontamination (scrubbed text vs the raw bench)
-    val dec = bench match {
-      case Some(b) =>
-        Decontaminate.decontaminate(
-            near.withColumn(textCol, col("clean_text")), b,
-            idCol, textCol, decontamN)
-          .drop(textCol)
-          .transform(stage)
-      case None => near
-    }
-    val afterDecontam = dec.count()
-    if (bench.isDefined) {
-      frag(near.select(col(idCol))
-        .join(dec.select(col(idCol)), Seq(idCol), "left_anti")
-        .select(col(idCol), lit("decontam").as("stage"),
-          lit("bench_overlap").as("reason"), noWin))
-      graft.ops.StageCut.release(near)
-    }
-    log(s"[prep] $decontamN-gram decontamination: " +
-      s"$afterNear -> $afterDecontam")
+    val (dec, afterDecontam) = p.decontam(near, afterNear, bench, decontamN)
 
     // stage 7: embedding-space decontamination (optional). Only the
     // vectors of still-surviving docs probe the benchmark-side index.
@@ -454,95 +278,47 @@ object PretrainPrep {
             idCol, e.vecCol, e.minCos)
           .select(col(idCol))
         dec.join(keepIds, Seq(idCol), "left_semi")
-          .transform(stage)
+          .transform(StageCut.apply)
       case None => dec
     }
     val afterEmbDecontam = embClean.count()
     if (embDecontam.isDefined) {
-      frag(dec.select(col(idCol))
-        .join(embClean.select(col(idCol)), Seq(idCol), "left_anti")
-        .select(col(idCol), lit("emb_decontam").as("stage"),
-          lit("bench_embedding_overlap").as("reason"), noWin))
-      graft.ops.StageCut.release(dec)
+      p.ledger.lost(dec, embClean, "emb_decontam", "bench_embedding_overlap")
+      StageCut.release(dec)
     }
     log(s"[prep] embedding decontamination: " +
       s"$afterDecontam -> $afterEmbDecontam")
 
-    // stage 8: per-source quota — keep the token-richest K per source
-    val quota0 =
-      (if (quotaPerSource == Int.MaxValue) embClean
-       else Sampling.capPerGroup(embClean, Seq(srcCol),
-           Seq(("n_kept", false), (idCol, true)), quotaPerSource)
-         .drop("rn"))
-    // stage 8b (opt-in): global token budget — the release keeps the
-    // token-richest (n_kept DESC, id ASC) prefix that fits
-    // `tokenBudget` ([[graft.ops.Sampling.tokenBudgetSelect]] — a
-    // scan-side filter; the cutoff is resolved by driver-side range
-    // narrowing, no global sort/window). The quota frame is staged
-    // first: the budget decision and the ledger anti-join both
-    // re-read it
-    // stage 8c (opt-in): per-source token budgets run BEFORE the
-    // global budget — the mixture caps shape the pool, the release
-    // budget trims the result ([[graft.ops.Sampling.tokenBudgetByGroup]])
-    val useSrcBudget = sourceBudgets.nonEmpty ||
-      sourceBudgetDefault != Long.MaxValue
-    val useBudget = tokenBudget != Long.MaxValue
-    val quota = if (useBudget || useSrcBudget) stage(quota0) else quota0
-    val srcBudgeted0 =
-      if (useSrcBudget)
-        Sampling.tokenBudgetByGroup(quota, idCol, srcCol, "n_kept",
-          "n_kept", sourceBudgets, sourceBudgetDefault, log = log)
-      else quota
-    val srcBudgeted =
-      if (useSrcBudget && useBudget) stage(srcBudgeted0) else srcBudgeted0
-    val budgeted =
-      if (useBudget)
-        Sampling.tokenBudgetSelect(srcBudgeted, idCol, "n_kept", "n_kept",
-          tokenBudget, log = log)
-      else srcBudgeted
+    // stage 8: per-source quota — the token-richest K per source; then
+    // the opt-in per-source token budgets (the mixture caps shape the
+    // pool, [[graft.ops.Sampling.tokenBudgetByGroup]]) and the global
+    // token budget (the token-richest (n_kept DESC, id ASC) prefix that
+    // fits — [[graft.ops.Sampling.tokenBudgetSelect]], a scan-side
+    // filter whose cutoff is resolved by driver-side range narrowing);
     // stage 9: deterministic shuffle into shards (adds shard, pos)
-    val sharded = Sampling.shuffleShards(budgeted, idCol, nShards, seed)
-      .transform(stage)
-    val afterQuota = sharded.count()
-    if (useBudget || useSrcBudget) {
-      frag(embClean.select(col(idCol))
-        .join(quota.select(col(idCol)), Seq(idCol), "left_anti")
-        .select(col(idCol), lit("quota").as("stage"),
-          lit("source_quota").as("reason"), noWin))
-      if (useSrcBudget)
-        frag(quota.select(col(idCol))
-          .join(srcBudgeted.select(col(idCol)), Seq(idCol), "left_anti")
-          .select(col(idCol), lit("budget").as("stage"),
-            lit("source_token_budget").as("reason"), noWin))
-      if (useBudget)
-        frag(srcBudgeted.select(col(idCol))
-          .join(sharded.select(col(idCol)), Seq(idCol), "left_anti")
-          .select(col(idCol), lit("budget").as("stage"),
-            lit("token_budget").as("reason"), noWin))
-      if (useSrcBudget && useBudget) graft.ops.StageCut.release(srcBudgeted)
-      graft.ops.StageCut.release(quota)
-    } else
-      frag(embClean.select(col(idCol))
-        .join(sharded.select(col(idCol)), Seq(idCol), "left_anti")
-        .select(col(idCol), lit("quota").as("stage"),
-          lit("source_quota").as("reason"), noWin))
-    graft.ops.StageCut.release(embClean)
+    val bySource = Option.when(sourceBudgeted(sourceBudgets, sourceBudgetDefault)) {
+      (q: DataFrame) => Sampling.tokenBudgetByGroup(q, idCol, srcCol, "n_kept",
+        "n_kept", sourceBudgets, sourceBudgetDefault, log = log)
+    }
+    val budget = Option.when(tokenBudget != Long.MaxValue) {
+      (b: DataFrame) => Sampling.tokenBudgetSelect(b, idCol, "n_kept", "n_kept",
+        tokenBudget, log = log)
+    }
+    val (sharded, afterQuota) = p.release(embClean,
+      Option.when(quotaPerSource != Int.MaxValue) {
+        (pool: DataFrame) => Sampling.capPerGroup(pool, Seq(srcCol),
+          Seq(("n_kept", false), (idCol, true)), quotaPerSource).drop("rn")
+      }, bySource, budget, Sampling.shuffleShards(_, idCol, nShards, seed))
     log(s"[prep] quota (<= $quotaPerSource/source)" +
-      (if (useSrcBudget) s" + source budgets (${sourceBudgets.size} " +
+      (if (bySource.isDefined) s" + source budgets (${sourceBudgets.size} " +
         s"listed, default $sourceBudgetDefault)" else "") +
-      (if (useBudget) s" + token budget $tokenBudget" else "") +
+      (if (budget.isDefined) s" + token budget $tokenBudget" else "") +
       s" + shuffle ($nShards shards, seed $seed): " +
       s"$afterEmbDecontam -> $afterQuota")
 
-    val ledger =
-      if (keepLedger) {
-        val l = stage(ledgerFrags.reduce(_.unionByName(_)))
-        ledgerFrags.foreach(graft.ops.StageCut.release)
-        Some(l)
-      } else None
-    Tracked(sharded, Report(input, afterPolicy, afterBadWords, afterExact,
+    Tracked(sharded, Report(s.input, s.afterPolicy, s.afterBadWords, afterExact,
       afterSpanScrub, afterNear, afterDecontam, afterEmbDecontam,
-      afterQuota), artifacts, ledger)
+      afterQuota), artifacts, p.ledger.result())
   }
 
   /** The DAILY run — today's crawl batch through the SAME release
@@ -637,53 +413,23 @@ object PretrainPrep {
           seed: Int = 0,
           countInput: Boolean = true,
           log: String => Unit = m => System.err.println(m)): (DataFrame, IncReport) = {
-    val r = runIncrementalImpl(newDocs, corpus, corpusFps,
+    val r = runIncrementalTracked(newDocs, corpus, corpusFps,
       corpusGramCounts, idCol, textCol, srcCol, bench, config, badWords,
       spanN, spanMinDocs, method, corpusSigs, decontamN, quotaPerSource,
       tokenBudget, sourceBudgets, sourceBudgetDefault, nShards, seed,
-      countInput, keepArtifacts = false, keepLedger = false, log)
+      countInput, log = log)
     (r.out, r.report)
   }
 
-  /** [[runIncremental]] that also returns the batch-side
-    * [[PrepArtifacts]] (fingerprints + gram counts of the batch's
-    * scrub-input docs) for the union maintenance move — release
-    * `artifacts.scrubInput` after materializing them. */
-  def runIncrementalWithArtifacts(newDocs: DataFrame, corpus: DataFrame,
-          corpusFps: DataFrame, corpusGramCounts: DataFrame,
-          idCol: String, textCol: String, srcCol: String,
-          bench: Option[DataFrame] = None,
-          config: PolicyConfig = PolicyConfig.Gopher,
-          badWords: Seq[String] = Seq.empty,
-          spanN: Int = 4,
-          spanMinDocs: Int = 2,
-          method: SimilarityMethod =
-            SimilarityMethod.MinHashLsh(minJaccard = 0.8),
-          corpusSigs: Option[DataFrame] = None,
-          decontamN: Int = 13,
-          quotaPerSource: Int = Int.MaxValue,
-          tokenBudget: Long = Long.MaxValue,
-          sourceBudgets: Map[String, Long] = Map.empty,
-          sourceBudgetDefault: Long = Long.MaxValue,
-          nShards: Int = 64,
-          seed: Int = 0,
-          countInput: Boolean = true,
-          log: String => Unit = m => System.err.println(m)): (DataFrame, IncReport, PrepArtifacts) = {
-    val r = runIncrementalImpl(newDocs, corpus, corpusFps,
-      corpusGramCounts, idCol, textCol, srcCol, bench, config, badWords,
-      spanN, spanMinDocs, method, corpusSigs, decontamN, quotaPerSource,
-      tokenBudget, sourceBudgets, sourceBudgetDefault, nShards, seed,
-      countInput, keepArtifacts = true, keepLedger = false, log)
-    (r.out, r.report, r.artifacts.get)
-  }
-
   /** [[runIncremental]] with OPT-IN extras: `keepArtifacts` adds the
-    * batch-side [[PrepArtifacts]], `keepLedger` the per-document drop
-    * audit — see [[Tracked]]. The incremental ledger additionally
-    * distinguishes corpus-caused drops (`duplicate_of_corpus`,
-    * `near_duplicate_of_corpus`) from batch-internal ones — the
-    * audit trail a daily run needs to explain rejects against a
-    * standing corpus nobody can eyeball. */
+    * batch-side [[PrepArtifacts]] (fingerprints + gram counts of the
+    * batch's scrub-input docs, for the union maintenance move — release
+    * `artifacts.scrubInput` after materializing them), `keepLedger` the
+    * per-document drop audit — see [[Tracked]]. The incremental ledger
+    * additionally distinguishes corpus-caused drops
+    * (`duplicate_of_corpus`, `near_duplicate_of_corpus`) from
+    * batch-internal ones — the audit trail a daily run needs to explain
+    * rejects against a standing corpus nobody can eyeball. */
   def runIncrementalTracked(newDocs: DataFrame, corpus: DataFrame,
           corpusFps: DataFrame, corpusGramCounts: DataFrame,
           idCol: String, textCol: String, srcCol: String,
@@ -705,258 +451,68 @@ object PretrainPrep {
           countInput: Boolean = true,
           keepArtifacts: Boolean = false,
           keepLedger: Boolean = false,
-          log: String => Unit = m => System.err.println(m)): Tracked[IncReport] =
-    runIncrementalImpl(newDocs, corpus, corpusFps, corpusGramCounts,
-      idCol, textCol, srcCol, bench, config, badWords, spanN, spanMinDocs,
-      method, corpusSigs, decontamN, quotaPerSource, tokenBudget,
-      sourceBudgets, sourceBudgetDefault, nShards, seed, countInput,
-      keepArtifacts, keepLedger, log)
-
-  private def runIncrementalImpl(newDocs: DataFrame, corpus: DataFrame,
-          corpusFps: DataFrame, corpusGramCounts: DataFrame,
-          idCol: String, textCol: String, srcCol: String,
-          bench: Option[DataFrame],
-          config: PolicyConfig,
-          badWords: Seq[String],
-          spanN: Int,
-          spanMinDocs: Int,
-          method: SimilarityMethod,
-          corpusSigs: Option[DataFrame],
-          decontamN: Int,
-          quotaPerSource: Int,
-          tokenBudget: Long,
-          sourceBudgets: Map[String, Long],
-          sourceBudgetDefault: Long,
-          nShards: Int,
-          seed: Int,
-          countInput: Boolean,
-          keepArtifacts: Boolean,
-          keepLedger: Boolean,
-          log: String => Unit): Tracked[IncReport] = {
-    val stage = (df: DataFrame) => graft.ops.StageCut(df)
-    // drop-ledger plumbing — same materialize-before-release contract
-    // as runImpl's
-    val ledgerFrags = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def frag(df: => DataFrame): Unit = if (keepLedger) {
-      ledgerFrags += stage(df)
-    }
-    def noWin =
-      lit(null).cast(newDocs.schema(idCol).dataType).as("winner_id")
-    require(spanN >= 1, s"spanN must be >= 1, got $spanN")
-    require(spanMinDocs >= 2, s"spanMinDocs must be >= 2, got $spanMinDocs")
-    require(decontamN >= 1, s"decontamN must be >= 1, got $decontamN")
-    require(quotaPerSource >= 1,
-      s"quotaPerSource must be >= 1, got $quotaPerSource")
-    require(nShards >= 1, s"nShards must be >= 1, got $nShards")
+          log: String => Unit = m => System.err.println(m)): Tracked[IncReport] = {
+    requireKnobs(spanN, spanMinDocs, decontamN, quotaPerSource, nShards)
     val missing = Seq(idCol, srcCol, "clean_text", "shard")
       .filterNot(corpus.columns.contains)
     require(missing.isEmpty,
       s"corpus must be a previous run's ACCEPTED output; missing " +
         s"columns: ${missing.mkString(", ")}")
-
-    // stage 1: policy gate on the batch (same count note as run();
-    // join-free in-row verdict — the runImpl stage-1 shape)
-    val input = if (countInput) newDocs.count() else -1L
-    // the r21 runImpl stage-1 shape: the bad-words verdict `_nb`
-    // precomputed into the stage-1 materialization, stage 2 a trivial
-    // boolean filter over the stage-1 blocks; the stage-1 root stays
-    // alive until stage 3 materializes
-    def withNb(df: DataFrame): DataFrame =
-      if (badWords.isEmpty) df
-      else df.withColumn("_nb",
-        C4Clean.badWordCount(col(textCol), badWords) <=> 0)
-    val flagged =
-      if (keepLedger) Some(stage(withNb(FilterPolicy.withVerdict(
-        newDocs.select(col(idCol), col(srcCol), col(textCol)),
-        textCol, config)
-        .select(col(idCol), col(srcCol), col(textCol),
-          col("keep"), col("reason")))))
-      else None
-    val kept = flagged
-      .map(_.filter(col("keep")).drop("keep", "reason"))
-      .getOrElse(stage(withNb(FilterPolicy.withVerdict(
-        newDocs.select(col(idCol), col(srcCol), col(textCol)),
-        textCol, config).filter(col("keep"))
-        .select(col(idCol), col(srcCol), col(textCol)))))
-    val afterPolicy = kept.count()
-    flagged.foreach { v =>
-      frag(v.filter(!col("keep")).select(col(idCol),
-        lit("policy").as("stage"), col("reason"), noWin))
-    }
-    log(s"[prep+] policy gate: $input -> $afterPolicy")
-
-    // stage 2: bad-words — the precomputed `_nb` filter; ledger
-    // fragment is its in-row complement (r20 semantics, r21 shape)
-    val noBad =
-      if (badWords.isEmpty) kept
-      else kept.filter(col("_nb"))
-        .select(col(idCol), col(srcCol), col(textCol))
-    val afterBadWords = noBad.count()
-    frag(
-      (if (badWords.isEmpty) kept.filter(lit(false))
-       else kept.filter(!col("_nb")))
-        .select(col(idCol), lit("bad_words").as("stage"),
-          lit("bad_word").as("reason"), noWin))
-    log(s"[prep+] bad-words (${badWords.size} terms): " +
-      s"$afterPolicy -> $afterBadWords")
+    val p = new PrepRun(idCol, textCol, srcCol,
+      new Stages.DropLedger(keepLedger, idCol, newDocs.schema(idCol).dataType),
+      "[prep+]", log)
+    val s = p.screen(newDocs, config, badWords, countInput)
 
     // stage 3: exact dedup within the batch, then against the stored
     // corpus fingerprints. The corpus table is PROBED, never shuffled
     // ([[Curate.corpusFpHits]] — the anti-join and the ledger
-    // attribution both consume the broadcast hit set). In ledger mode
-    // the (fp, id) frame is materialized ONCE so winner attribution
-    // does not re-fingerprint the batch text.
+    // attribution both consume the broadcast hit set); afterBadWords
+    // (already counted) soundly bounds the distinct fingerprints, so
+    // the guard skips its own count.
     val cfps = Curate.requireFps(corpusFps, "_fp_text", "textFingerprints")
-    val fpAll =
-      if (keepLedger) Some(stage(noBad
-        .select(graft.text.TextOps.fingerprint(col(textCol)).as("_fp"),
-          col(idCol))))
-      else None
-    val fpMin = fpAll
-      .getOrElse(noBad
-        .select(graft.text.TextOps.fingerprint(col(textCol)).as("_fp"),
-          col(idCol)))
-      .groupBy(col("_fp")).agg(min(col(idCol)).as(idCol))
-    // the hit set comes back broadcast-hinted (or guard-fallback plain)
-    // from corpusFpHits — the hint decision lives there
-    // r21: afterBadWords (already counted) soundly bounds fpMin's
-    // distinct fingerprints — the guard skips its dedicated count
-    val fpHits = Curate.corpusFpHits(fpMin, "_fp", cfps, afterBadWords)
-    val winners = fpMin
-      .join(fpHits, Seq("_fp"), "left_anti")
+    val fps = p.fingerprints(s.noBad)
+    val fpHits = Curate.corpusFpHits(fps.keepIds, "_fp", cfps, s.afterBadWords)
+    val winners = fps.keepIds.join(fpHits, Seq("_fp"), "left_anti")
       .select(col(idCol))
-    val exact = noBad.join(winners, Seq(idCol), "left_semi")
-      .transform(stage)
+    val exact = s.noBad.join(winners, Seq(idCol), "left_semi")
+      .transform(StageCut.apply)
     val afterExact = exact.count()
-    // attribution: a fingerprint already standing in the corpus drops
-    // ALL its batch holders (winner unknown to the batch — NULL); a
-    // batch-only duplicate names its min-id winner
-    fpAll.foreach { fa =>
-      frag(fa.join(fpMin.withColumnRenamed(idCol, "_win"), Seq("_fp"))
-        .join(fpHits.withColumn("_c", lit(true)),
-          Seq("_fp"), "left")
-        .filter(col("_c").isNotNull || col(idCol) =!= col("_win"))
-        .select(col(idCol), lit("exact").as("stage"),
-          when(col("_c").isNotNull, lit("duplicate_of_corpus"))
-            .otherwise(lit("duplicate_text")).as("reason"),
-          when(col("_c").isNotNull, lit(null)).otherwise(col("_win"))
-            .as("winner_id")))
-      graft.ops.StageCut.release(fa)
-    }
-    // release the stage-1 root (noBad was a lazy view over it):
-    // flagged in ledger mode, the cut kept frame otherwise
-    flagged match {
-      case Some(v) => graft.ops.StageCut.release(v)
-      case None    => graft.ops.StageCut.release(kept)
-    }
+    fps.attribute("duplicate_text", Some(fpHits))
+    StageCut.release(s.root)
     log(s"[prep+] exact dedup (batch + corpus fps): " +
-      s"$afterBadWords -> $afterExact")
+      s"${s.afterBadWords} -> $afterExact")
 
     // stage 4: multiplicity-exact span scrub vs the stored counts
-    val scrubbed = SpanDedup
-      .removeDuplicatedSpansWithCounts(exact, corpusGramCounts,
-        idCol, textCol, spanN, spanMinDocs)
-      .join(exact.select(col(idCol), col(srcCol)), Seq(idCol))
-      .transform(stage)
-    val afterSpanScrub = scrubbed.count()
-    frag(exact.select(col(idCol))
-      .join(scrubbed.select(col(idCol)), Seq(idCol), "left_anti")
-      .select(col(idCol), lit("span_scrub").as("stage"),
-        lit("all_spans_duplicated").as("reason"), noWin))
-    val artifacts =
-      if (keepArtifacts) Some(PrepArtifacts(
-        Curate.textFingerprints(exact, textCol),
-        SpanDedup.gramDocCounts(exact, idCol, textCol, spanN),
-        exact))
-      else { graft.ops.StageCut.release(exact); None }
+    val (scrubbed, afterSpanScrub, artifacts) = p.scrub(exact,
+      SpanDedup.removeDuplicatedSpansWithCounts(exact, corpusGramCounts,
+        idCol, textCol, spanN, spanMinDocs), spanN, keepArtifacts)
     log(s"[prep+] span scrub (n=$spanN, minDocs=$spanMinDocs, corpus " +
       s"counts): $afterExact -> $afterSpanScrub")
 
     // stage 5: near-dup vs self + corpus clean_text (or stored sigs) —
-    // ONE component pass, Curate's incremental drop rule. Ledger mode
-    // materializes the drop rows (id, representative, corpus-touched)
-    // once and shares them with the anti-join.
+    // ONE component pass, Curate's incremental drop rule
     val nearBase = scrubbed.select(col(idCol), col(srcCol), col("n_kept"),
       col("clean_text"), col("clean_text").as(textCol))
-    val corpusText = corpus.select(col(idCol), col("clean_text").as(textCol))
-    val nearDrops =
-      if (keepLedger)
-        Some(stage(Curate.batchNearDrops(nearBase, corpusText,
-          idCol, textCol, method, corpusSigs)))
-      else None
-    val near = nearDrops
-      .map(d => nearBase.join(d.select(col(idCol)), Seq(idCol), "left_anti"))
-      .getOrElse(Curate.dropBatchNearDups(nearBase, corpusText,
-        idCol, textCol, method, corpusSigs))
-      .drop(textCol)
-      .transform(stage)
-    val afterNear = near.count()
-    nearDrops.foreach { d =>
-      frag(d.select(col(idCol), lit("near").as("stage"),
-        when(col("_corpus"), lit("near_duplicate_of_corpus"))
-          .otherwise(lit("near_duplicate")).as("reason"),
-        col("_win").as("winner_id")))
-      graft.ops.StageCut.release(d)
-    }
-    graft.ops.StageCut.release(scrubbed)
+    val (near, afterNear) = Stages.nearVsCorpus(p.ledger, nearBase,
+      corpus.select(col(idCol), col("clean_text").as(textCol)),
+      idCol, textCol, method, corpusSigs, _.drop(textCol))
+    StageCut.release(scrubbed)
     log(s"[prep+] near dedup vs corpus (${method.getClass.getSimpleName}): " +
       s"$afterSpanScrub -> $afterNear")
 
-    // stage 6: n-gram decontamination of the scrubbed batch text
-    val dec = bench match {
-      case Some(b) =>
-        Decontaminate.decontaminate(
-            near.withColumn(textCol, col("clean_text")), b,
-            idCol, textCol, decontamN)
-          .drop(textCol)
-          .transform(stage)
-      case None => near
-    }
-    val afterDecontam = dec.count()
-    if (bench.isDefined) {
-      frag(near.select(col(idCol))
-        .join(dec.select(col(idCol)), Seq(idCol), "left_anti")
-        .select(col(idCol), lit("decontam").as("stage"),
-          lit("bench_overlap").as("reason"), noWin))
-      graft.ops.StageCut.release(near)
-    }
-    log(s"[prep+] $decontamN-gram decontamination: " +
-      s"$afterNear -> $afterDecontam")
+    val (dec, afterDecontam) = p.decontam(near, afterNear, bench, decontamN)
 
     // stage 7: per-source HEADROOM quota — the standing corpus's count
-    // per source is a (srcCol)-only aggregate; batch keeps its
-    // token-richest rows only into the remaining headroom
-    val quota0 =
-      if (quotaPerSource == Int.MaxValue) dec
-      else {
-        val standing = corpus.groupBy(col(srcCol))
-          .agg(count(lit(1)).as("_cn"))
-        Sampling.capPerGroup(dec, Seq(srcCol),
-            Seq(("n_kept", false), (idCol, true)), quotaPerSource)
-          .join(standing, Seq(srcCol), "left")
-          .filter(col("rn") + coalesce(col("_cn"), lit(0L)) <=
-            quotaPerSource)
-          .drop("rn", "_cn")
-      }
-    // stage 7b (opt-in): token-budget HEADROOM — the standing corpus
-    // has already spent its n_kept sum (one corpus column-scan
-    // aggregate, only when the budget is set); the batch keeps its
-    // token-richest (n_kept DESC, id ASC) prefix into what is left.
-    // Same headroom-fill caveat as the per-source quota (drift (c)
-    // above): a full-run replay's global prefix may instead evict a
-    // standing doc in favor of a richer batch doc
-    // stage 7c (opt-in): per-source token-budget HEADROOM — each
-    // listed source's budget minus the standing corpus' per-source
-    // n_kept sum (one corpus aggregate, only when set); then the
-    // GLOBAL budget's headroom as before. Mixture caps first, release
-    // budget second — the full-run stage order
-    val useSrcBudget = sourceBudgets.nonEmpty ||
-      sourceBudgetDefault != Long.MaxValue
-    val useBudget = tokenBudget != Long.MaxValue
-    val quota = if (useBudget || useSrcBudget) stage(quota0) else quota0
-    val srcBudgeted0 =
-      if (!useSrcBudget) quota
-      else {
+    // per source is a (srcCol)-only aggregate; the batch keeps its
+    // token-richest rows only into the remaining headroom. The opt-in
+    // token budgets fill HEADROOM too: each listed source's budget
+    // minus the standing corpus' per-source n_kept sum, then the global
+    // budget minus the corpus' whole n_kept sum (one corpus aggregate
+    // each, only when set). Same headroom-fill caveat as the quota
+    // (drift (c) above): a full-run replay's global prefix may instead
+    // evict a standing doc in favor of a richer batch doc.
+    val bySource = Option.when(sourceBudgeted(sourceBudgets, sourceBudgetDefault)) {
+      (quota: DataFrame) =>
         val spentBySrc = corpus.groupBy(col(srcCol))
           .agg(coalesce(sum(col("n_kept")), lit(0L)).as("_t")).collect()
           .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
@@ -973,68 +529,207 @@ object PretrainPrep {
           "explicit headroom after corpus spend")
         Sampling.tokenBudgetByGroup(quota, idCol, srcCol, "n_kept",
           "n_kept", adjusted, sourceBudgetDefault, log = log)
-      }
-    val srcBudgeted =
-      if (useSrcBudget && useBudget) stage(srcBudgeted0) else srcBudgeted0
-    val budgeted =
-      if (!useBudget) srcBudgeted
-      else {
+    }
+    val budget = Option.when(tokenBudget != Long.MaxValue) {
+      (b: DataFrame) =>
         val spent = corpus.agg(coalesce(sum(col("n_kept")), lit(0L)))
           .head().getLong(0)
         val headroom = tokenBudget - spent
         log(s"[prep+] token budget $tokenBudget: corpus holds $spent " +
           s"tokens, headroom ${math.max(0L, headroom)}")
-        if (headroom <= 0L) srcBudgeted.filter(lit(false))
-        else Sampling.tokenBudgetSelect(srcBudgeted, idCol, "n_kept",
+        if (headroom <= 0L) b.filter(lit(false))
+        else Sampling.tokenBudgetSelect(b, idCol, "n_kept",
           "n_kept", headroom, log = log)
-      }
+    }
     // stage 8: same-epoch shard assignment; pos continues each shard's
     // sequence after the standing corpus ((shard)-only aggregate)
-    val shardCounts = corpus.groupBy(col("shard"))
-      .agg(count(lit(1)).as("_sn"))
-    val sharded = Sampling.shuffleShards(budgeted, idCol, nShards, seed)
-      .join(shardCounts, Seq("shard"), "left")
-      .withColumn("pos", col("pos") + coalesce(col("_sn"), lit(0L)))
-      .drop("_sn")
-      .transform(stage)
-    val afterQuota = sharded.count()
-    if (useBudget || useSrcBudget) {
-      frag(dec.select(col(idCol))
-        .join(quota.select(col(idCol)), Seq(idCol), "left_anti")
-        .select(col(idCol), lit("quota").as("stage"),
-          lit("source_quota").as("reason"), noWin))
-      if (useSrcBudget)
-        frag(quota.select(col(idCol))
-          .join(srcBudgeted.select(col(idCol)), Seq(idCol), "left_anti")
-          .select(col(idCol), lit("budget").as("stage"),
-            lit("source_token_budget").as("reason"), noWin))
-      if (useBudget)
-        frag(srcBudgeted.select(col(idCol))
-          .join(sharded.select(col(idCol)), Seq(idCol), "left_anti")
-          .select(col(idCol), lit("budget").as("stage"),
-            lit("token_budget").as("reason"), noWin))
-      if (useSrcBudget && useBudget) graft.ops.StageCut.release(srcBudgeted)
-      graft.ops.StageCut.release(quota)
-    } else
-      frag(dec.select(col(idCol))
-        .join(sharded.select(col(idCol)), Seq(idCol), "left_anti")
-        .select(col(idCol), lit("quota").as("stage"),
-          lit("source_quota").as("reason"), noWin))
-    graft.ops.StageCut.release(dec)
+    val (sharded, afterQuota) = p.release(dec,
+      Option.when(quotaPerSource != Int.MaxValue) { (pool: DataFrame) =>
+        val standing = corpus.groupBy(col(srcCol))
+          .agg(count(lit(1)).as("_cn"))
+        Sampling.capPerGroup(pool, Seq(srcCol),
+            Seq(("n_kept", false), (idCol, true)), quotaPerSource)
+          .join(standing, Seq(srcCol), "left")
+          .filter(col("rn") + coalesce(col("_cn"), lit(0L)) <=
+            quotaPerSource)
+          .drop("rn", "_cn")
+      }, bySource, budget, { (b: DataFrame) =>
+        val shardCounts = corpus.groupBy(col("shard"))
+          .agg(count(lit(1)).as("_sn"))
+        Sampling.shuffleShards(b, idCol, nShards, seed)
+          .join(shardCounts, Seq("shard"), "left")
+          .withColumn("pos", col("pos") + coalesce(col("_sn"), lit(0L)))
+          .drop("_sn")
+      })
     log(s"[prep+] quota headroom (<= $quotaPerSource/source incl corpus)" +
-      (if (useSrcBudget) " + source budgets" else "") +
-      (if (useBudget) s" + token budget $tokenBudget" else "") +
+      (if (bySource.isDefined) " + source budgets" else "") +
+      (if (budget.isDefined) s" + token budget $tokenBudget" else "") +
       s" + shards ($nShards, seed $seed): $afterDecontam -> $afterQuota")
 
-    val ledger =
-      if (keepLedger) {
-        val l = stage(ledgerFrags.reduce(_.unionByName(_)))
-        ledgerFrags.foreach(graft.ops.StageCut.release)
-        Some(l)
-      } else None
-    Tracked(sharded, IncReport(input, afterPolicy, afterBadWords,
+    Tracked(sharded, IncReport(s.input, s.afterPolicy, s.afterBadWords,
       afterExact, afterSpanScrub, afterNear, afterDecontam, afterQuota),
-      artifacts, ledger)
+      artifacts, p.ledger.result())
+  }
+
+  private def requireKnobs(spanN: Int, spanMinDocs: Int, decontamN: Int,
+                           quotaPerSource: Int, nShards: Int): Unit = {
+    require(spanN >= 1, s"spanN must be >= 1, got $spanN")
+    require(spanMinDocs >= 2, s"spanMinDocs must be >= 2, got $spanMinDocs")
+    require(decontamN >= 1, s"decontamN must be >= 1, got $decontamN")
+    require(quotaPerSource >= 1,
+      s"quotaPerSource must be >= 1, got $quotaPerSource")
+    require(nShards >= 1, s"nShards must be >= 1, got $nShards")
+  }
+
+  private def sourceBudgeted(sourceBudgets: Map[String, Long],
+                             sourceBudgetDefault: Long): Boolean =
+    sourceBudgets.nonEmpty || sourceBudgetDefault != Long.MaxValue
+
+  /** Stages 1–2's output: the screened rows, the stage-1 frame to
+    * release once stage 3 has materialized (the screened rows are a
+    * lazy view over it), and the counts. */
+  private case class Screened(noBad: DataFrame, root: DataFrame, input: Long,
+                              afterPolicy: Long, afterBadWords: Long)
+
+  /** The stages the full and the daily run share, over one run's
+    * columns, drop ledger and log tag. */
+  private final class PrepRun(idCol: String, textCol: String, srcCol: String,
+                              val ledger: Stages.DropLedger, tag: String,
+                              log: String => Unit) {
+
+    /** Stages 1–2: the policy gate and the C4 bad-words drop.
+      *
+      * The input stat is a dedicated count(): free only when `docs` is
+      * a plain parquet scan (row-group counts, no data read); a
+      * TRANSFORMED input pays one full scan here — `countInput = false`
+      * skips it (input becomes -1). The policy verdict is a pure
+      * per-row expression ([[FilterPolicy.withVerdict]]), so the gate
+      * FILTERS THE SCAN ITSELF. Ledger mode materializes the flagged
+      * frame once so keep AND drop reasons come from one policy
+      * evaluation and one scan; `kept` is then a LAZY filter over it
+      * (cutting it again would store a second corpus-sized checkpoint
+      * whose only reader is the next stage's scan).
+      *
+      * The bad-words verdict `_nb` = `badWordCount <=> 0` (null-safe —
+      * false for hit docs AND null-text docs, exactly the complement
+      * the ledger fragment wants) rides the same one-pass policy scan,
+      * so stage 2 is a trivial boolean filter over the stage-1 blocks
+      * and its ledger fragment the in-row complement. */
+    def screen(docs: DataFrame, config: PolicyConfig, badWords: Seq[String],
+               countInput: Boolean): Screened = {
+      val input = if (countInput) docs.count() else -1L
+      def withNb(df: DataFrame): DataFrame =
+        if (badWords.isEmpty) df
+        else df.withColumn("_nb",
+          C4Clean.badWordCount(col(textCol), badWords) <=> 0)
+      val verdict = FilterPolicy.withVerdict(
+        docs.select(col(idCol), col(srcCol), col(textCol)), textCol, config)
+      val flagged =
+        if (ledger.on) Some(StageCut(withNb(verdict.select(col(idCol),
+          col(srcCol), col(textCol), col("keep"), col("reason")))))
+        else None
+      val kept = flagged
+        .map(_.filter(col("keep")).drop("keep", "reason"))
+        .getOrElse(StageCut(withNb(verdict.filter(col("keep"))
+          .select(col(idCol), col(srcCol), col(textCol)))))
+      val afterPolicy = kept.count()
+      flagged.foreach(v =>
+        ledger.drop(v.filter(!col("keep")), "policy", col("reason")))
+      log(s"$tag policy gate: $input -> $afterPolicy")
+
+      val noBad =
+        if (badWords.isEmpty) kept
+        else kept.filter(col("_nb"))
+          .select(col(idCol), col(srcCol), col(textCol))
+      val afterBadWords = noBad.count()
+      ledger.drop(
+        if (badWords.isEmpty) kept.filter(lit(false))
+        else kept.filter(!col("_nb")),
+        "bad_words", lit("bad_word"))
+      log(s"$tag bad-words (${badWords.size} terms): " +
+        s"$afterPolicy -> $afterBadWords")
+      Screened(noBad, flagged.getOrElse(kept), input, afterPolicy, afterBadWords)
+    }
+
+    /** Stage 3's keys: min id per raw-text fingerprint of the screened
+      * rows. */
+    def fingerprints(noBad: DataFrame): Stages.MinIdPerFp =
+      new Stages.MinIdPerFp(ledger, noBad.select(
+        graft.text.TextOps.fingerprint(col(textCol)).as("_fp"), col(idCol)), idCol)
+
+    /** Stage 4 around its scrub: `scrub` is the scrubbed text
+      * (`idCol, clean_text, n_kept`) of `exact`. Returns the cut
+      * scrubbed frame, its count, and — in artifact mode — the
+      * [[PrepArtifacts]] over the scrub input, which then stays alive
+      * for the CALLER to release (fps and gram counts are one cached
+      * pass each); otherwise `exact` is released here. */
+    def scrub(exact: DataFrame, scrub: DataFrame, spanN: Int,
+              keepArtifacts: Boolean): (DataFrame, Long, Option[PrepArtifacts]) = {
+      val scrubbed = StageCut(scrub.join(exact.select(col(idCol), col(srcCol)), Seq(idCol)))
+      val n = scrubbed.count()
+      ledger.lost(exact, scrubbed, "span_scrub", "all_spans_duplicated")
+      val artifacts =
+        if (keepArtifacts) Some(PrepArtifacts(
+          Curate.textFingerprints(exact, textCol),
+          SpanDedup.gramDocCounts(exact, idCol, textCol, spanN),
+          exact))
+        else { StageCut.release(exact); None }
+      (scrubbed, n, artifacts)
+    }
+
+    /** Stage 6: n-gram decontamination of the scrubbed text against the
+      * raw bench (skipped without one). */
+    def decontam(near: DataFrame, afterNear: Long, bench: Option[DataFrame],
+                 decontamN: Int): (DataFrame, Long) = {
+      val dec = bench match {
+        case Some(b) =>
+          Decontaminate.decontaminate(
+              near.withColumn(textCol, col("clean_text")), b,
+              idCol, textCol, decontamN)
+            .drop(textCol)
+            .transform(StageCut.apply)
+        case None => near
+      }
+      val n = dec.count()
+      if (bench.isDefined) {
+        ledger.lost(near, dec, "decontam", "bench_overlap")
+        StageCut.release(near)
+      }
+      log(s"$tag $decontamN-gram decontamination: $afterNear -> $n")
+      (dec, n)
+    }
+
+    /** The release stages: the per-source quota `cap`, then the opt-in
+      * per-source and global token budgets, then the shard assignment
+      * `shard`, applied in that order to `pool`. The quota frame is cut
+      * when a budget follows (the budget decision and the ledger
+      * anti-join both re-read it), and so is the per-source result when
+      * the global budget follows it. Returns the cut sharded frame and
+      * its count; `pool` and every intermediate cut are released. */
+    def release(pool: DataFrame, cap: Option[DataFrame => DataFrame],
+                bySource: Option[DataFrame => DataFrame],
+                budget: Option[DataFrame => DataFrame],
+                shard: DataFrame => DataFrame): (DataFrame, Long) = {
+      val budgeted = bySource.isDefined || budget.isDefined
+      val bothBudgets = bySource.isDefined && budget.isDefined
+      val quota0 = cap.fold(pool)(_(pool))
+      val quota = if (budgeted) StageCut(quota0) else quota0
+      val srcBudgeted0 = bySource.fold(quota)(_(quota))
+      val srcBudgeted = if (bothBudgets) StageCut(srcBudgeted0) else srcBudgeted0
+      val sharded = StageCut(shard(budget.fold(srcBudgeted)(_(srcBudgeted))))
+      val n = sharded.count()
+      if (budgeted) {
+        ledger.lost(pool, quota, "quota", "source_quota")
+        if (bySource.isDefined)
+          ledger.lost(quota, srcBudgeted, "budget", "source_token_budget")
+        if (budget.isDefined)
+          ledger.lost(srcBudgeted, sharded, "budget", "token_budget")
+        if (bothBudgets) StageCut.release(srcBudgeted)
+        StageCut.release(quota)
+      } else ledger.lost(pool, sharded, "quota", "source_quota")
+      StageCut.release(pool)
+      (sharded, n)
+    }
   }
 }
 

@@ -300,14 +300,15 @@ class PretrainPrepSpec extends SparkSpec {
     graft.ops.StageCut.release(corpus)
   }
 
-  test("runIncrementalWithArtifacts emits union-ready maintenance tables") {
+  test("runIncrementalTracked(keepArtifacts) emits union-ready maintenance tables") {
     val (corpusDocs, batch, bench) = incFixture()
     val (corpus, _, arts) = corpusRun(corpusDocs, bench)
-    val (inc, _, bArts) = PretrainPrep.runIncrementalWithArtifacts(
+    val tracked = PretrainPrep.runIncrementalTracked(
       batch, corpus, arts.fps, arts.gramCounts, "doc_id", "text", "source",
       bench = Some(bench), badWords = Seq("dup"), spanN = 4,
       spanMinDocs = 3, method = incMethod, decontamN = 5,
-      nShards = 4, seed = 7, log = _ => ())
+      nShards = 4, seed = 7, keepArtifacts = true, log = _ => ())
+    val (inc, bArts) = (tracked.out, tracked.artifacts.get)
     // batch scrub input = {101, 106, 107, 108, 109}
     assert(bArts.fps.count() == 5)
     // union maintenance: summed counts == gramDocCounts over the union
