@@ -300,7 +300,8 @@ class PretrainPrepSpec extends SparkSpec {
     graft.ops.StageCut.release(corpus)
   }
 
-  test("runIncrementalTracked(keepArtifacts) emits union-ready maintenance tables") {
+  // The daily run with keepArtifacts = true (formerly runIncrementalWithArtifacts).
+  test("runIncrementalWithArtifacts emits union-ready maintenance tables") {
     val (corpusDocs, batch, bench) = incFixture()
     val (corpus, _, arts) = corpusRun(corpusDocs, bench)
     val tracked = PretrainPrep.runIncrementalTracked(
