@@ -210,6 +210,62 @@ class AnnEdgeSpec extends SparkSpec {
         req("IvfPq.withCodes: empty frame"))
   }
 
+  /** `corpus` with row `id`'s vector replaced. */
+  private def withVec(df: DataFrame, id: Long, v: Seq[Float]): DataFrame =
+    df.withColumn("vec", when(col("id") === id, typedLit(v))
+      .otherwise(col("vec")))
+
+  pinned("IvfPq.topKBatch frozen-model checks") {
+    val mdl = IvfPq.train(corpus, "id", "vec", kCells = 2, m = 2, ks = 2)
+    def run(c: DataFrame, p: DataFrame) = outcome(IvfPq.topKBatch(c, p,
+      "id", "vec", kCells = 2, m = 2, ks = 2, nprobe = 2, k = 3, refine = 4,
+      model = Some(mdl)))
+    def dims(site: String, lo: Int, hi: Int) =
+      req(s"$site: frame dims $lo..$hi do not match the model's dim=4 — " +
+        "the artifact belongs to a different embedding space")
+    val wide = corpus.withColumn("vec",
+      concat(col("vec"), typedLit(Seq(0.5f, 0.5f))))
+    val ragged = withVec(corpus, 5L, Seq(0.0f, 0.0f, 1.0f, 0.0f, 0.0f, 0.0f))
+    def overflow(got: String) = "ERR SparkRuntimeException: " +
+      s"[USER_RAISED_EXCEPTION] IvfPq: |coordinate| >= ${IvfPq.maxAbsCoord(4)}" +
+      " (or NaN) overflows the 2^20 fixed-point distance arithmetic at " +
+      s"dim=4 — normalize or rescale embeddings first (got $got) SQLSTATE: P0001"
+    val big = Seq(0.0f, 1000.0f, 0.0f, 0.0f)
+    val nan = Seq(0.0f, Float.NaN, 0.0f, 0.0f)
+    // local frames and repartitioned (non-local) ones take both plans
+    // of the dimension check
+    for ((tag, f) <- Seq[(String, DataFrame => DataFrame)](
+        "local" -> identity, "shuffled" -> (_.repartition(3)))) {
+      val n = s"IvfPq.topKBatch/frozen/$tag"
+      check(s"$n/noCorpus", run(f(noCorpus), probes),
+        req("IvfPq.withCodes: empty frame"))
+      check(s"$n/noProbes", run(corpus, f(noProbes)),
+        req("IvfPq.topKBatch(probes): empty frame"))
+      check(s"$n/wideCorpus", run(f(wide), probes),
+        dims("IvfPq.withCodes", 6, 6))
+      check(s"$n/wideProbes", run(corpus, f(probes.withColumn("vec",
+          concat(col("vec"), typedLit(Seq(0.5f, 0.5f)))))),
+        dims("IvfPq.topKBatch(probes)", 6, 6))
+      check(s"$n/raggedCorpus", run(f(ragged), probes),
+        dims("IvfPq.withCodes", 4, 6))
+      check(s"$n/raggedProbes", run(corpus,
+          f(withVec(probes, 100L, Seq(1.0f, 0.0f, 0.0f)))),
+        dims("IvfPq.topKBatch(probes)", 3, 4))
+      check(s"$n/bigCorpus", run(f(withVec(corpus, 4L, big)), probes),
+        overflow("1000.0"))
+      check(s"$n/nanCorpus", run(f(withVec(corpus, 4L, nan)), probes),
+        overflow("NaN"))
+      check(s"$n/bigProbe", run(corpus, f(withVec(probes, 103L, big))),
+        overflow("1000.0"))
+      check(s"$n/nanProbe", run(corpus, f(withVec(probes, 103L, nan))),
+        overflow("NaN"))
+      check(s"Pq.ivfPqTopKBatchAuto/$tag/raggedCorpus",
+        outcome(Pq.ivfPqTopKBatchAuto(f(ragged), probes, "id", "vec",
+          m = 2, ks = 4, nprobe = 2, k = 3, numCells = 3)),
+        req("pq: ragged vectors (dims 4..6)"))
+    }
+  }
+
   pinned("CellIndex.train") {
     def index(c: DataFrame) = {
       val ix = CellIndex.train(c, "id", "vec", numCells = 3)
