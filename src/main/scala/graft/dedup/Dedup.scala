@@ -510,8 +510,9 @@ object Dedup {
     * the distributed loop). */
   val LocalMaxEdgesKey = "spark.graft.clusters.localMaxEdges"
 
-  /** Default for [[LocalMaxEdgesKey]]: 500k doubled edges ≈ 8 MB
-    * collected. */
+  /** Default for [[LocalMaxEdgesKey]]: 500k doubled edges — 8 MB of
+    * collected `long` pairs (see [[dupClusters]] for the full driver
+    * bound). */
   val DefaultLocalMaxEdges = 500000L
 
   /** Duplicate CLUSTERS from a pair list: connected components by
@@ -578,11 +579,16 @@ object Dedup {
     // applied to clustering: measure, then pick the plan. The edge
     // list is already materialized here either way; its count is one
     // cheap cached-scan job. Bound: `spark.graft.clusters
-    // .localMaxEdges` (default 500k doubled edges ≈ 8 MB collected —
-    // far under any maxResultSize; 0 disables the tier). INTEGRAL id
-    // types only: the distributed path's min() over strings orders by
-    // UTF8 binary bytes, which differs from String#compareTo on
-    // supplementary planes — don't risk a cross-tier divergence.
+    // .localMaxEdges` doubled edges E (default 500k). Each partition
+    // packs its edges into one primitive `long[]` (src, dst
+    // interleaved), so the driver holds 16·E bytes of pairs (8 MB at
+    // the default), 8·E of sorted ids and 4·E of union-find parents
+    // (every id is a `src` of the doubled list, so ids <= E) — about
+    // 14 MB at the default, under any maxResultSize — plus the output
+    // frame's E local rows. INTEGRAL id types only: the distributed
+    // path's min() over strings orders by UTF8 binary bytes, which
+    // differs from String#compareTo on supplementary planes — don't
+    // risk a cross-tier divergence.
     // Identical fixpoint (component min id), identical output schema
     // and order — pinned tier-vs-tier in DupClustersSpec.
     // (reliable mode — a checkpoint dir — is an explicit opt-in to
@@ -595,46 +601,69 @@ object Dedup {
       srcType == org.apache.spark.sql.types.ShortType ||
       srcType == org.apache.spark.sql.types.IntegerType ||
       srcType == org.apache.spark.sql.types.LongType
-    val localRows: Option[Array[org.apache.spark.sql.Row]] =
+    val localPairs: Option[Array[Array[Long]]] =
       if (reliableBase.isEmpty && integralId && localMaxEdges > 0 &&
           edges.count() <= localMaxEdges) {
-        val rows = edges
-          .select(col("src").cast("long"), col("dst").cast("long")).collect()
-        // a NULL id would silently read as 0 through getLong and merge
-        // with a real id 0 — no pair finder emits one, but if a direct
-        // caller does, the distributed loop (whose joins drop null
-        // keys) keeps its historical behavior rather than corrupting
-        if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-        else Some(rows)
+        import spark.implicits._
+        val parts = edges
+          .select(col("src").cast("long"), col("dst").cast("long"))
+          .mapPartitions { it =>
+            val b = new scala.collection.mutable.ArrayBuilder.ofLong
+            var nulls = false
+            it.foreach { r =>
+              if (r.isNullAt(0) || r.isNullAt(1)) nulls = true
+              else { b += r.getLong(0); b += r.getLong(1) }
+            }
+            Iterator((nulls, b.result()))
+          }.collect()
+        // a NULL id would silently read as 0 and merge with a real id
+        // 0 — no pair finder emits one, but if a direct caller does,
+        // the distributed loop (whose joins drop null keys) keeps its
+        // historical behavior rather than corrupting
+        if (parts.exists(_._1)) None else Some(parts.map(_._2))
       } else None
-    if (localRows.isDefined) {
-      val rows = localRows.get
-      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]
-      def find(x0: Long): Long = {
-        var r = x0
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x0 // path compression
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
+    if (localPairs.isDefined) {
+      val pairs = localPairs.get
+      // the distinct ids, sorted: index order is id order, so a
+      // min-index union keeps each component's min id at its root
+      val ids = {
+        val all = new Array[Long](pairs.map(_.length / 2).sum)
+        var n = 0
+        pairs.foreach { p =>
+          var i = 0
+          while (i < p.length) { all(n) = p(i); n += 1; i += 2 }
+        }
+        java.util.Arrays.sort(all)
+        n = 0
+        var i = 0
+        while (i < all.length) {
+          if (n == 0 || all(i) != all(n - 1)) { all(n) = all(i); n += 1 }
+          i += 1
+        }
+        java.util.Arrays.copyOf(all, n)
       }
-      rows.foreach { row =>
-        val (s, d) = (row.getLong(0), row.getLong(1))
-        if (!parent.containsKey(s)) parent.put(s, s)
-        if (!parent.containsKey(d)) parent.put(d, d)
-        val (rs, rd) = (find(s), find(d))
-        if (rs != rd) parent.put(math.max(rs, rd), math.min(rs, rd))
+      val parent = Array.range(0, ids.length)
+      def find(x0: Int): Int = {
+        var x = x0 // path halving
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
       }
-      // second pass: component min = the DSU root under min-union
-      val out = new Array[(Long, Long)](parent.size)
-      val it = parent.keySet().iterator(); var i = 0
-      while (it.hasNext) { val id = it.next(); out(i) = (id.longValue, find(id)); i += 1 }
+      pairs.foreach { p =>
+        var i = 0
+        while (i < p.length) {
+          val rs = find(java.util.Arrays.binarySearch(ids, p(i)))
+          val rd = find(java.util.Arrays.binarySearch(ids, p(i + 1)))
+          if (rs != rd) parent(math.max(rs, rd)) = math.min(rs, rd)
+          i += 2
+        }
+      }
       edges.queryExecution.analyzed match { // free the edge snapshot
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
           lr.rdd.unpersist(false)
         case _ => ()
       }
       import spark.implicits._
-      return out.sortBy(_._1).toSeq.toDF("id", "cluster")
+      return ids.indices.map(i => (ids(i), ids(find(i)))).toDF("id", "cluster")
         .select(col("id").cast(srcType).as("id"),
           col("cluster").cast(srcType).as("cluster"))
         .orderBy(col("id"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types.LongType
 
@@ -52,6 +52,11 @@ case class TopKPerGroupExec(k: Int, groupBy: Seq[Expression], order: Seq[SortOrd
     * exchange (or reuses an existing one) to satisfy this. */
   override def requiredChildDistribution: Seq[Distribution] =
     Seq(ClusteredDistribution(groupBy))
+
+  /** Each partition's output is a subset of its input rows, so the
+    * child's partitioning holds: a second top-k on the same key (a
+    * shortlist re-ranked) needs no second exchange. */
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output

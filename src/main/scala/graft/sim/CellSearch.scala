@@ -1,6 +1,7 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
 
 /** The cell-search machinery every ANN family shares: the normalized
@@ -160,16 +161,32 @@ private[graft] object CellSearch {
       .select(col("probe_id"), col("n_overlap"))
   }
 
-  /** The one dimension of every non-null vector in `df`, from one
-    * size-only aggregate; fails with `empty` when there is none and
-    * `ragged(lo, hi)` when the dimensions differ. */
+  /** The one dimension of every non-null vector in `df`; fails with
+    * `empty` when there is none and `ragged(lo, hi)` when the
+    * dimensions differ. Each partition folds its sizes to one
+    * `(min, max)` pair and the driver folds those: one job and no
+    * shuffle, and no job at all when the frame is a local scan (a
+    * probe batch built on the driver). */
   def uniformDim(df: DataFrame, vecCol: String, empty: => String,
                  ragged: (Int, Int) => String): Int = {
-    val dims = df.filter(col(vecCol).isNotNull)
-      .agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
-    require(!dims.isNullAt(0), empty)
-    require(dims.getInt(0) == dims.getInt(1),
-      ragged(dims.getInt(0), dims.getInt(1)))
-    dims.getInt(0)
+    val sizes = df.filter(col(vecCol).isNotNull).select(size(col(vecCol)))
+    val spans: Array[(Int, Int)] = sizes.queryExecution.executedPlan match {
+      case _: LocalTableScanExec =>
+        sizes.collect().map(r => (r.getInt(0), r.getInt(0)))
+      case _ =>
+        import df.sparkSession.implicits._
+        sizes.as[Int].mapPartitions { it =>
+          if (!it.hasNext) Iterator.empty
+          else {
+            var lo = Int.MaxValue; var hi = Int.MinValue
+            it.foreach { d => lo = math.min(lo, d); hi = math.max(hi, d) }
+            Iterator((lo, hi))
+          }
+        }.collect()
+    }
+    require(spans.nonEmpty, empty)
+    val (lo, hi) = (spans.map(_._1).min, spans.map(_._2).max)
+    require(lo == hi, ragged(lo, hi))
+    lo
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.graft.bridge
   * codes of its RESIDUAL against the cell centroid (residuals are
   * far smaller than raw vectors, so the same code budget buys much
   * tighter reconstruction), and queries re-rank an ADC shortlist by
-  * exact distance fetched per id (the `IndexRefineFlat` stage). The
+  * exact distance (the `IndexRefineFlat` stage). The
   * round-18 audit measured the sampled/raw construction at
   * recall@10 = 1.52/10; this path measures 8.2–8.8/10 at the same
   * m=8 code budget (q147 carries the audit).
@@ -41,12 +41,18 @@ import org.apache.spark.sql.graft.bridge
   * search codes each corpus row once, not once per candidate;
   * search routes probes to `nprobe` cells on the broadcast side,
   * builds each (probe, cell) ADC lookup table once, joins
-  * candidates by cell key only, scores them with the codegen'd LUT
-  * sum ([[graft.functions.AdcLutSum]]), heaps top-`refine` per
-  * probe ([[graft.ops.TopK.topKPerGroup]]), and only then fetches
-  * the shortlisted ids' raw vectors for the exact re-rank (the
-  * codegen'd [[graft.functions.LongL2]]) — the index never stores
-  * full-precision vectors.
+  * candidates by cell key only and scores each twice in the Project
+  * right after the join: the codegen'd LUT sum
+  * ([[graft.functions.AdcLutSum]]) and the exact integer distance
+  * ([[graft.functions.LongL2]]) between the probe and the row's
+  * fixed-point vector, which the corpus scan quantizes anyway to
+  * encode it. Only the two longs cross the one hash exchange; the
+  * top-`refine` ADC shortlist and the exact top-k of it are two
+  * bounded heaps ([[graft.ops.TopK.topKPerGroup]]) on that one
+  * `probe_id` partitioning. A search reads the corpus once for the
+  * dimension check and once for the coded scan — the stored index
+  * (`cell` + `codes`) never holds full-precision vectors; the exact
+  * re-rank reads them from the corpus the search scans.
   */
 object IvfPq {
 
@@ -349,12 +355,16 @@ object IvfPq {
     // reference-object routing (r20): cells by one integer-L2 sort
     // (ascending distance, cell-id tie-break — the literal path's
     // sort_array order), residual + m×ks LUT off the model arrays —
-    // the plan carries none of them as literals.
+    // the plan carries none of them as literals. `explode_outer`:
+    // a plain explode infers a `size(_cells) > 0` filter under the
+    // Project, re-running quantize and routing per probe; the array
+    // is never empty for nprobe >= 1, and a null cell (nprobe = 0)
+    // joins nothing, so the rows are the same.
     quantizedProbes(probes, idCol, vecCol, model)
       .withColumn("_cells", kernel(graft.functions.RoutedLongCells(
         ex(col("pq")), model.coarse, math.min(nprobe, model.kCells))))
       .select(col("probe_id"), col("pq"),
-        explode(col("_cells")).as("cell"))
+        explode_outer(col("_cells")).as("cell"))
       .withColumn("_prl", kernel(graft.functions.LongCellResidual(
         ex(col("pq")), ex(col("cell")), model.coarse)))
       .withColumn("lut", kernel(graft.functions.LongProbeLut(
@@ -367,17 +377,34 @@ object IvfPq {
   private def adcFromLut: Column =
     kernel(graft.functions.AdcLutSum(ex(col("lut")), ex(col("codes"))))
 
+  /** The scored candidates `(probe_id, idCol, _adc, xdist)` of the
+    * searches: the coded corpus (`withCodes` output, `xq` kept)
+    * joined by cell against the broadcast routing table (`pq`
+    * carried), each candidate's ADC and exact fixed-point distance
+    * computed in the Project right after the join, so only the two
+    * longs cross the exchange — neither `xq` nor `pq` does. */
+  private def scored(coded: DataFrame, probes: DataFrame, idCol: String,
+                     vecCol: String, model: Model, nprobe: Int): DataFrame =
+    CellSearch.candidates(
+        coded.select(col(idCol), col("cell"), col("codes"), col("xq")),
+        routedProbes(probes, idCol, vecCol, model, nprobe), "cell", idCol,
+        "_adc", adcFromLut)
+      .withColumn("xdist", iDist(col("pq"), col("xq")))
+      .select(col("probe_id"), col(idCol), col("_adc"), col("xdist"))
+
   /** Batch IVF-PQ search with exact refine — the full production
     * shape. Probes route to `nprobe` cells (broadcast routing +
     * per-cell LUTs), candidates come from ONE cell-keyed join
-    * against the coded corpus, the ADC top-`refine` shortlist per
-    * probe is a bounded heap, and ONLY the shortlisted ids fetch
-    * their raw vectors (by-id join — the index itself never stores
-    * full precision) for the exact integer re-rank. Returns
-    * `(probe_id, rank, idCol, xdist)` with `xdist` the fixed-point
-    * exact squared L2 — smallest first, id tie-break. `model` absent
-    * trains inline at the given config; pass a [[loadModel]] FROZEN
-    * artifact for the train-once/query-many production shape. */
+    * against the coded corpus, each scored by ADC and by the exact
+    * integer distance to the row's own fixed-point vector; the ADC
+    * top-`refine` shortlist per probe is a bounded heap and the
+    * exact top-k re-ranks it, both on the one `probe_id` exchange.
+    * Returns `(probe_id, rank, idCol, xdist)` with `xdist` the
+    * fixed-point exact squared L2 — smallest first, id tie-break; a
+    * corpus id held by several rows is ranked per row, each with its
+    * own distance. `model` absent trains inline at the given config;
+    * pass a [[loadModel]] FROZEN artifact for the
+    * train-once/query-many production shape. */
   def topKBatch(corpus: DataFrame, probes: DataFrame,
                 idCol: String, vecCol: String,
                 kCells: Int, m: Int, ks: Int, nprobe: Int, k: Int,
@@ -388,23 +415,10 @@ object IvfPq {
     val mdl = model.getOrElse(train(corpus, idCol, vecCol, kCells, m, ks,
       coarseIters, pqIters, seed))
     requireDim(probes, vecCol, mdl, "IvfPq.topKBatch(probes)")
-    val coded = withCodes(corpus, vecCol, mdl)
-      .select(col(idCol), col("cell"), col("codes"))
-    val routed = routedProbes(probes, idCol, vecCol, mdl, nprobe)
-    val cand = CellSearch.candidates(coded,
-      routed.select(col("probe_id"), col("cell"), col("lut")), "cell", idCol,
-      "_adc", adcFromLut)
-    val short = CellSearch.nearest(cand, "_adc", idCol, refine, "_sr")
-      .select(col("probe_id"), col(idCol))
-    // late fetch: raw vectors only for the shortlist (probes×refine
-    // rows — broadcast), then the exact integer re-rank
-    val raw = corpus.filter(col(vecCol).isNotNull)
-      .select(col(idCol), quantizeChecked(col(vecCol), mdl.dim).as("_cxq"))
-    val refined = raw.join(broadcast(short), Seq(idCol))
-      .join(broadcast(quantizedProbes(probes, idCol, vecCol, mdl)),
-        Seq("probe_id"))
-      .withColumn("xdist", iDist(col("pq"), col("_cxq")))
-    CellSearch.topK(refined, "xdist", idCol, k)
+    val cand = scored(withCodes(corpus, vecCol, mdl), probes, idCol, vecCol,
+      mdl, nprobe)
+    CellSearch.topK(CellSearch.nearest(cand, "_adc", idCol, refine, "_sr"),
+      "xdist", idCol, k)
   }
 
   /** Recall audit for the trained/residual path — per probe, how
@@ -425,16 +439,12 @@ object IvfPq {
       coarseIters, pqIters, seed))
     requireDim(probes, vecCol, mdl, "IvfPq.recallBatch(probes)")
     val coded = withCodes(corpus, vecCol, mdl)
-      .select(col(idCol), col("cell"), col("codes"), col("xq"))
-    val cand = CellSearch.candidates(coded,
-        routedProbes(probes, idCol, vecCol, mdl, nprobe), "cell", idCol,
-        "_adc", adcFromLut)
-      .withColumn("_xd", iDist(col("pq"), col("xq")))
+    val cand = scored(coded, probes, idCol, vecCol, mdl, nprobe)
     val ar = CellSearch.nearest(cand, "_adc", idCol, k, "_ar")
     val short = CellSearch.nearest(cand, "_adc", idCol, refine, "_sr")
     val rr = CellSearch.nearest(
-      short.select(col("probe_id"), col(idCol), col("_xd")), "_xd", idCol, k,
-      "_rr")
+      short.select(col("probe_id"), col(idCol), col("xdist")), "xdist", idCol,
+      k, "_rr")
     // exact top-k: integer brute force over all (probe, corpus) pairs
     val brute = coded.select(col(idCol), col("xq"))
       .crossJoin(broadcast(quantizedProbes(probes, idCol, vecCol, mdl)))

@@ -491,19 +491,55 @@ class PlanQualitySpec extends SparkSpec {
       "the coded corpus must never shuffle-join or cross-join")
   }
 
-  test("q146 trained IVF-PQ: shortlist + refine ranks both custom, " +
-      "routing and shortlist broadcast, no window, no corpus-sized " +
-      "shuffle join, no cartesian") {
+  /** The operator names of a formatted plan's tree, top down. */
+  private def treeNodes(p: String): Seq[String] =
+    p.linesIterator.takeWhile(!_.startsWith("(1) "))
+      .map(_.replaceAll("""^[\s:+\-]*""", "").replaceAll("""\s*\(\d+\)$""", ""))
+      .filter(_.nonEmpty).toSeq
+
+  test("q146 trained IVF-PQ: one corpus scan, one broadcast (the " +
+      "routing table), shortlist and exact top-k both custom on one " +
+      "hash exchange, no by-id join, no window, no cartesian") {
     val p = plan("q146_ivfpq_topk")
-    assert("TopKPerGroup".r.findAllIn(p).size >= 2,
-      "the ADC shortlist AND the refined top-k must use TopKPerGroup")
+    val scans = p.linesIterator.filter(_.matches("""\(\d+\) Scan parquet.*""")).toSeq
+    assert(scans.length == 2,
+      s"one corpus scan and one probe scan, got ${scans.length}:\n$p")
+    assert("BroadcastExchange \\(".r.findAllIn(p).size == 1,
+      s"only the routing table may broadcast — no shortlist or probe " +
+        s"re-broadcast for a late fetch:\n$p")
+    val nodes = treeNodes(p)
+    assert(nodes.count(_.contains("Join")) == 1 &&
+      nodes.exists(_.startsWith("BroadcastHashJoin")),
+      s"the broadcast cell join is the only join — no by-id fetch join:\n$p")
+    assert("hashpartitioning\\(".r.findAllIn(p).size == 1,
+      s"one hash exchange, keyed by probe:\n$p")
+    val tops = nodes.zipWithIndex.filter(_._1 == "TopKPerGroup").map(_._2)
+    assert(tops.length == 2,
+      "the ADC shortlist AND the exact top-k must use TopKPerGroup")
+    val below = nodes.drop(tops.head + 1)
+    val ex = below.indexWhere(_.startsWith("Exchange"))
+    assert(ex > below.indexOf("TopKPerGroup") &&
+      below.indexWhere(_.startsWith("BroadcastHashJoin")) > ex,
+      s"both TopKPerGroups sit above the one exchange over the join:\n" +
+        nodes.mkString("\n"))
     assert(!p.contains("Window"),
       "no ranking stage may fall back to a window sort")
-    assert(p.contains("BroadcastHashJoin"),
-      "the routing table and the refine shortlist must broadcast")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       "the coded corpus must never shuffle-join or cross-join — the " +
         "model rides in the kernels as reference objects, not a joined frame")
+  }
+
+  test("q146/q147 trained IVF-PQ: each probe is routed once — the " +
+      "routing kernel never runs in a Filter") {
+    for (q <- Seq("q146_ivfpq_topk", "q147_ivfpq_recall")) {
+      val p = plan(q)
+      val filters = p.split("\n(?=\\(\\d+\\) )")
+        .filter(_.matches("(?s)\\(\\d+\\) Filter\n.*"))
+      assert(p.contains("graft_routed_long_cells"), s"$q must route probes")
+      assert(!filters.exists(_.contains("graft_routed_long_cells")),
+        s"$q: an explode-inferred size(_cells) > 0 filter re-runs the " +
+          "routing kernel:\n" + filters.mkString("\n"))
+    }
   }
 
   test("q146 trained IVF-PQ: the fused encode runs once per corpus row, " +

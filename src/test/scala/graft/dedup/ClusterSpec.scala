@@ -74,6 +74,23 @@ class ClusterSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.clusters.localMaxEdges")
   }
 
+  test("dupClusters: driver union-find tier == distributed loop on " +
+      "negative, sparse and extreme ids") {
+    // the driver tier unions over sorted-id indices: the smallest
+    // signed id must stay each component's label
+    val pairs = Seq((5L, -3L), (-3L, Long.MinValue), (Long.MaxValue, 0L),
+      (1L << 40, -(1L << 40)), (7L, 7L)).toDF("id_a", "id_b")
+    val driver = Dedup.dupClusters(pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    spark.conf.set("spark.graft.clusters.localMaxEdges", "0")
+    try {
+      val dist = Dedup.dupClusters(pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+      assert(driver == dist)
+      assert(driver.toMap.apply(5L) == Long.MinValue)
+    } finally spark.conf.unset("spark.graft.clusters.localMaxEdges")
+  }
+
   test("dupClusters: driver tier preserves a non-long integral id type") {
     // int ids must come back as ints from BOTH tiers (the driver tier
     // collects through a long cast and must cast back)

@@ -164,12 +164,14 @@ class AnnEdgeSpec extends SparkSpec {
     }
   }
 
+  // the two corpus rows with id 3 rank as two rows, each at its own
+  // exact distance (0.06 and 0.08 in 2^40 units)
   pinned("IvfPq.topKBatch") {
     batchCases("IvfPq.topKBatch", (
         "probe_id:bigint,rank:bigint,id:bigint,xdist:bigint | 100,1,1,10994990449;" +
           "100,2,2,32985181062;100,3,8,1110506618225;102,1,8,0;" +
           "102,2,2,901598653973;102,3,1,1099511627776;" +
-          "103,1,4,21990400328;103,2,3,65970571838;103,3,3,65970571838",
+          "103,1,4,21990400328;103,2,3,65970571838;103,3,3,87961181881",
         req("IvfPq.topKBatch(probes): empty frame"),
         req("IvfPq.train: empty corpus"))) { (c, p) =>
       IvfPq.topKBatch(c, p, "id", "vec", kCells = 2, m = 2, ks = 2,
