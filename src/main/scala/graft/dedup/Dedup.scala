@@ -590,7 +590,7 @@ object Dedup {
     // differs from String#compareTo on supplementary planes — don't
     // risk a cross-tier divergence.
     // Identical fixpoint (component min id), identical output schema
-    // and order — pinned tier-vs-tier in DupClustersSpec.
+    // and order — pinned tier-vs-tier in ClusterSpec.
     // (reliable mode — a checkpoint dir — is an explicit opt-in to
     // replicated round snapshots; it keeps the distributed loop
     // unconditionally so its materialization contract stays intact)
@@ -604,10 +604,9 @@ object Dedup {
     val localPairs: Option[Array[Array[Long]]] =
       if (reliableBase.isEmpty && integralId && localMaxEdges > 0 &&
           edges.count() <= localMaxEdges) {
-        import spark.implicits._
         val parts = edges
           .select(col("src").cast("long"), col("dst").cast("long"))
-          .mapPartitions { it =>
+          .queryExecution.toRdd.mapPartitions { it =>
             val b = new scala.collection.mutable.ArrayBuilder.ofLong
             var nulls = false
             it.foreach { r =>

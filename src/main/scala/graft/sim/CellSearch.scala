@@ -174,12 +174,13 @@ private[graft] object CellSearch {
       case _: LocalTableScanExec =>
         sizes.collect().map(r => (r.getInt(0), r.getInt(0)))
       case _ =>
-        import df.sparkSession.implicits._
-        sizes.as[Int].mapPartitions { it =>
+        sizes.queryExecution.toRdd.mapPartitions { it =>
           if (!it.hasNext) Iterator.empty
           else {
             var lo = Int.MaxValue; var hi = Int.MinValue
-            it.foreach { d => lo = math.min(lo, d); hi = math.max(hi, d) }
+            it.foreach { r =>
+              val d = r.getInt(0); lo = math.min(lo, d); hi = math.max(hi, d)
+            }
             Iterator((lo, hi))
           }
         }.collect()

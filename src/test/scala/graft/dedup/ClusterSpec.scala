@@ -75,20 +75,26 @@ class ClusterSpec extends SparkSpec {
   }
 
   test("dupClusters: driver union-find tier == distributed loop on " +
-      "negative, sparse and extreme ids") {
-    // the driver tier unions over sorted-id indices: the smallest
-    // signed id must stay each component's label
-    val pairs = Seq((5L, -3L), (-3L, Long.MinValue), (Long.MaxValue, 0L),
-      (1L << 40, -(1L << 40)), (7L, 7L)).toDF("id_a", "id_b")
-    val driver = Dedup.dupClusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
-    spark.conf.set("spark.graft.clusters.localMaxEdges", "0")
-    try {
-      val dist = Dedup.dupClusters(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
-      assert(driver == dist)
-      assert(driver.toMap.apply(5L) == Long.MinValue)
-    } finally spark.conf.unset("spark.graft.clusters.localMaxEdges")
+      "negative, extreme and null ids") {
+    // the driver tier unions over sorted-id indices, so the smallest
+    // signed id must stay each component's label; a null id sends the
+    // call to the distributed loop (whose joins drop it)
+    val extreme = Seq[(java.lang.Long, java.lang.Long)]((5L, -3L),
+      (-3L, Long.MinValue), (Long.MaxValue, 0L), (1L << 40, -(1L << 40)),
+      (7L, 7L))
+    val withNull = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L),
+      (2L, null), (null, 3L), (0L, 4L))
+    for (graph <- Seq(extreme, withNull)) {
+      val pairs = graph.toDF("id_a", "id_b")
+      def run() = Dedup.dupClusters(pairs).collect()
+        .map(r => (r.get(0), r.get(1))).toSeq.sortBy(_.toString)
+      val driver = run()
+      spark.conf.set("spark.graft.clusters.localMaxEdges", "0")
+      try assert(driver == run())
+      finally spark.conf.unset("spark.graft.clusters.localMaxEdges")
+    }
+    assert(Dedup.dupClusters(extreme.toDF("id_a", "id_b")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap.apply(5L) == Long.MinValue)
   }
 
   test("dupClusters: driver tier preserves a non-long integral id type") {
